@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The automaton is built ONCE on the driver from the phrase list
   * (goto trie + BFS failure links + output sets, the textbook
-  * construction) and rides into codegen as an `addReferenceObj` plan
+  * construction) and rides into codegen as an object-typed plan
   * constant — the [[BpeExpressions]] / [[DsirExpressions]] model-
   * object discipline. Matching is SUBSTRING semantics, deliberately:
   * it is exactly replayable cross-engine as `contains(text, phrase)`
@@ -148,34 +144,27 @@ object AhoCorasick {
       }
       new GenericArrayData(hits)
     }
-  }
-}
 
-/** `graft_ac_matches(text)`: sorted distinct phrases from the
-  * plan-constant list occurring in `text` (substring semantics).
-  */
-case class AcMatches(child: Expression, phrases: Seq[String])
-    extends UnaryExpression {
-  @transient private lazy val automaton = new AhoCorasick.Automaton(phrases)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_ac_matches requires STRING, got ${other.sql}")
+    // value-equal on the phrase set, so two scans built from the same
+    // list are one expression to CSE and the cache manager
+    override def equals(other: Any): Boolean = other match {
+      case a: Automaton => phrases.sameElements(a.phrases)
+      case _ => false
+    }
+    override def hashCode: Int = phrases.toSeq.hashCode
   }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_ac_matches"
-  override protected def nullSafeEval(input: Any): Any =
-    automaton.matchDistinct(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("acAutomaton", automaton,
-      "graft.functions.AhoCorasick.Automaton")
-    defineCodeGen(ctx, ev, c => s"$ref.matchDistinct($c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): AcMatches =
-    copy(child = newChild)
+
+  /** [[Automaton.matchDistinct]] as a static call. */
+  def matchDistinct(text: UTF8String, automaton: Automaton): ArrayData =
+    automaton.matchDistinct(text)
 }
 
 object AcExpressions {
+  /** `graft_ac_matches(text)`: sorted distinct phrases from the
+    * plan-constant list occurring in `text` (substring semantics).
+    */
   def acMatches(text: Column, phrases: Seq[String]): Column =
-    ColumnBridge.column(AcMatches(ColumnBridge.expression(text), phrases))
+    Kernel.column("graft_ac_matches", AhoCorasick, "matchDistinct",
+      ArrayType(StringType, containsNull = false), Seq(text), Seq(StringType),
+      Seq(new AhoCorasick.Automaton(phrases)))
 }

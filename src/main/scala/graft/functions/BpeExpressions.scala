@@ -1,17 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared scalar kernel for [[BpeSegment]] — the production BPE
-  * segmenter: apply a learned merge list (rank order) to one word
-  * with the same greedy left-to-right non-overlapping semantics as
+/** Native BPE segmentation kernel (`graft_bpe_segment`): word STRING
+  * → ARRAY<STRING> of subword tokens under a LITERAL merge list (the
+  * trained model — model-sized by contract, shipped to executors once
+  * as a plan constant, not per row). The production BPE segmenter:
+  * apply a learned merge list (rank order) to one word with the same
+  * greedy left-to-right non-overlapping semantics as
   * [[graft.operators.BpeTrainer.applyMerges]]'s fold (the
   * equivalence is property-tested). One pass per merge over a
   * reusable buffer, O(K·|word|) with scalar-loop constants — the
@@ -51,42 +50,10 @@ object BpeSegmentKernel {
   }
 }
 
-/** Native BPE segmentation expression: word STRING → ARRAY<STRING>
-  * of subword tokens under a LITERAL merge list (the trained model —
-  * model-sized by contract, shipped to executors once as a plan
-  * reference, not per row). Tier-(b) extension like [[Fingerprint]]:
-  * the composable nested-fold form stays as the spec; this kernel is
-  * the hot path, inside whole-stage codegen via a single static
-  * call on a `addReferenceObj` constant.
-  */
-case class BpeSegment(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_bpe_segment requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_bpe_segment"
-
-  @transient private lazy val mergeArr: Array[Array[String]] =
-    merges.map(m => Array(m._1, m._2)).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    BpeSegmentKernel.segment(input.asInstanceOf[UTF8String], mergeArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMerges", mergeArr, "java.lang.String[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.BpeSegmentKernel.segment($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeSegment =
-    copy(child = newChild)
-}
-
 object BpeExpressions {
   /** Column API: segment a word column with a learned merge list. */
   def bpeSegment(word: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(BpeSegment(ColumnBridge.expression(word), merges))
+    Kernel.column("graft_bpe_segment", BpeSegmentKernel, "segment",
+      ArrayType(StringType, containsNull = false), Seq(word), Seq(StringType),
+      Seq(merges.map(m => Array(m._1, m._2)).toArray))
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** GPT-2-style BYTE-LEVEL alphabet remap (Radford et al., "Language
@@ -24,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Both directions are per-row codegen'd kernels (byte loop, no
   * regex, no allocation beyond the output) — remap in FRONT of
-  * [[BpeSegment]]/[[graft.operators.BpeTrainer]] is a zero-shuffle
+  * [[BpeSegmentKernel]]/[[graft.operators.BpeTrainer]] is a zero-shuffle
   * projection, so byte-level training and segmentation reuse the
   * char-level machinery unchanged: after remap, "characters" ARE the
   * byte alphabet.
@@ -85,41 +81,11 @@ object ByteBpeKernel {
   }
 }
 
-case class ByteRemap(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_byte_remap requires STRING, got ${other.sql}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_byte_remap"
-  override protected def nullSafeEval(input: Any): Any =
-    ByteBpeKernel.remap(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ByteBpeKernel.remap($c)")
-  override protected def withNewChildInternal(newChild: Expression): ByteRemap =
-    copy(child = newChild)
-}
-
-case class ByteUnremap(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_byte_unremap requires STRING, got ${other.sql}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_byte_unremap"
-  override protected def nullSafeEval(input: Any): Any =
-    ByteBpeKernel.unremap(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ByteBpeKernel.unremap($c)")
-  override protected def withNewChildInternal(newChild: Expression): ByteUnremap =
-    copy(child = newChild)
-}
-
 object ByteBpeExpressions {
   def byteRemap(c: Column): Column =
-    ColumnBridge.column(ByteRemap(ColumnBridge.expression(c)))
+    Kernel.column("graft_byte_remap", ByteBpeKernel, "remap", StringType,
+      Seq(c), Seq(StringType))
   def byteUnremap(c: Column): Column =
-    ColumnBridge.column(ByteUnremap(ColumnBridge.expression(c)))
+    Kernel.column("graft_byte_unremap", ByteBpeKernel, "unremap", StringType,
+      Seq(c), Seq(StringType))
 }

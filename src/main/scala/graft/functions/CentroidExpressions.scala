@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -64,7 +61,7 @@ object CentroidKernels {
     * vector's length) — `(array_position(d, array_min(d)) - 1)`.
     */
   def nearest(v: ArrayData, isFloat: Boolean,
-      cents: Array[Array[Double]]): Any = {
+      cents: Array[Array[Double]]): java.lang.Integer = {
     val k = cents.length
     val n = v.numElements()
     var best = -1
@@ -103,7 +100,7 @@ object CentroidKernels {
     * unbounded coordinates must pre-validate ranges.
     */
   def nearestExact(v: ArrayData, isFloat: Boolean,
-      cents: Array[Array[Double]]): Any = {
+      cents: Array[Array[Double]]): java.lang.Integer = {
     val k = cents.length
     val n = v.numElements()
     var best = -1
@@ -140,7 +137,7 @@ object CentroidKernels {
     * Spark Decimal path, which throws like the ANSI cast would.
     */
   def distExactSel(v: ArrayData, isFloat: Boolean, idx: Int,
-      cents: Array[Array[Double]]): Any = {
+      cents: Array[Array[Double]]): Decimal = {
     val w = cents(idx)
     val n = v.numElements()
     if (w.length != n) return null
@@ -370,235 +367,46 @@ object CentroidKernels {
   }
 }
 
+/** Column API: each centroid kernel reads an `ARRAY<FLOAT>` or
+  * `ARRAY<DOUBLE>` vector; [[Kernel.IsFloat]] passes which one the
+  * plan resolved.
+  */
 object CentroidExpressions {
+  import Kernel.{Arg, IsFloat}
 
-  private def vecCheck(dt: DataType, fn: String): TypeCheckResult = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$fn requires ARRAY<FLOAT|DOUBLE>, got ${other.sql}")
-  }
-
-  private def isFloat(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  case class CentroidDists(child: Expression, cents: Array[Array[Double]])
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      vecCheck(child.dataType, prettyName)
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-    override def prettyName: String = "graft_centroid_dists"
-    private def f = isFloat(child.dataType)
-    override protected def nullSafeEval(v: Any): Any =
-      CentroidKernels.dists(v.asInstanceOf[ArrayData], f, cents)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("cents", cents, "double[][]")
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.CentroidKernels.dists($c, $f, $ref)")
-    }
-    override protected def withNewChildInternal(c: Expression): CentroidDists =
-      copy(child = c)
-  }
-
-  case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      vecCheck(child.dataType, prettyName)
-    override def dataType: DataType = IntegerType
-    override def nullable: Boolean = true
-    override def prettyName: String = "graft_nearest_centroid"
-    private def f = isFloat(child.dataType)
-    override protected def nullSafeEval(v: Any): Any =
-      CentroidKernels.nearest(v.asInstanceOf[ArrayData], f, cents)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("cents", cents, "double[][]")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        Object r = graft.functions.CentroidKernels.nearest($c, $f, $ref);
-        if (r == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = ((java.lang.Integer) r).intValue(); }
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): NearestCentroid =
-      copy(child = c)
-  }
-
-  case class NearestCentroidExact(child: Expression, cents: Array[Array[Double]])
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      vecCheck(child.dataType, prettyName)
-    override def dataType: DataType = IntegerType
-    override def nullable: Boolean = true
-    override def prettyName: String = "graft_nearest_centroid_exact"
-    private def f = isFloat(child.dataType)
-    override protected def nullSafeEval(v: Any): Any =
-      CentroidKernels.nearestExact(v.asInstanceOf[ArrayData], f, cents)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("cents", cents, "double[][]")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        Object r = graft.functions.CentroidKernels.nearestExact($c, $f, $ref);
-        if (r == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = ((java.lang.Integer) r).intValue(); }
-      """)
-    }
-    override protected def withNewChildInternal(c: Expression): NearestCentroidExact =
-      copy(child = c)
-  }
-
-  case class CentroidDistExactSel(left: Expression, right: Expression,
-      cents: Array[Array[Double]]) extends BinaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(FloatType, _) | ArrayType(DoubleType, _), IntegerType) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (ARRAY<FLOAT|DOUBLE>, INT), got (${l.sql}, ${r.sql})")
-      }
-    override def dataType: DataType = DecimalType(28, 12)
-    override def nullable: Boolean = true
-    override def prettyName: String = "graft_centroid_dist_exact"
-    private def f = isFloat(left.dataType)
-    override protected def nullSafeEval(v: Any, idx: Any): Any =
-      CentroidKernels.distExactSel(v.asInstanceOf[ArrayData], f,
-        idx.asInstanceOf[Int], cents)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("cents", cents, "double[][]")
-      nullSafeCodeGen(ctx, ev, (c, i) => s"""
-        Object r = graft.functions.CentroidKernels.distExactSel($c, $f, $i, $ref);
-        if (r == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = (org.apache.spark.sql.types.Decimal) r; }
-      """)
-    }
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): CentroidDistExactSel = copy(left = l, right = r)
-  }
-
-  case class PqLutExpr(child: Expression, books: Array[Array[Array[Double]]])
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      vecCheck(child.dataType, prettyName)
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-    override def prettyName: String = "graft_pq_lut"
-    private def f = isFloat(child.dataType)
-    override protected def nullSafeEval(v: Any): Any =
-      CentroidKernels.pqLut(v.asInstanceOf[ArrayData], f, books)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("books", books, "double[][][]")
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.CentroidKernels.pqLut($c, $f, $ref)")
-    }
-    override protected def withNewChildInternal(c: Expression): PqLutExpr =
-      copy(child = c)
-  }
-
-  case class PqLutExactExpr(child: Expression, books: Array[Array[Array[Double]]])
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      vecCheck(child.dataType, prettyName)
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-    override def prettyName: String = "graft_pq_lut_exact"
-    private def f = isFloat(child.dataType)
-    override protected def nullSafeEval(v: Any): Any =
-      CentroidKernels.pqLutExact(v.asInstanceOf[ArrayData], f, books)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("books", books, "double[][][]")
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.CentroidKernels.pqLutExact($c, $f, $ref)")
-    }
-    override protected def withNewChildInternal(c: Expression): PqLutExactExpr =
-      copy(child = c)
-  }
-
-  case class PqAssignExpr(child: Expression, books: Array[Array[Array[Double]]],
-      exact: Boolean) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      vecCheck(child.dataType, prettyName)
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "graft_pq_assign"
-    private def f = isFloat(child.dataType)
-    override protected def nullSafeEval(v: Any): Any =
-      CentroidKernels.pqAssign(v.asInstanceOf[ArrayData], f, exact, books)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("books", books, "double[][][]")
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.CentroidKernels.pqAssign($c, $f, $exact, $ref)")
-    }
-    override protected def withNewChildInternal(c: Expression): PqAssignExpr =
-      copy(child = c)
-  }
-
-  case class PqResid2Expr(left: Expression, right: Expression,
-      books: Array[Array[Array[Double]]]) extends BinaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(FloatType, _) | ArrayType(DoubleType, _),
-            ArrayType(IntegerType, _)) => TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (ARRAY<FLOAT|DOUBLE>, ARRAY<INT>), got (${l.sql}, ${r.sql})")
-      }
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "graft_pq_resid2"
-    private def f = isFloat(left.dataType)
-    override protected def nullSafeEval(v: Any, codes: Any): Any =
-      CentroidKernels.pqResid2(v.asInstanceOf[ArrayData], f,
-        codes.asInstanceOf[ArrayData], books)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("books", books, "double[][][]")
-      defineCodeGen(ctx, ev, (c, cd) =>
-        s"graft.functions.CentroidKernels.pqResid2($c, $f, $cd, $ref)")
-    }
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): PqResid2Expr = copy(left = l, right = r)
-  }
-
-  case class PqAdcEstDot(first: Expression, second: Expression,
-      third: Expression, ks: Int, m: Int) extends TernaryExpression {
-    require(ks >= 1 && m >= 1, s"need ks >= 1 and m >= 1, got ks=$ks m=$m")
-    override def checkInputDataTypes(): TypeCheckResult =
-      (first.dataType, second.dataType, third.dataType) match {
-        case (ArrayType(IntegerType, _), ArrayType(DoubleType, _), DoubleType) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (ARRAY<INT>, ARRAY<DOUBLE>, DOUBLE), " +
-            s"got (${a.sql}, ${b.sql}, ${c.sql})")
-      }
-    override def dataType: DataType = DoubleType
-    override def nullable: Boolean = true
-    override def prettyName: String = "graft_pq_adc_est"
-    override protected def nullSafeEval(codes: Any, lut: Any, extra: Any): Any =
-      CentroidKernels.adcEstDot(codes.asInstanceOf[ArrayData],
-        lut.asInstanceOf[ArrayData], ks, m, extra.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (c, l, x) => s"""
-        Object r = graft.functions.CentroidKernels.adcEstDot($c, $l, $ks, $m, $x);
-        if (r == null) { ${ev.isNull} = true; }
-        else { ${ev.value} = ((java.lang.Double) r).doubleValue(); }
-      """)
-    override protected def withNewChildrenInternal(a: Expression, b: Expression,
-        c: Expression): PqAdcEstDot = copy(first = a, second = b, third = c)
-  }
+  private val vec = ColumnBridge.AnyOf(ArrayType(FloatType), ArrayType(DoubleType))
+  private val doubles = ArrayType(DoubleType, containsNull = true)
 
   def dists(v: Column, cents: Array[Array[Double]]): Column =
-    ColumnBridge.column(CentroidDists(ColumnBridge.expression(v), cents))
+    Kernel.column("graft_centroid_dists", CentroidKernels, "dists", doubles,
+      Seq(v), Seq(vec), Seq(IsFloat, cents))
   def nearest(v: Column, cents: Array[Array[Double]]): Column =
-    ColumnBridge.column(NearestCentroid(ColumnBridge.expression(v), cents))
+    Kernel.column("graft_nearest_centroid", CentroidKernels, "nearest", IntegerType,
+      Seq(v), Seq(vec), Seq(IsFloat, cents), returnNullable = true)
   def nearestExact(v: Column, cents: Array[Array[Double]]): Column =
-    ColumnBridge.column(NearestCentroidExact(ColumnBridge.expression(v), cents))
+    Kernel.column("graft_nearest_centroid_exact", CentroidKernels, "nearestExact", IntegerType,
+      Seq(v), Seq(vec), Seq(IsFloat, cents), returnNullable = true)
   def distExactSel(v: Column, idx: Column, cents: Array[Array[Double]]): Column =
-    ColumnBridge.column(CentroidDistExactSel(ColumnBridge.expression(v),
-      ColumnBridge.expression(idx), cents))
+    Kernel.column("graft_centroid_dist_exact", CentroidKernels, "distExactSel",
+      DecimalType(28, 12), Seq(v, idx), Seq(vec, IntegerType), Seq(IsFloat, Arg(1), cents),
+      returnNullable = true)
   def pqLut(v: Column, books: Array[Array[Array[Double]]]): Column =
-    ColumnBridge.column(PqLutExpr(ColumnBridge.expression(v), books))
+    Kernel.column("graft_pq_lut", CentroidKernels, "pqLut", doubles,
+      Seq(v), Seq(vec), Seq(IsFloat, books))
   def pqLutExact(v: Column, books: Array[Array[Array[Double]]]): Column =
-    ColumnBridge.column(PqLutExactExpr(ColumnBridge.expression(v), books))
+    Kernel.column("graft_pq_lut_exact", CentroidKernels, "pqLutExact", doubles,
+      Seq(v), Seq(vec), Seq(IsFloat, books))
   def pqAssign(v: Column, books: Array[Array[Array[Double]]], exact: Boolean): Column =
-    ColumnBridge.column(PqAssignExpr(ColumnBridge.expression(v), books, exact))
+    Kernel.column("graft_pq_assign", CentroidKernels, "pqAssign",
+      ArrayType(IntegerType, containsNull = false), Seq(v), Seq(vec), Seq(IsFloat, exact, books))
   def pqResid2(v: Column, codes: Column, books: Array[Array[Array[Double]]]): Column =
-    ColumnBridge.column(PqResid2Expr(ColumnBridge.expression(v),
-      ColumnBridge.expression(codes), books))
+    Kernel.column("graft_pq_resid2", CentroidKernels, "pqResid2", DoubleType,
+      Seq(v, codes), Seq(vec, ArrayType(IntegerType)), Seq(IsFloat, Arg(1), books))
   def pqAdcEstDot(codes: Column, lut: Column, extra: Column,
-      ks: Int, m: Int): Column =
-    ColumnBridge.column(PqAdcEstDot(ColumnBridge.expression(codes),
-      ColumnBridge.expression(lut), ColumnBridge.expression(extra), ks, m))
+      ks: Int, m: Int): Column = {
+    require(ks >= 1 && m >= 1, s"need ks >= 1 and m >= 1, got ks=$ks m=$m")
+    Kernel.column("graft_pq_adc_est", CentroidKernels, "adcEstDot", DoubleType,
+      Seq(codes, lut, extra), Seq(ArrayType(IntegerType), ArrayType(DoubleType), DoubleType),
+      Seq(ks, m, Arg(2)), returnNullable = true)
+  }
 }

@@ -1,16 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared scalar kernel for [[CdcChunks]] — content-defined chunking
-  * ([[graft.operators.Chunker.chunkContentDefined]]'s semantics) as
+/** Native content-defined chunking (`graft_cdc_chunks`: text STRING →
+  * ARRAY<STRING> of chunks under local fingerprint boundaries —
+  * [[graft.operators.Chunker.chunkContentDefined]]'s semantics) as
   * ONE linear pass: tokenize (the [[TextKernels.tokens]] byte scan),
   * fingerprint each token ([[FingerprintKernel.compute]] — the same
   * recurrence the HOF form and the DuckDB oracle use), close a chunk
@@ -45,33 +42,11 @@ object CdcChunkKernel {
   }
 }
 
-/** Native content-defined chunk expression: text STRING →
-  * ARRAY<STRING> of chunks under local fingerprint boundaries.
-  * Tier-(b) extension like [[Fingerprint]]/[[BpeSegment]].
-  */
-case class CdcChunks(child: Expression, divisor: Int) extends UnaryExpression {
-  require(divisor >= 2, s"divisor must be >= 2, got $divisor")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_cdc_chunks requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_cdc_chunks"
-
-  override protected def nullSafeEval(input: Any): Any =
-    CdcChunkKernel.chunks(input.asInstanceOf[UTF8String], divisor)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.CdcChunkKernel.chunks($c, $divisor)")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcChunks =
-    copy(child = newChild)
-}
-
 object ChunkExpressions {
   /** Column API for the native CDC chunker. */
-  def cdcChunks(text: Column, divisor: Int): Column =
-    ColumnBridge.column(CdcChunks(ColumnBridge.expression(text), divisor))
+  def cdcChunks(text: Column, divisor: Int): Column = {
+    require(divisor >= 2, s"divisor must be >= 2, got $divisor")
+    Kernel.column("graft_cdc_chunks", CdcChunkKernel, "chunks",
+      ArrayType(StringType, containsNull = false), Seq(text), Seq(StringType), Seq(divisor))
+  }
 }

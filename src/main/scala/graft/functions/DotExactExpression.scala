@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native kernel for the deterministic (decimal-quantized) dot
@@ -129,66 +125,16 @@ object DotFastKernel {
   }
 }
 
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_dot requires ARRAY<FLOAT> args, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DotFastKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DotFastKernel.dot($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
-    copy(left = l, right = r)
-}
-
-case class DotExact(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_dot_exact requires ARRAY<FLOAT> args, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot_exact"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DotExactKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DotExactKernel.dot($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotExact =
-    copy(left = l, right = r)
-}
-
-case class DotExactDoubles(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_dot_exact_d requires ARRAY<DOUBLE> args, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot_exact_d"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DotExactKernel.dotD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DotExactKernel.dotD($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotExactDoubles =
-    copy(left = l, right = r)
-}
-
 object DotExactExpression {
+  private val floats = ArrayType(FloatType)
+
   def dotExact(a: Column, b: Column): Column =
-    ColumnBridge.column(DotExact(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.column("graft_dot_exact", DotExactKernel, "dot", DoubleType,
+      Seq(a, b), Seq(floats, floats))
   def dotExactD(a: Column, b: Column): Column =
-    ColumnBridge.column(DotExactDoubles(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.column("graft_dot_exact_d", DotExactKernel, "dotD", DoubleType,
+      Seq(a, b), Seq(ArrayType(DoubleType), ArrayType(DoubleType)))
   def dotFast(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.column("graft_dot", DotFastKernel, "dot", DoubleType,
+      Seq(a, b), Seq(floats, floats))
 }

@@ -2,11 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** The fitted DSIR bucket model as a PLAN-REFERENCE CONSTANT — the
@@ -55,6 +52,12 @@ object DsirLm {
   }
 }
 
+/** DSIR kernels. Scoring (tokens → STRUCT(n_ngrams, logw) under a
+  * literal [[DsirLm]]) is stateless and map-side — DSIR scoring of a
+  * live crawl is automatically STREAMING-capable (the q115 claim for
+  * a second model family): no shuffle, no watermark, no state store;
+  * the model rides the plan.
+  */
 object DsirKernel {
   /** md5 48-bit prefix of a UTF-8 string mod `buckets` — the engine-
     * portable bucket hash ([[graft.operators.Dsir.bucketOf]]'s
@@ -71,7 +74,13 @@ object DsirKernel {
   }
 
   /** All unigram + bigram bucket ids of a token array, one entry per
-    * occurrence (see [[DsirNgramBuckets]]).
+    * OCCURRENCE, unigrams of position i before the bigram ending at i
+    * — multiplicity preserved, order irrelevant to every count
+    * consumer. One pass with the native md5 bucket hash, replacing the
+    * two corpus scans (unigram explode ∪ bigram zip_with explode) +
+    * per-occurrence md5/conv/substring expression chain of the HOF fit
+    * — [[bucket]] ≡ `Dsir.bucketOf` is already under the q118/q121
+    * oracle gate.
     */
   def ngramBuckets(tokens: ArrayData, buckets: Int): ArrayData = {
     val n = tokens.numElements()
@@ -117,74 +126,19 @@ object DsirKernel {
   }
 }
 
-/** tokens ARRAY<STRING> → STRUCT(n_ngrams BIGINT, logw DOUBLE) under a
-  * literal [[DsirLm]]. Stateless and map-side — DSIR scoring of a
-  * live crawl is automatically STREAMING-capable (the q115 claim for
-  * a second model family): no shuffle, no watermark, no state store;
-  * the model rides the plan.
-  */
-case class DsirLogWeight(child: Expression, lm: DsirLm)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_dsir_logw requires ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_ngrams", LongType, nullable = false),
-    StructField("logw", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_dsir_logw"
-
-  override protected def nullSafeEval(input: Any): Any =
-    DsirKernel.logWeight(input.asInstanceOf[ArrayData], lm)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("dsirLm", lm, "graft.functions.DsirLm")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.DsirKernel.logWeight($c, $ref);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): DsirLogWeight =
-    copy(child = newChild)
-}
-
-/** tokens ARRAY<STRING> → ARRAY<BIGINT> of hashed n-gram buckets (one
-  * entry per unigram AND bigram OCCURRENCE, unigrams of position i
-  * before the bigram ending at i — multiplicity preserved, order
-  * irrelevant to every count consumer). One pass with the native md5
-  * bucket hash, replacing the two corpus scans (unigram explode ∪
-  * bigram zip_with explode) + per-occurrence md5/conv/substring
-  * expression chain of the HOF fit — [[DsirKernel.bucket]] ≡
-  * `Dsir.bucketOf` is already under the q118/q121 oracle gate.
-  */
-case class DsirNgramBuckets(child: Expression, buckets: Int)
-    extends UnaryExpression {
-  require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_dsir_buckets requires ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_dsir_buckets"
-  override protected def nullSafeEval(input: Any): Any =
-    DsirKernel.ngramBuckets(input.asInstanceOf[ArrayData], buckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.DsirKernel.ngramBuckets($c, $buckets)")
-  override protected def withNewChildInternal(newChild: Expression): DsirNgramBuckets =
-    copy(child = newChild)
-}
-
 object DsirExpressions {
+  private val tokenArray = ArrayType(StringType)
+
   /** Column API: score a token-array column under a fitted model. */
   def dsirLogWeight(tokens: Column, lm: DsirLm): Column =
-    ColumnBridge.column(DsirLogWeight(ColumnBridge.expression(tokens), lm))
+    Kernel.column("graft_dsir_logw", DsirKernel, "logWeight", StructType(Seq(
+        StructField("n_ngrams", LongType, nullable = false),
+        StructField("logw", DoubleType, nullable = false))),
+      Seq(tokens), Seq(tokenArray), Seq(lm), returnNullable = true)
   /** Column API: hashed uni+bigram bucket ids of a token array. */
-  def ngramBuckets(tokens: Column, buckets: Int): Column =
-    ColumnBridge.column(DsirNgramBuckets(ColumnBridge.expression(tokens), buckets))
+  def ngramBuckets(tokens: Column, buckets: Int): Column = {
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    Kernel.column("graft_dsir_buckets", DsirKernel, "ngramBuckets",
+      ArrayType(LongType, containsNull = false), Seq(tokens), Seq(tokenArray), Seq(buckets))
+  }
 }

@@ -1,14 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared kernel for [[DeletionNeighborhood]] — one implementation
-  * behind both the interpreted and generated code paths.
+/** Native deletion-1 neighborhood (FastSS blocking key generator) —
+  * the codegen'd hot-path twin of [[graft.operators.FuzzyJoin
+  * .deletionNeighborhood]]'s higher-order-function formulation, which
+  * stays as the executable spec; the two are property-tested
+  * identical, including astral-plane (surrogate-pair) codepoints
+  * (`RetrievalFuzzyIncrementalSpec`, "kernel ≡ HOF"). The HOF form
+  * allocates a position array and evaluates interpreted lambdas per
+  * element; this is one linear scan per row, and it is what
+  * [[graft.operators.FuzzyJoin.editDistance1Pairs]] plants in the
+  * candidate-generation hot path.
   */
 object DeletionNeighborhoodKernel {
   /** The FastSS deletion-1 neighborhood of `s`: `s` itself followed by
@@ -39,42 +45,11 @@ object DeletionNeighborhoodKernel {
   }
 }
 
-/** Native deletion-1 neighborhood (FastSS blocking key generator) —
-  * the codegen'd hot-path twin of [[graft.operators.FuzzyJoin
-  * .deletionNeighborhood]]'s higher-order-function formulation, which
-  * stays as the executable spec; the two are property-tested
-  * identical, including astral-plane (surrogate-pair) codepoints
-  * (`RetrievalFuzzyIncrementalSpec`, "kernel ≡ HOF"). The HOF form
-  * allocates a position array and evaluates interpreted lambdas per
-  * element; this is one linear scan per row, and it is what
-  * [[graft.operators.FuzzyJoin.editDistance1Pairs]] plants in the
-  * candidate-generation hot path.
-  */
-case class DeletionNeighborhood(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_deletion_neighborhood requires STRING, got ${child.dataType.sql}")
-
-  // variants are never null; dedup guarantees distinct elements
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_deletion_neighborhood"
-
-  override protected def nullSafeEval(input: Any): Any =
-    DeletionNeighborhoodKernel.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.DeletionNeighborhoodKernel.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): DeletionNeighborhood =
-    copy(child = newChild)
-}
-
 object FuzzyExpressions {
-  /** Column API for the native kernel. */
-  def deletionNeighborhood(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      DeletionNeighborhood(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+  /** Column API for the native kernel; variants are never null, and
+    * dedup guarantees distinct elements.
+    */
+  def deletionNeighborhood(c: Column): Column =
+    Kernel.column("graft_deletion_neighborhood", DeletionNeighborhoodKernel, "compute",
+      ArrayType(StringType, containsNull = false), Seq(c), Seq(StringType))
 }

@@ -5,11 +5,7 @@ import java.util.{HashMap => JMap}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -418,9 +414,9 @@ object GopherKernels {
   }
 }
 
-/** Struct-typed expression wrappers (the [[WordTokens]] discipline:
-  * plain unary/binary expressions, codegen via one static call, so the
-  * projection whole-stage-compiles and the kernel runs once per row).
+/** Struct-typed [[Kernel]] wrappers: codegen via one static call, so
+  * the projection whole-stage-compiles and the kernel runs once per
+  * row.
   */
 object GopherExpressions {
 
@@ -447,84 +443,19 @@ object GopherExpressions {
     metric("dup_8gram_char_frac"), metric("dup_9gram_char_frac"),
     metric("dup_10gram_char_frac"), metric("pass", BooleanType)))
 
-  private def requireString(dt: DataType, fn: String): TypeCheckResult = dt match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$fn requires STRING, got ${other.sql}")
-  }
-
-  case class GopherBasic(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      requireString(child.dataType, prettyName)
-    override def dataType: DataType = basicType
-    override def prettyName: String = "graft_gopher_repetition"
-    override protected def nullSafeEval(input: Any): Any =
-      GopherKernels.basic(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.GopherKernels.basic($c)")
-    override protected def withNewChildInternal(newChild: Expression): GopherBasic =
-      copy(child = newChild)
-  }
-
-  case class GopherCapped(child: Expression, maxTokens: Int, maxLines: Int)
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      requireString(child.dataType, prettyName)
-    override def dataType: DataType = cappedType
-    override def prettyName: String = "graft_gopher_repetition_capped"
-    override protected def nullSafeEval(input: Any): Any =
-      GopherKernels.capped(input.asInstanceOf[UTF8String], maxTokens, maxLines)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.GopherKernels.capped($c, $maxTokens, $maxLines)")
-    override protected def withNewChildInternal(newChild: Expression): GopherCapped =
-      copy(child = newChild)
-  }
-
-  case class GopherFull(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      requireString(child.dataType, prettyName)
-    override def dataType: DataType = fullType
-    override def prettyName: String = "graft_gopher_repetition_full"
-    override protected def nullSafeEval(input: Any): Any =
-      GopherKernels.full(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.GopherKernels.full($c)")
-    override protected def withNewChildInternal(newChild: Expression): GopherFull =
-      copy(child = newChild)
-  }
-
-  /** Guarded full form: `left` = doc id rendered to string (for the
-    * loud error), `right` = text.
-    */
-  case class GopherFullGuarded(left: Expression, right: Expression, maxLines: Int)
-      extends BinaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (STRING, STRING), got (${l.sql}, ${r.sql})")
-      }
-    override def dataType: DataType = fullType
-    override def prettyName: String = "graft_gopher_repetition_full_guarded"
-    override protected def nullSafeEval(id: Any, text: Any): Any =
-      GopherKernels.fullGuarded(id.asInstanceOf[UTF8String],
-        text.asInstanceOf[UTF8String], maxLines)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (i, c) =>
-        s"graft.functions.GopherKernels.fullGuarded($i, $c, $maxLines)")
-    override protected def withNewChildrenInternal(newLeft: Expression,
-        newRight: Expression): GopherFullGuarded =
-      copy(left = newLeft, right = newRight)
-  }
-
   def basic(text: Column): Column =
-    ColumnBridge.column(GopherBasic(ColumnBridge.expression(text)))
+    Kernel.column("graft_gopher_repetition", GopherKernels, "basic", basicType,
+      Seq(text), Seq(StringType))
   def capped(text: Column, maxTokens: Int, maxLines: Int): Column =
-    ColumnBridge.column(GopherCapped(ColumnBridge.expression(text), maxTokens, maxLines))
+    Kernel.column("graft_gopher_repetition_capped", GopherKernels, "capped", cappedType,
+      Seq(text), Seq(StringType), Seq(maxTokens, maxLines))
   def full(text: Column): Column =
-    ColumnBridge.column(GopherFull(ColumnBridge.expression(text)))
+    Kernel.column("graft_gopher_repetition_full", GopherKernels, "full", fullType,
+      Seq(text), Seq(StringType))
+  /** Guarded full form: `id` = doc id rendered to string (for the loud
+    * error).
+    */
   def fullGuarded(id: Column, text: Column, maxLines: Int): Column =
-    ColumnBridge.column(GopherFullGuarded(ColumnBridge.expression(id),
-      ColumnBridge.expression(text), maxLines))
+    Kernel.column("graft_gopher_repetition_full_guarded", GopherKernels, "fullGuarded",
+      fullType, Seq(id, text), Seq(StringType, StringType), Seq(maxLines))
 }

@@ -1,17 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Native hash-sketch expressions (tier-(b) extensions like
-  * [[Fingerprint]]): the HOF formulations of MinHash and SimHash are
-  * correct but pay one interpreted lambda dispatch per (element ×
-  * permutation/bit); these kernels are single tight loops sharing the
+/** Native hash-sketch kernels (like [[FingerprintKernel]]): the HOF
+  * formulations of MinHash and SimHash are correct but pay one
+  * interpreted lambda dispatch per (element × permutation/bit); these
+  * kernels are single tight loops sharing the
   * SAME xxhash64 chain as the built-in `xxhash64(...)` expression, so
   * they are drop-in bit-identical replacements (equivalence is
   * unit-tested against the HOF forms).
@@ -140,92 +137,23 @@ object BbitKernels {
   }
 }
 
-case class BbitPack(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_bbit_pack requires ARRAY<BIGINT>, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_bbit_pack"
-  override protected def nullSafeEval(input: Any): Any =
-    BbitKernels.pack(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.BbitKernels.pack($c)")
-  override protected def withNewChildInternal(newChild: Expression): BbitPack =
-    copy(child = newChild)
-}
-
-case class BbitJaccardEst(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_bbit_est requires ARRAY<BIGINT> args, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_bbit_est"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    BbitKernels.estimate(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.BbitKernels.estimate($a, $b, $k)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BbitJaccardEst =
-    copy(left = l, right = r)
-}
-
-abstract class StringArrayUnary extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${other.sql}")
-  }
-}
-
-case class MinhashSig(child: Expression, numHashes: Int) extends StringArrayUnary {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.minhash(input.asInstanceOf[ArrayData], numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.minhash($c, $numHashes)")
-  override protected def withNewChildInternal(newChild: Expression): MinhashSig =
-    copy(child = newChild)
-}
-
-case class SimHash64(child: Expression) extends StringArrayUnary {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.simhash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhash64($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-case class SimHashPoly(child: Expression) extends StringArrayUnary {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash_poly"
-  override protected def nullSafeEval(input: Any): Any =
-    HashKernels.simhashPoly(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.simhashPoly($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHashPoly =
-    copy(child = newChild)
-}
-
 object HashExpressions {
+  private val tokenArray = ArrayType(StringType)
+  private val longs = ArrayType(LongType)
+
   def minhashSig(shingles: Column, numHashes: Int): Column =
-    ColumnBridge.column(MinhashSig(ColumnBridge.expression(shingles), numHashes))
+    Kernel.column("graft_minhash", HashKernels, "minhash",
+      ArrayType(LongType, containsNull = false), Seq(shingles), Seq(tokenArray), Seq(numHashes))
   def simhash64(tokens: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(tokens)))
+    Kernel.column("graft_simhash64", HashKernels, "simhash64", LongType,
+      Seq(tokens), Seq(tokenArray))
   def simhashPoly(tokens: Column): Column =
-    ColumnBridge.column(SimHashPoly(ColumnBridge.expression(tokens)))
+    Kernel.column("graft_simhash_poly", HashKernels, "simhashPoly", LongType,
+      Seq(tokens), Seq(tokenArray))
   def bbitPack(sig: Column): Column =
-    ColumnBridge.column(BbitPack(ColumnBridge.expression(sig)))
+    Kernel.column("graft_bbit_pack", BbitKernels, "pack",
+      ArrayType(LongType, containsNull = false), Seq(sig), Seq(longs))
   def bbitEst(a: Column, b: Column, k: Int): Column =
-    ColumnBridge.column(BbitJaccardEst(
-      ColumnBridge.expression(a), ColumnBridge.expression(b), k))
+    Kernel.column("graft_bbit_est", BbitKernels, "estimate", DoubleType,
+      Seq(a, b), Seq(longs, longs), Seq(k))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -87,8 +84,17 @@ object LangNbModel {
   }
 }
 
+/** Language-ID kernels. Scoring (text → STRUCT(lang, score) under a
+  * literal [[LangNbModel]]) is stateless, map-side and codegen'd —
+  * language-ID of a live stream needs no shuffle, no state, no model
+  * file distribution beyond the plan itself (the [[DsirKernel]]
+  * shape).
+  */
 object LangNbKernel {
   /** All char-n-gram bucket ids of `text`, one entry per occurrence —
+    * the FIT-side kernel, replacing the interpreted `transform`/`filter`
+    * window HOF plus the per-occurrence md5/conv/substring expression
+    * chain with one codegen'd scan per document:
     * [[graft.operators.LangIdNb.charNgrams]] + [[graft.operators.Dsir
     * .bucketOf]] as ONE scalar scan (the [[DsirKernel.ngramBuckets]]
     * precedent): codepoint-windowed substrings (both Spark's and
@@ -160,73 +166,13 @@ object LangNbKernel {
   }
 }
 
-/** text STRING → STRUCT(lang STRING, score DOUBLE) under a literal
-  * [[LangNbModel]]. Stateless, map-side, codegen'd — language-ID of a
-  * live stream needs no shuffle, no state, no model file distribution
-  * beyond the plan itself (the [[DsirLogWeight]] shape).
-  */
-case class LangNbScore(child: Expression, model: LangNbModel)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_langnb requires STRING, got ${other.sql}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("lang", StringType, nullable = false),
-    StructField("score", DoubleType, nullable = true)))
-  override def prettyName: String = "graft_langnb"
-
-  override protected def nullSafeEval(input: Any): Any =
-    LangNbKernel.score(input.asInstanceOf[UTF8String], model)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("langNbModel", model, "graft.functions.LangNbModel")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.LangNbKernel.score($c, $ref);
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LangNbScore =
-    copy(child = newChild)
-}
-
-/** text STRING → ARRAY<BIGINT> of char-n-gram bucket ids, one per
-  * occurrence — the FIT-side kernel ([[graft.functions.DsirNgramBuckets]]
-  * shape): replaces the interpreted `transform`/`filter` window HOF plus
-  * the per-occurrence md5/conv/substring expression chain with one
-  * codegen'd scan per document.
-  */
-case class CharNgramBuckets(child: Expression, n: Int, buckets: Int)
-    extends UnaryExpression {
-  require(n >= 1, s"ngram order must be >= 1, got $n")
-  require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_char_ngram_buckets requires STRING, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_char_ngram_buckets"
-
-  override protected def nullSafeEval(input: Any): Any =
-    LangNbKernel.charNgramBuckets(input.asInstanceOf[UTF8String], n, buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.LangNbKernel.charNgramBuckets($c, $n, $buckets);
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): CharNgramBuckets =
-    copy(child = newChild)
-}
-
 object LangNbExpressions {
   /** Column API: (lang, score) struct under a fitted model. */
   def langNbScore(text: Column, model: LangNbModel): Column =
-    ColumnBridge.column(LangNbScore(ColumnBridge.expression(text), model))
+    Kernel.column("graft_langnb", LangNbKernel, "score", StructType(Seq(
+        StructField("lang", StringType, nullable = false),
+        StructField("score", DoubleType, nullable = true))),
+      Seq(text), Seq(StringType), Seq(model))
 
   /** Just the predicted language code — drop-in for
     * [[Text.langId]] wherever a trained model beats the marker
@@ -236,7 +182,10 @@ object LangNbExpressions {
     langNbScore(text, model).getField("lang")
 
   /** Char-n-gram bucket ids per occurrence (fit-side feature hash). */
-  def charNgramBuckets(text: Column, n: Int, buckets: Int): Column =
-    ColumnBridge.column(
-      CharNgramBuckets(ColumnBridge.expression(text), n, buckets))
+  def charNgramBuckets(text: Column, n: Int, buckets: Int): Column = {
+    require(n >= 1, s"ngram order must be >= 1, got $n")
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    Kernel.column("graft_char_ngram_buckets", LangNbKernel, "charNgramBuckets",
+      ArrayType(LongType, containsNull = false), Seq(text), Seq(StringType), Seq(n, buckets))
+  }
 }

@@ -2,15 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** The trained bigram LM as a PLAN-REFERENCE CONSTANT — the
-  * [[BpeSegment]] model-constant pattern applied to
+  * [[BpeSegmentKernel]] model-constant pattern applied to
   * [[graft.operators.LanguageModel]]'s statistics: CCNet's scoring
   * stage ships the LM to every node as a model file, and the Spark
   * analogue is a Serializable object referenced from generated code.
@@ -49,6 +46,11 @@ object BigramLm {
   }
 }
 
+/** Bigram LM scoring (tokens → STRUCT(n_bigrams, ppl) under a literal
+  * [[BigramLm]]). Stateless and map-side — which is what makes LM
+  * quality filtering automatically STREAMING-capable (q115): no
+  * shuffle, no watermark, no state store; the model rides the plan.
+  */
 object LmKernel {
   /** Per-doc perplexity under a [[BigramLm]], numerically IDENTICAL
     * to [[graft.operators.LanguageModel.perplexity]]'s declarative
@@ -83,40 +85,6 @@ object LmKernel {
       .setScale(6, java.math.RoundingMode.HALF_EVEN).doubleValue()
     new GenericInternalRow(Array[Any](nBigrams, ppl))
   }
-}
-
-/** tokens ARRAY<STRING> → STRUCT(n_bigrams BIGINT, ppl DOUBLE) under a
-  * literal [[BigramLm]]. Stateless and map-side — which is what makes
-  * LM quality filtering automatically STREAMING-capable (q115): no
-  * shuffle, no watermark, no state store; the model rides the plan.
-  */
-case class BigramPpl(child: Expression, lm: BigramLm)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_bigram_ppl requires ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_bigrams", LongType, nullable = false),
-    StructField("ppl", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_bigram_ppl"
-
-  override protected def nullSafeEval(input: Any): Any =
-    LmKernel.perplexity(input.asInstanceOf[ArrayData], lm)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bigramLm", lm, "graft.functions.BigramLm")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.LmKernel.perplexity($c, $ref);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BigramPpl =
-    copy(child = newChild)
 }
 
 /** Interpolated Kneser–Ney bigram statistics as a plan-reference
@@ -216,6 +184,10 @@ object TrigramLm {
   }
 }
 
+/** Kneser–Ney and interpolated-trigram perplexity scoring (tokens →
+  * STRUCT(n_bigrams | n_trigrams, ppl) under a literal [[KneserNeyLm]]
+  * / [[TrigramLm]]), the [[LmKernel]] shape.
+  */
 object LmScoreKernels {
   import java.math.{BigDecimal => JBig, RoundingMode}
 
@@ -309,65 +281,24 @@ object LmScoreKernels {
   }
 }
 
-/** tokens → STRUCT(n_bigrams, ppl) under a literal [[KneserNeyLm]]. */
-case class KnPpl(child: Expression, lm: KneserNeyLm, discount: Double)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_kn_ppl requires ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_bigrams", LongType, nullable = false),
-    StructField("ppl", DoubleType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_kn_ppl"
-  override protected def nullSafeEval(input: Any): Any =
-    LmScoreKernels.perplexityKn(input.asInstanceOf[ArrayData], lm, discount)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("knLm", lm, "graft.functions.KneserNeyLm")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.LmScoreKernels.perplexityKn($c, $ref, $discount);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-  override protected def withNewChildInternal(newChild: Expression): KnPpl =
-    copy(child = newChild)
-}
-
-/** tokens → STRUCT(n_trigrams, ppl) under a literal [[TrigramLm]]. */
-case class TriPpl(child: Expression, lm: TrigramLm,
-    l3: Double, l2: Double, l1: Double) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_tri_ppl requires ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_trigrams", LongType, nullable = false),
-    StructField("ppl", DoubleType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_tri_ppl"
-  override protected def nullSafeEval(input: Any): Any =
-    LmScoreKernels.perplexityTri(input.asInstanceOf[ArrayData], lm, l3, l2, l1)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("triLm", lm, "graft.functions.TrigramLm")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.LmScoreKernels.perplexityTri($c, $ref, $l3, $l2, $l1);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-  override protected def withNewChildInternal(newChild: Expression): TriPpl =
-    copy(child = newChild)
-}
-
 object LmExpressions {
+  private val tokenArray = ArrayType(StringType)
+  private def pplType(count: String, pplNullable: Boolean) = StructType(Seq(
+    StructField(count, LongType, nullable = false),
+    StructField("ppl", DoubleType, nullable = pplNullable)))
+
   /** Column API: score a token-array column under a trained model. */
   def bigramPpl(tokens: Column, lm: BigramLm): Column =
-    ColumnBridge.column(BigramPpl(ColumnBridge.expression(tokens), lm))
+    Kernel.column("graft_bigram_ppl", LmKernel, "perplexity",
+      pplType("n_bigrams", pplNullable = false), Seq(tokens), Seq(tokenArray), Seq(lm),
+      returnNullable = true)
   def knPpl(tokens: Column, lm: KneserNeyLm, discount: Double): Column =
-    ColumnBridge.column(KnPpl(ColumnBridge.expression(tokens), lm, discount))
+    Kernel.column("graft_kn_ppl", LmScoreKernels, "perplexityKn",
+      pplType("n_bigrams", pplNullable = true), Seq(tokens), Seq(tokenArray),
+      Seq(lm, discount), returnNullable = true)
   def triPpl(tokens: Column, lm: TrigramLm,
       l3: Double, l2: Double, l1: Double): Column =
-    ColumnBridge.column(TriPpl(ColumnBridge.expression(tokens), lm, l3, l2, l1))
+    Kernel.column("graft_tri_ppl", LmScoreKernels, "perplexityTri",
+      pplType("n_trigrams", pplNullable = true), Seq(tokens), Seq(tokenArray),
+      Seq(lm, l3, l2, l1), returnNullable = true)
 }

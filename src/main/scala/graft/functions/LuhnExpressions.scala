@@ -3,10 +3,7 @@ package graft.functions
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -88,27 +85,12 @@ object LuhnKernel {
   }
 }
 
-/** `graft_luhn_redact(text)` → STRUCT<clean_text, n_cc, n_rejected>. */
-case class LuhnRedact(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_luhn_redact requires STRING, got ${other.sql}")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("clean_text", StringType, nullable = false),
-    StructField("n_cc", IntegerType, nullable = false),
-    StructField("n_rejected", IntegerType, nullable = false)))
-  override def prettyName: String = "graft_luhn_redact"
-  override protected def nullSafeEval(input: Any): Any =
-    LuhnKernel.redact(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LuhnKernel.redact($c)")
-  override protected def withNewChildInternal(newChild: Expression): LuhnRedact =
-    copy(child = newChild)
-}
-
 object LuhnExpressions {
+  /** `graft_luhn_redact(text)` → STRUCT<clean_text, n_cc, n_rejected>. */
   def luhnRedact(text: Column): Column =
-    ColumnBridge.column(LuhnRedact(ColumnBridge.expression(text)))
+    Kernel.column("graft_luhn_redact", LuhnKernel, "redact", StructType(Seq(
+        StructField("clean_text", StringType, nullable = false),
+        StructField("n_cc", IntegerType, nullable = false),
+        StructField("n_rejected", IntegerType, nullable = false))),
+      Seq(text), Seq(StringType))
 }

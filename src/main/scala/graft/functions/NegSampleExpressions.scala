@@ -1,10 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * sums are exact decimals.
   *
   * 100 TB shape: ONE vocab-sized aggregation; weights/cums collect at
-  * model size (Heaps' law) and ride this expression as an
-  * `addReferenceObj` constant; each draw is an O(log V) binary
+  * model size (Heaps' law) and ride the kernel call as an
+  * object-typed plan constant; each draw is an O(log V) binary
   * search — a pure per-row projection over the draw range, no join,
   * no shuffle.
   */
@@ -52,30 +48,14 @@ object NegSampleKernel {
       utf8Words(lo)
     }
   }
-}
 
-/** `graft_neg_sample(k)` → the k-th negative sample. */
-case class NegSample(child: Expression, model: NegSampleKernel.Model)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_neg_sample requires BIGINT, got ${other.sql}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_neg_sample"
-  override protected def nullSafeEval(input: Any): Any =
-    model.sample(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("negSampleModel", model,
-      "graft.functions.NegSampleKernel.Model")
-    defineCodeGen(ctx, ev, c => s"$ref.sample($c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NegSample =
-    copy(child = newChild)
+  /** [[Model.sample]] as a static call. */
+  def sample(k: Long, model: Model): UTF8String = model.sample(k)
 }
 
 object NegSampleExpressions {
+  /** `graft_neg_sample(k)` → the k-th negative sample. */
   def negSample(k: Column, model: NegSampleKernel.Model): Column =
-    ColumnBridge.column(NegSample(ColumnBridge.expression(k), model))
+    Kernel.column("graft_neg_sample", NegSampleKernel, "sample", StringType,
+      Seq(k), Seq(LongType), Seq(model))
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -93,56 +90,18 @@ object NgramKernels {
   }
 }
 
-sealed abstract class NgramArrayExpression extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${other.sql}")
-  }
-}
-
-case class TokenPairs(child: Expression) extends NgramArrayExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w1", StringType), StructField("w2", StringType))),
-    containsNull = false)
-  override def prettyName: String = "graft_token_pairs"
-  override protected def nullSafeEval(input: Any): Any =
-    NgramKernels.pairs(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NgramKernels.pairs($c)")
-  override protected def withNewChildInternal(newChild: Expression): TokenPairs =
-    copy(child = newChild)
-}
-
-case class TokenTriples(child: Expression) extends NgramArrayExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w1", StringType), StructField("w2", StringType),
-    StructField("w3", StringType))), containsNull = false)
-  override def prettyName: String = "graft_token_triples"
-  override protected def nullSafeEval(input: Any): Any =
-    NgramKernels.triples(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NgramKernels.triples($c)")
-  override protected def withNewChildInternal(newChild: Expression): TokenTriples =
-    copy(child = newChild)
-}
-
-case class TokenNgramStrings(child: Expression, n: Int) extends NgramArrayExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def prettyName: String = "graft_token_ngram_strings"
-  override protected def nullSafeEval(input: Any): Any =
-    NgramKernels.joined(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NgramKernels.joined($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): TokenNgramStrings =
-    copy(child = newChild)
-}
-
 object NgramExpressions {
+  private val tokenArray = ArrayType(StringType)
+
   def tokenPairs(tokens: Column): Column =
-    ColumnBridge.column(TokenPairs(ColumnBridge.expression(tokens)))
+    Kernel.column("graft_token_pairs", NgramKernels, "pairs", ArrayType(StructType(Seq(
+        StructField("w1", StringType), StructField("w2", StringType))),
+        containsNull = false), Seq(tokens), Seq(tokenArray))
   def tokenTriples(tokens: Column): Column =
-    ColumnBridge.column(TokenTriples(ColumnBridge.expression(tokens)))
+    Kernel.column("graft_token_triples", NgramKernels, "triples", ArrayType(StructType(Seq(
+        StructField("w1", StringType), StructField("w2", StringType),
+        StructField("w3", StringType))), containsNull = false), Seq(tokens), Seq(tokenArray))
   def tokenNgramStrings(tokens: Column, n: Int): Column =
-    ColumnBridge.column(TokenNgramStrings(ColumnBridge.expression(tokens), n))
+    Kernel.column("graft_token_ngram_strings", NgramKernels, "joined",
+      ArrayType(StringType, containsNull = true), Seq(tokens), Seq(tokenArray), Seq(n))
 }

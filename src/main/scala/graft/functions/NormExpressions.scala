@@ -1,15 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared kernel for [[NfcNormalize]] — one implementation behind the
-  * interpreted and generated code paths so the two cannot drift.
+/** Native Unicode NFC normalization — the canonicalization step a
+  * multilingual training corpus needs BEFORE any content-hash dedup:
+  * the same visible text arrives both precomposed (é = U+00E9) and
+  * decomposed (e + U+0301) from different crawls/encoders, and every
+  * byte-level operator downstream (sha256 exact dedup q14/q52,
+  * shingle hashing q16, fingerprints q19) treats those as different
+  * documents. Spark has no built-in normalizer; as a [[Kernel]] call
+  * it stays inside whole-stage codegen (a UDF would break the codegen
+  * span and lose subexpression elimination for derived metrics).
   */
 object NfcKernel {
   /** Unicode NFC (canonical decomposition + canonical composition,
@@ -27,38 +30,8 @@ object NfcKernel {
   }
 }
 
-/** Native Unicode NFC normalization — the canonicalization step a
-  * multilingual training corpus needs BEFORE any content-hash dedup:
-  * the same visible text arrives both precomposed (é = U+00E9) and
-  * decomposed (e + U+0301) from different crawls/encoders, and every
-  * byte-level operator downstream (sha256 exact dedup q14/q52,
-  * shingle hashing q16, fingerprints q19) treats those as different
-  * documents. Spark has no built-in normalizer; this is the (b)-tier
-  * extension point — a scalar `Expression` with `doGenCode`, staying
-  * inside whole-stage codegen (a UDF would break the codegen span and
-  * lose subexpression elimination for derived metrics).
-  */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_nfc requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nfc"
-
-  override protected def nullSafeEval(input: Any): Any =
-    NfcKernel.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NfcKernel.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
 object NormExpressions {
   /** Column API for the NFC kernel. */
   def nfc(c: Column): Column =
-    ColumnBridge.column(NfcNormalize(ColumnBridge.expression(c)))
+    Kernel.column("graft_nfc", NfcKernel, "compute", StringType, Seq(c), Seq(StringType))
 }

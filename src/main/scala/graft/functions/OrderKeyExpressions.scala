@@ -1,10 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Order-preserving DOUBLE ↔ LONG keys for DESCENDING sort order —
@@ -16,7 +12,7 @@ import org.apache.spark.sql.types._
   * (value DESC) with `java.lang.Double.compare` semantics — the
   * IEEE-754 total order (NaN greatest, hence FIRST in descending
   * order, matching Spark's NaN-is-largest sort). The mapping is a
-  * bijection; [[DoubleFromDescKey]] recovers the exact bits.
+  * bijection; [[fromDescKey]] recovers the exact bits.
   */
 object OrderKeys {
   /** bits → ascending-order-preserving SIGNED long (non-negative
@@ -37,41 +33,11 @@ object OrderKeys {
   }
 }
 
-case class DoubleDescKey(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case DoubleType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_desc_key requires DOUBLE, got ${other.sql}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_desc_key"
-  override protected def nullSafeEval(input: Any): Any =
-    OrderKeys.toDescKey(input.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.OrderKeys.toDescKey($c)")
-  override protected def withNewChildInternal(newChild: Expression): DoubleDescKey =
-    copy(child = newChild)
-}
-
-case class DoubleFromDescKey(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_from_desc_key requires BIGINT, got ${other.sql}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_from_desc_key"
-  override protected def nullSafeEval(input: Any): Any =
-    OrderKeys.fromDescKey(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.OrderKeys.fromDescKey($c)")
-  override protected def withNewChildInternal(newChild: Expression): DoubleFromDescKey =
-    copy(child = newChild)
-}
-
 object OrderKeyExpressions {
   def descKey(value: Column): Column =
-    ColumnBridge.column(DoubleDescKey(ColumnBridge.expression(value)))
+    Kernel.column("graft_desc_key", OrderKeys, "toDescKey", LongType,
+      Seq(value), Seq(DoubleType))
   def fromDescKey(key: Column): Column =
-    ColumnBridge.column(DoubleFromDescKey(ColumnBridge.expression(key)))
+    Kernel.column("graft_from_desc_key", OrderKeys, "fromDescKey", DoubleType,
+      Seq(key), Seq(LongType))
 }

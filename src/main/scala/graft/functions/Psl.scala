@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Public-Suffix-List-backed registrable domain ("eTLD+1") — the
@@ -125,9 +121,16 @@ object Psl {
     * are themselves public suffixes, empty, or malformed.
     */
   def registrableDomain(host: Column, rules: Rules = snapshot): Column =
-    ColumnBridge.column(PslDomain(ColumnBridge.expression(host), rules))
+    Kernel.column("graft_psl_domain", PslKernel, "registrable", StringType,
+      Seq(host), Seq(StringType), Seq(rules), returnNullable = true)
 }
 
+/** Registrable domain of a host under a LITERAL PSL rule table (a
+  * plan-reference constant, the [[BpeSegmentKernel]] model-constant
+  * pattern), inside whole-stage codegen via one static kernel call;
+  * nullable output (a host that IS a public suffix has no registrable
+  * domain).
+  */
 object PslKernel {
   /** publicsuffix.org matching over a parsed [[Psl.Rules]] table.
     * Returns null for: empty host, a host with empty labels
@@ -175,36 +178,4 @@ object PslKernel {
     }
     if (n <= p) null else UTF8String.fromString(suffix(p + 1))
   }
-}
-
-/** Native expression: host STRING → registrable domain STRING under a
-  * LITERAL PSL rule table (plan-reference constant, the [[BpeSegment]]
-  * model-constant pattern). Inside whole-stage codegen via one static
-  * kernel call; nullable output (a host that IS a public suffix has no
-  * registrable domain).
-  */
-case class PslDomain(child: Expression, rules: Psl.Rules)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_psl_domain requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_psl_domain"
-
-  override protected def nullSafeEval(input: Any): Any =
-    PslKernel.registrable(input.asInstanceOf[UTF8String], rules)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pslRules", rules, "graft.functions.Psl.Rules")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PslKernel.registrable($c, $ref);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PslDomain =
-    copy(child = newChild)
 }

@@ -4,11 +4,7 @@ import java.math.{BigDecimal => JBig, RoundingMode}
 import java.util.{HashSet => JSet}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -172,11 +168,6 @@ object QualityKernels {
   }
 }
 
-/** Struct-typed expression wrapper (the [[GopherExpressions]]
-  * discipline: plain unary expression, codegen via one static call,
-  * so the projection whole-stage-compiles and the kernel runs once
-  * per row). The stop-word list rides as a reference object.
-  */
 object QualityExpressions {
 
   private def metric(name: String, t: DataType = DoubleType) = StructField(name, t)
@@ -187,32 +178,14 @@ object QualityExpressions {
     metric("bullet_line_frac"), metric("ellipsis_line_frac"),
     metric("alpha_word_frac"), metric("stop_hits", LongType)))
 
-  case class GopherFormat(child: Expression, stopWords: Seq[String])
-      extends UnaryExpression {
-    @transient private lazy val set = QualityKernels.toSet(stopWords)
+  /** The stop-word list rides as an object-typed plan constant. */
+  def gopherFormat(text: Column, stopWords: Seq[String]): Column = {
     // lowercasing never shrinks the code-point count, so tokens longer
     // than the longest stop word can never fold into one — skip them
-    private val maxStopChars =
+    val maxStopChars =
       if (stopWords.isEmpty) 0
       else stopWords.map(w => w.codePointCount(0, w.length)).max
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires STRING, got ${other.sql}")
-    }
-    override def dataType: DataType = formatType
-    override def prettyName: String = "graft_gopher_format"
-    override protected def nullSafeEval(input: Any): Any =
-      QualityKernels.gopherFormat(input.asInstanceOf[UTF8String], set, maxStopChars)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val setRef = ctx.addReferenceObj("stopSet", set, "java.util.HashSet")
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.QualityKernels.gopherFormat($c, $setRef, $maxStopChars)")
-    }
-    override protected def withNewChildInternal(newChild: Expression): GopherFormat =
-      copy(child = newChild)
+    Kernel.column("graft_gopher_format", QualityKernels, "gopherFormat", formatType,
+      Seq(text), Seq(StringType), Seq(QualityKernels.toSet(stopWords), maxStopChars))
   }
-
-  def gopherFormat(text: Column, stopWords: Seq[String]): Column =
-    ColumnBridge.column(GopherFormat(ColumnBridge.expression(text), stopWords))
 }

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Symmetric per-vector int8 quantization kernels — the compressed
@@ -79,76 +75,20 @@ object Int8QuantKernel {
   }
 }
 
-case class Int8Scale(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_i8_scale requires ARRAY<FLOAT>, got ${t.sql}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_i8_scale"
-  override protected def nullSafeEval(v: Any): Any =
-    Int8QuantKernel.scale(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"graft.functions.Int8QuantKernel.scale($v)")
-  override protected def withNewChildInternal(c: Expression): Int8Scale = copy(child = c)
-}
-
-case class Int8Quantize(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_i8_quant requires ARRAY<FLOAT>, got ${t.sql}")
-  }
-  override def dataType: DataType = ArrayType(ByteType, containsNull = false)
-  override def prettyName: String = "graft_i8_quant"
-  override protected def nullSafeEval(v: Any): Any =
-    Int8QuantKernel.quantize(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"graft.functions.Int8QuantKernel.quantize($v)")
-  override protected def withNewChildInternal(c: Expression): Int8Quantize = copy(child = c)
-}
-
-case class Int8Dot(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(ByteType, _), ArrayType(ByteType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_i8_dot requires ARRAY<TINYINT> args, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_i8_dot"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Int8QuantKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Int8QuantKernel.dot($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Int8Dot =
-    copy(left = l, right = r)
-}
-
-case class Int8AbsSum(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(ByteType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_i8_abssum requires ARRAY<TINYINT>, got ${t.sql}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_i8_abssum"
-  override protected def nullSafeEval(v: Any): Any =
-    Int8QuantKernel.absSum(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"graft.functions.Int8QuantKernel.absSum($v)")
-  override protected def withNewChildInternal(c: Expression): Int8AbsSum = copy(child = c)
-}
-
 object QuantExpressions {
+  private val floats = ArrayType(FloatType)
+  private val bytes = ArrayType(ByteType)
+
   def i8Scale(v: Column): Column =
-    ColumnBridge.column(Int8Scale(ColumnBridge.expression(v)))
+    Kernel.column("graft_i8_scale", Int8QuantKernel, "scale", DoubleType,
+      Seq(v), Seq(floats))
   def i8Quantize(v: Column): Column =
-    ColumnBridge.column(Int8Quantize(ColumnBridge.expression(v)))
+    Kernel.column("graft_i8_quant", Int8QuantKernel, "quantize",
+      ArrayType(ByteType, containsNull = false), Seq(v), Seq(floats))
   def i8Dot(a: Column, b: Column): Column =
-    ColumnBridge.column(Int8Dot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.column("graft_i8_dot", Int8QuantKernel, "dot", LongType,
+      Seq(a, b), Seq(bytes, bytes))
   def i8AbsSum(v: Column): Column =
-    ColumnBridge.column(Int8AbsSum(ColumnBridge.expression(v)))
+    Kernel.column("graft_i8_abssum", Int8QuantKernel, "absSum", LongType,
+      Seq(v), Seq(bytes))
 }

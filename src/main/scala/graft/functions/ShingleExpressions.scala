@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -103,61 +100,16 @@ object ShingleKernels {
   }
 }
 
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles requires ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingles"
-  override protected def nullSafeEval(input: Any): Any =
-    ShingleKernels.shingles(input.asInstanceOf[ArrayData], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleKernels.shingles($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-}
-
-case class WindowHashes(child: Expression, w: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_window_hashes requires ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_window_hashes"
-  override protected def nullSafeEval(input: Any): Any =
-    ShingleKernels.windowHashes(input.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleKernels.windowHashes($c, $w)")
-  override protected def withNewChildInternal(newChild: Expression): WindowHashes =
-    copy(child = newChild)
-}
-
-case class JaccardSim(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_jaccard requires ARRAY<STRING> args, got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_jaccard"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ShingleKernels.jaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.ShingleKernels.jaccard($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardSim =
-    copy(left = l, right = r)
-}
-
 object ShingleExpressions {
+  private val tokenArray = ArrayType(StringType)
+
   def shingles(tokens: Column, n: Int): Column =
-    ColumnBridge.column(WordShingles(ColumnBridge.expression(tokens), n))
+    Kernel.column("graft_shingles", ShingleKernels, "shingles",
+      ArrayType(StringType, containsNull = false), Seq(tokens), Seq(tokenArray), Seq(n))
   def windowHashes(tokens: Column, w: Int): Column =
-    ColumnBridge.column(WindowHashes(ColumnBridge.expression(tokens), w))
+    Kernel.column("graft_window_hashes", ShingleKernels, "windowHashes",
+      ArrayType(LongType, containsNull = false), Seq(tokens), Seq(tokenArray), Seq(w))
   def jaccard(a: Column, b: Column): Column =
-    ColumnBridge.column(JaccardSim(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.column("graft_jaccard", ShingleKernels, "jaccard", DoubleType,
+      Seq(a, b), Seq(tokenArray, tokenArray))
 }

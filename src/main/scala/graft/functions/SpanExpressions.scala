@@ -2,11 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,7 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * covered by at least one duplicated window and re-emit the cleaned
   * text. The interval union runs as a difference-array sweep —
   * O(tokens + positions) per document, no quadratic HOF fold (the
-  * CdcChunks/BpeSegment promotion rule).
+  * CdcChunkKernel/BpeSegmentKernel promotion rule). Stateless and
+  * map-side: the heavy work (finding duplicated windows) happens in
+  * the surrounding plan; this kernel only merges intervals and
+  * rebuilds the string.
   */
 object SpanKernels {
 
@@ -68,44 +68,18 @@ object SpanKernels {
   }
 }
 
-/** (tokens ARRAY<STRING>, dup-window start positions ARRAY<INT>) →
-  * STRUCT(clean_text STRING, n_tokens BIGINT, n_removed BIGINT,
-  * n_spans BIGINT) under a literal window width. Stateless and
-  * map-side: the heavy work (finding duplicated windows) happens in
-  * the surrounding plan; this kernel only merges intervals and
-  * rebuilds the string.
-  */
-case class RemoveDupSpans(left: Expression, right: Expression, windowTokens: Int)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_remove_dup_spans requires (ARRAY<STRING>, ARRAY<INT>), got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = StructType(Seq(
-    StructField("clean_text", StringType, nullable = false),
-    StructField("n_tokens", LongType, nullable = false),
-    StructField("n_removed", LongType, nullable = false),
-    StructField("n_spans", LongType, nullable = false)))
-  override def prettyName: String = "graft_remove_dup_spans"
-
-  override protected def nullSafeEval(toks: Any, pos: Any): Any =
-    SpanKernels.removeSpans(toks.asInstanceOf[ArrayData], pos.asInstanceOf[ArrayData], windowTokens)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, p) =>
-      s"graft.functions.SpanKernels.removeSpans($t, $p, $windowTokens)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RemoveDupSpans =
-    copy(left = l, right = r)
-}
-
 object SpanExpressions {
-  /** Column API: remove the union of duplicated-window spans. */
+  /** Column API: remove the union of duplicated-window spans —
+    * (tokens ARRAY<STRING>, dup-window start positions ARRAY<INT>) →
+    * STRUCT(clean_text STRING, n_tokens BIGINT, n_removed BIGINT,
+    * n_spans BIGINT) under a literal window width.
+    */
   def removeDupSpans(tokens: Column, positions: Column, windowTokens: Int): Column =
-    ColumnBridge.column(RemoveDupSpans(
-      ColumnBridge.expression(tokens), ColumnBridge.expression(positions), windowTokens))
+    Kernel.column("graft_remove_dup_spans", SpanKernels, "removeSpans", StructType(Seq(
+        StructField("clean_text", StringType, nullable = false),
+        StructField("n_tokens", LongType, nullable = false),
+        StructField("n_removed", LongType, nullable = false),
+        StructField("n_spans", LongType, nullable = false))),
+      Seq(tokens, positions), Seq(ArrayType(StringType), ArrayType(IntegerType)),
+      Seq(windowTokens))
 }

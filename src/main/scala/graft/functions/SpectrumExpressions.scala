@@ -3,11 +3,7 @@ package graft.functions
 import java.math.{BigDecimal => JBig, RoundingMode}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native kernels for the distributed spectrum moment pass
@@ -22,7 +18,7 @@ import org.apache.spark.sql.types._
   * performs, just kept as the unscaled long — makes the aggregate a
   * plain codegen `sum(LONG)` and the explode a single generator over
   * a per-row long array. Bit-equality: Σ of the same integers; the
-  * [[DecScale12ToDouble]] read-back is java.math.BigDecimal.doubleValue
+  * [[dec12ToDouble]] read-back is java.math.BigDecimal.doubleValue
   * — exactly DECIMAL(38,12).cast(double). Callers must pre-check the
   * no-overflow bound n·max(q) < 2⁶² (see
   * [[graft.operators.Spectrum.topComponentModel]]'s guard; the legacy
@@ -71,95 +67,30 @@ object SpectrumKernels {
     val b = new JBig(java.lang.Double.toString(vj)).setScale(9, RoundingMode.HALF_UP)
     org.apache.spark.sql.types.Decimal(a.multiply(b), 37, 18)
   }
+
+  /** Matvec term for row `j` (0-based) with the iteration vector `v`
+    * carried as a REFERENCE OBJECT, not a literal array: every power
+    * iteration then generates byte-identical codegen source (the
+    * vector lives in the `references` slot), so Janino's cache
+    * compiles the matvec plan ONCE for all iterations — the
+    * per-iteration literal-array plan paid a fresh whole-stage compile
+    * (~0.3 s) every round.
+    */
+  def c9DotTerm(c9: Double, j: Int, v: Array[Double]): org.apache.spark.sql.types.Decimal =
+    c9Term(c9, v(j))
 }
 
 object SpectrumExpressions {
-
-  case class UpperTriQuant12(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_uppertri_q12 requires ARRAY<DOUBLE>, got ${other.sql}")
-    }
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "graft_uppertri_q12"
-    override protected def nullSafeEval(v: Any): Any =
-      SpectrumKernels.upperTriQ12(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.SpectrumKernels.upperTriQ12($c)")
-    override protected def withNewChildInternal(c: Expression): UpperTriQuant12 =
-      copy(child = c)
-  }
-
-  case class Quant12(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case DoubleType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_q12 requires DOUBLE, got ${other.sql}")
-    }
-    override def dataType: DataType = LongType
-    override def prettyName: String = "graft_q12"
-    override protected def nullSafeEval(v: Any): Any =
-      SpectrumKernels.q12(v.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.SpectrumKernels.q12($c)")
-    override protected def withNewChildInternal(c: Expression): Quant12 =
-      copy(child = c)
-  }
-
-  case class DecScale12ToDouble(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_dec12_double requires BIGINT, got ${other.sql}")
-    }
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "graft_dec12_double"
-    override protected def nullSafeEval(v: Any): Any =
-      SpectrumKernels.dec12ToDouble(v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.SpectrumKernels.dec12ToDouble($c)")
-    override protected def withNewChildInternal(c: Expression): DecScale12ToDouble =
-      copy(child = c)
-  }
-
-  /** Matvec term with the iteration vector `v` carried as a REFERENCE
-    * OBJECT, not a literal array: every power iteration then generates
-    * byte-identical codegen source (the vector lives in the
-    * `references` slot), so Janino's cache compiles the matvec plan
-    * ONCE for all iterations — the per-iteration literal-array plan
-    * paid a fresh whole-stage compile (~0.3 s) every round.
-    * `left` = c9 (DOUBLE), `right` = j (INT, 0-based).
-    */
-  case class C9DotTerm(left: Expression, right: Expression, v: Array[Double])
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (DoubleType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"graft_c9_dot_term requires (DOUBLE, INT), got (${l.sql}, ${r.sql})")
-      }
-    override def dataType: DataType = DecimalType(37, 18)
-    override def prettyName: String = "graft_c9_dot_term"
-    override protected def nullSafeEval(c9: Any, j: Any): Any =
-      SpectrumKernels.c9Term(c9.asInstanceOf[Double], v(j.asInstanceOf[Int]))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val vRef = ctx.addReferenceObj("vvec", v, "double[]")
-      defineCodeGen(ctx, ev, (c, j) =>
-        s"graft.functions.SpectrumKernels.c9Term($c, $vRef[$j])")
-    }
-    override protected def withNewChildrenInternal(l: Expression,
-        r: Expression): C9DotTerm = copy(left = l, right = r)
-  }
-
+  /** `left` = c9 (DOUBLE), `right` = j (INT, 0-based). */
   def c9DotTerm(c9: Column, j: Column, v: Array[Double]): Column =
-    ColumnBridge.column(C9DotTerm(ColumnBridge.expression(c9),
-      ColumnBridge.expression(j), v))
-
+    Kernel.column("graft_c9_dot_term", SpectrumKernels, "c9DotTerm", DecimalType(37, 18),
+      Seq(c9, j), Seq(DoubleType, IntegerType), Seq(v))
   def upperTriQ12(v: Column): Column =
-    ColumnBridge.column(UpperTriQuant12(ColumnBridge.expression(v)))
+    Kernel.column("graft_uppertri_q12", SpectrumKernels, "upperTriQ12",
+      ArrayType(LongType, containsNull = false), Seq(v), Seq(ArrayType(DoubleType)))
   def q12(v: Column): Column =
-    ColumnBridge.column(Quant12(ColumnBridge.expression(v)))
+    Kernel.column("graft_q12", SpectrumKernels, "q12", LongType, Seq(v), Seq(DoubleType))
   def dec12ToDouble(v: Column): Column =
-    ColumnBridge.column(DecScale12ToDouble(ColumnBridge.expression(v)))
+    Kernel.column("graft_dec12_double", SpectrumKernels, "dec12ToDouble", DoubleType,
+      Seq(v), Seq(LongType))
 }

@@ -4,10 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the keep threshold per word is `sqrt(t · total / cnt)` in IEEE
   * evaluated left-to-right, computed ONCE on the driver over the
   * vocabulary-sized frequency table and shipped as an
-  * `addReferenceObj` plan constant (the WordPiece-inventory /
+  * object-typed plan constant (the WordPiece-inventory /
   * BPE-merge collect precedent).
   *
   * 100 TB shape: ONE vocabulary-sized aggregation builds the model;
@@ -101,36 +98,13 @@ object SubsampleKernel {
   }
 }
 
-/** `graft_subsample(text, key)` → STRUCT<sub_text, n_kept, n_tokens>. */
-case class SubsampleTokens(left: Expression, right: Expression,
-    model: SubsampleKernel.Model) extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_subsample requires (STRING, STRING), got ${l.sql}, ${r.sql}")
-    }
-  override def dataType: DataType = StructType(Seq(
-    StructField("sub_text", StringType, nullable = false),
-    StructField("n_kept", IntegerType, nullable = false),
-    StructField("n_tokens", IntegerType, nullable = false)))
-  override def prettyName: String = "graft_subsample"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SubsampleKernel.subsample(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], model)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("subsampleModel", model,
-      "graft.functions.SubsampleKernel.Model")
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.SubsampleKernel.subsample($a, $b, $ref)")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SubsampleTokens =
-    copy(left = l, right = r)
-}
-
 object SubsampleExpressions {
+  /** `graft_subsample(text, key)` → STRUCT<sub_text, n_kept, n_tokens>. */
   def subsample(text: Column, key: Column,
       model: SubsampleKernel.Model): Column =
-    ColumnBridge.column(SubsampleTokens(
-      ColumnBridge.expression(text), ColumnBridge.expression(key), model))
+    Kernel.column("graft_subsample", SubsampleKernel, "subsample", StructType(Seq(
+        StructField("sub_text", StringType, nullable = false),
+        StructField("n_kept", IntegerType, nullable = false),
+        StructField("n_tokens", IntegerType, nullable = false))),
+      Seq(text, key), Seq(StringType, StringType), Seq(model))
 }

@@ -39,7 +39,7 @@ object Text {
     (length(c) - length(regexp_replace(c, classRegex, ""))).cast("long")
 
   /** Canonical text for content identity: Unicode NFC (native
-    * [[NfcNormalize]] kernel) → lowercase → whitespace runs collapsed
+    * [[NfcKernel]] kernel) → lowercase → whitespace runs collapsed
     * to one space → trim. The normalization a multilingual corpus
     * applies BEFORE hash dedup — precomposed/decomposed accents, case
     * and spacing variants of the same text all canonicalize to one

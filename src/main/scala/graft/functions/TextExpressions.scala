@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * elimination EXCLUDES any subtree containing a lambda
   * (NamedLambdaVariable), so a projection computing seven token-derived
   * metrics re-splits the text seven times when `tokens` is the
-  * `filter(split(...))` HOF. As plain unary expressions the shared
+  * `filter(split(...))` HOF. As a plain [[Kernel]] call the shared
   * `graft_tokens(text)` subtree is CSE-deduped to ONE evaluation per
   * row — the difference is ~2.5× on the q18 text-analysis query.
   * Semantics are bit-identical to the HOF formulations kept as
@@ -92,72 +88,24 @@ object TextKernels {
   }
 }
 
-case class WordTokens(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_tokens requires STRING, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_tokens"
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.tokens(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.tokens($c)")
-  override protected def withNewChildInternal(newChild: Expression): WordTokens =
-    copy(child = newChild)
-}
-
-case class CountInSet(child: Expression, words: Seq[String]) extends UnaryExpression {
-  @transient private lazy val set = TextKernels.toSet(words)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_count_in requires ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_count_in"
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.countIn(input.asInstanceOf[ArrayData], set)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("markerSet", set, "java.util.HashSet")
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.countIn($c, $setRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): CountInSet =
-    copy(child = newChild)
-}
-
-/** Per-row term-frequency vector over a FIXED term list (the BM25
-  * query terms): `ARRAY<BIGINT>` aligned to `terms` order. Terms must
-  * be distinct — duplicate slots would silently split counts.
-  */
-case class TermTfCounts(child: Expression, terms: Seq[String]) extends UnaryExpression {
-  require(terms.nonEmpty && terms.distinct == terms,
-    s"graft_term_tfs needs a non-empty, duplicate-free term list, got $terms")
-  @transient private lazy val idx = TextKernels.toIndex(terms)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_term_tfs requires ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_term_tfs"
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.termTfs(input.asInstanceOf[ArrayData], idx, terms.size)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val idxRef = ctx.addReferenceObj("termIdx", idx, "java.util.HashMap")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextKernels.termTfs($c, $idxRef, ${terms.size})")
-  }
-  override protected def withNewChildInternal(newChild: Expression): TermTfCounts =
-    copy(child = newChild)
-}
-
 object TextExpressions {
+  private val tokenArray = ArrayType(StringType)
+
   def tokens(text: Column): Column =
-    ColumnBridge.column(WordTokens(ColumnBridge.expression(text)))
+    Kernel.column("graft_tokens", TextKernels, "tokens",
+      ArrayType(StringType, containsNull = false), Seq(text), Seq(StringType))
   def countIn(tokens: Column, words: Seq[String]): Column =
-    ColumnBridge.column(CountInSet(ColumnBridge.expression(tokens), words))
-  def termTfs(tokens: Column, terms: Seq[String]): Column =
-    ColumnBridge.column(TermTfCounts(ColumnBridge.expression(tokens), terms))
+    Kernel.column("graft_count_in", TextKernels, "countIn", IntegerType,
+      Seq(tokens), Seq(tokenArray), Seq(TextKernels.toSet(words)))
+  /** Per-row term-frequency vector over a FIXED term list (the BM25
+    * query terms): `ARRAY<BIGINT>` aligned to `terms` order. Terms must
+    * be distinct — duplicate slots would silently split counts.
+    */
+  def termTfs(tokens: Column, terms: Seq[String]): Column = {
+    require(terms.nonEmpty && terms.distinct == terms,
+      s"graft_term_tfs needs a non-empty, duplicate-free term list, got $terms")
+    Kernel.column("graft_term_tfs", TextKernels, "termTfs",
+      ArrayType(LongType, containsNull = false), Seq(tokens), Seq(tokenArray),
+      Seq(TextKernels.toIndex(terms), terms.size))
+  }
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -53,6 +49,12 @@ object UnigramLmModel {
   val Big = 1000000000000000L
 }
 
+/** Viterbi segmentation (word STRING → pieces ARRAY<STRING>) under a
+  * literal [[UnigramLmModel]]. Stateless and map-side (the
+  * [[WordPieceKernel]] shape): tokenizer application is automatically
+  * streaming-capable, and segmenting the DISTINCT-word table means the
+  * corpus never re-segments.
+  */
 object UnigramKernel {
   /** Viterbi segmentation of one word under a [[UnigramLmModel]]:
     * cost[j] = min over piece length l of cost[j−l] + nlp(w[j−l, j)),
@@ -103,37 +105,9 @@ object UnigramKernel {
   }
 }
 
-/** word STRING → Viterbi pieces ARRAY<STRING> under a literal
-  * [[UnigramLmModel]]. Stateless and map-side (the [[WordPieceSegment]]
-  * shape): tokenizer application is automatically streaming-capable,
-  * and segmenting the DISTINCT-word table means the corpus never
-  * re-segments.
-  */
-case class UnigramSegment(child: Expression, model: UnigramLmModel)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_unigram_segment requires STRING, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_unigram_segment"
-
-  override protected def nullSafeEval(input: Any): Any =
-    UnigramKernel.viterbi(input.asInstanceOf[UTF8String], model)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("unigramLm", model, "graft.functions.UnigramLmModel")
-    defineCodeGen(ctx, ev, c => s"graft.functions.UnigramKernel.viterbi($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UnigramSegment =
-    copy(child = newChild)
-}
-
 object UnigramExpressions {
   /** Column API: Viterbi-segment a word column under a trained model. */
   def unigramSegment(word: Column, model: UnigramLmModel): Column =
-    ColumnBridge.column(UnigramSegment(ColumnBridge.expression(word), model))
+    Kernel.column("graft_unigram_segment", UnigramKernel, "viterbi",
+      ArrayType(StringType, containsNull = false), Seq(word), Seq(StringType), Seq(model))
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -31,6 +27,12 @@ final class WordPieceVocab(pieces: Array[String]) extends Serializable {
     if (pieces.isEmpty) 1 else pieces.iterator.map(_.length).max
 }
 
+/** Segmentation (word STRING → pieces ARRAY<STRING>) under a literal
+  * [[WordPieceVocab]]. Stateless and map-side — tokenizer application
+  * is automatically streaming-capable, and segmenting the
+  * DISTINCT-word table (a pure function of the word) means the corpus
+  * never re-segments (the q102 rollup shape).
+  */
 object WordPieceKernel {
   /** Greedy longest-match segmentation of one word: at each position
     * take the LONGEST vocab piece starting there (≤ maxLen chars);
@@ -58,37 +60,9 @@ object WordPieceKernel {
   }
 }
 
-/** word STRING → pieces ARRAY<STRING> under a literal
-  * [[WordPieceVocab]]. Stateless and map-side — tokenizer application
-  * is automatically streaming-capable, and segmenting the
-  * DISTINCT-word table (a pure function of the word) means the corpus
-  * never re-segments (the q102 rollup shape).
-  */
-case class WordPieceSegment(child: Expression, vocab: WordPieceVocab)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_wordpiece requires STRING, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_wordpiece"
-
-  override protected def nullSafeEval(input: Any): Any =
-    WordPieceKernel.segment(input.asInstanceOf[UTF8String], vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wpVocab", vocab, "graft.functions.WordPieceVocab")
-    defineCodeGen(ctx, ev, c => s"graft.functions.WordPieceKernel.segment($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WordPieceSegment =
-    copy(child = newChild)
-}
-
 object WordPieceExpressions {
   /** Column API: segment a word column under a piece inventory. */
   def wordPiece(word: Column, vocab: WordPieceVocab): Column =
-    ColumnBridge.column(WordPieceSegment(ColumnBridge.expression(word), vocab))
+    Kernel.column("graft_wordpiece", WordPieceKernel, "segment",
+      ArrayType(StringType, containsNull = false), Seq(word), Seq(StringType), Seq(vocab))
 }

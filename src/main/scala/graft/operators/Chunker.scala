@@ -105,7 +105,7 @@ object Chunker {
 
   /** Explode docs into content-defined (idCol, chunk_idx, chunk,
     * n_tokens) rows — [[chunk]]'s schema, CDC boundaries. Runs on
-    * the native [[graft.functions.CdcChunks]] kernel (one linear
+    * the native [[graft.functions.CdcChunkKernel]] kernel (one linear
     * pass per doc); [[chunkArrayContentDefined]] is the composable
     * spec it is property-tested against — the fold form copies its
     * accumulator per token (O(tokens²)/doc), wrong for the multi-KB

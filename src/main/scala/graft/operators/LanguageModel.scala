@@ -190,7 +190,7 @@ object LanguageModel {
     // driver from the same rows — identical integers), then a
     // stateless kernel projection — replaces FOUR broadcast builds
     // whose subtrees each re-scanned the training corpus per serve
-    // (guide §5/§2: the model rides `addReferenceObj`, never a join).
+    // (guide §5/§2: the model rides a plan constant, never a join).
     // Declarative form kept below as the executable spec
     // ([[perplexityKneserNeyHof]]; LanguageModelSpec locks equality).
     // Trained fresh per call — no cross-run memoization.

@@ -51,7 +51,7 @@ object Retrieval {
     require(terms.nonEmpty, "BM25 needs at least one query term")
     // per-doc state in ONE token pass: the tf VECTOR (term i →
     // occurrences) comes from the native single-scan kernel
-    // (TermTfCounts: O(dl + T) per doc), not T separate
+    // (graft_term_tfs: O(dl + T) per doc), not T separate
     // size(filter(...)) HOFs (O(dl · T) — each term re-walks the
     // whole token array), so cost stays flat as the query grows from
     // 3 to 100 terms

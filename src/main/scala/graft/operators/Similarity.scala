@@ -38,7 +38,7 @@ import graft.core.OpCache.TrackedPersist
 object Similarity {
 
   /** Σ aᵢ·bᵢ over float vectors — native loop kernel
-    * (graft.functions.DotProduct); [[dotHof]] is the bit-identical
+    * (graft.functions.DotFastKernel); [[dotHof]] is the bit-identical
     * composable formulation it is tested against.
     */
   def dot(a: Column, b: Column): Column =
@@ -62,7 +62,7 @@ object Similarity {
     * is identical at any parallelism and on any engine — the
     * oracle-parity twin of [[dot]] (same rationale as
     * [[graft.core.Exact]]). Runs as a native kernel
-    * ([[graft.functions.DotExact]]); [[dotExactHof]] is the
+    * ([[graft.functions.DotExactKernel]]); [[dotExactHof]] is the
     * formulation it is tested bit-identical against.
     */
   def dotExact(a: Column, b: Column): Column =
@@ -1012,20 +1012,6 @@ object Similarity {
     */
   private def nearestCell(vec: Column, cents: Array[Array[Double]]): Column =
     graft.functions.CentroidExpressions.nearest(vec, cents)
-
-  /** The HOF formulation [[nearestCell]] is kernel-locked against
-    * (CentroidKernelSpec) — kept as the executable spec of the
-    * argmin/tie semantics.
-    */
-  private[operators] def nearestCellHof(vec: Column,
-      cents: Array[Array[Double]]): Column = {
-    val dists = array(cents.map { c =>
-      aggregate(
-        zip_with(vec, lit(c), (x, w) => { val t = x.cast("double") - w; t * t }),
-        lit(0.0), (s, v) => s + v)
-    }.toIndexedSeq: _*)
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-  }
 
   /** Sign-pattern LSH with DATA-DERIVED hyperplanes: bit i of the
     * bucket = [v·seedᵢ ≥ 0] with the decimal-exact dot, so the

@@ -345,7 +345,7 @@ object Spectrum {
         // to ≤ d rows before the d-key shuffle; exact decimal products
         // ((18,9)×(18,9) → (37,18), no rounding) match the driver
         // path's BigDecimal multiply-add term for term. v rides as a
-        // REFERENCE OBJECT (C9DotTerm), not a literal array — the
+        // REFERENCE OBJECT (graft_c9_dot_term), not a literal array — the
         // per-iteration plan codegens to byte-identical source, so
         // Janino compiles the matvec ONCE for all iterations (the
         // literal-array form paid a fresh ~0.3 s whole-stage compile

@@ -11,7 +11,7 @@ import graft.functions.{SubsampleExpressions, SubsampleKernel, TextExpressions}
   *
   *  1. FIT: one explode+groupBy builds the vocabulary-sized frequency
   *     table; the per-word keep thresholds `sqrt(t · total / cnt)`
-  *     are computed on the driver and become an `addReferenceObj`
+  *     are computed on the driver and become an object-typed
   *     plan constant (model-sized by Heaps' law — the BPE-merge /
   *     WordPiece-inventory collect precedent).
   *  2. APPLY: a pure per-row projection ([[graft.functions

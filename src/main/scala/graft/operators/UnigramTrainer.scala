@@ -41,7 +41,7 @@ import graft.functions.{UnigramExpressions, UnigramLmModel}
   * distinct substrings); each EM round is a map-side segmentation
   * under a plan-constant model plus a map-side-combinable count;
   * driver traffic is one model-sized collect per round (the
-  * [[BpeTrainer]] contract — models ride `addReferenceObj`, never
+  * [[BpeTrainer]] contract — models ride a plan constant, never
   * a join).
   */
 object UnigramTrainer {

@@ -476,7 +476,7 @@ object Queries {
   }
 
   /** Document fingerprint (position-weighted rolling checksum) via the
-    * native codegen'd expression (graft.functions.Fingerprint) — same
+    * native codegen'd kernel (graft.functions.FingerprintKernel) — same
     * semantics as the HOF formulation (equivalence is unit-tested),
     * one tight loop instead of a per-character array.
     */
@@ -2511,7 +2511,7 @@ object Queries {
     * inspect vocab mass) as one plan. Segmentation runs on the
     * DISTINCT-word table (a pure function of the word, so the corpus
     * never re-segments — word freq weights the rollup), via the
-    * native [[graft.functions.BpeSegment]] kernel (codegen'd single
+    * native [[graft.functions.BpeSegmentKernel]] kernel (codegen'd single
     * pass; ≡ [[BpeTrainer.applyMerges]]'s fold, property-tested). The oracle
     * extends q99's 12-round unroll: the final word table's symbols,
     * unnested and weighted by word frequency. Top-100 subwords by
@@ -2962,7 +2962,7 @@ object Queries {
       graft.functions.BigramLm(rows, vocab.head().getLong(0))
     })
 
-  /** STREAMING LM perplexity scoring ([[graft.functions.BigramPpl]]):
+  /** STREAMING LM perplexity scoring ([[graft.functions.LmKernel]]):
     * q114's scoring stage on a document stream — the trained model
     * rides the plan as a reference constant (the CCNet model-file
     * deployment shape), so scoring is a stateless map-side
@@ -3207,7 +3207,7 @@ object Queries {
         rows(Dsir.fitBucketCounts(d.filter(!isTarget), "text", 1024)), 1024)
     })
 
-  /** STREAMING DSIR scoring ([[graft.functions.DsirLogWeight]]):
+  /** STREAMING DSIR scoring ([[graft.functions.DsirKernel]]):
     * q118's importance-weight stage on a document stream — the fitted
     * bucket model rides the plan as a reference constant (80 KB of
     * dense λ longs), so scoring a live crawl is a stateless map-side
@@ -3255,7 +3255,7 @@ object Queries {
       .orderBy("lang", "pick")
   }
 
-  /** WordPiece greedy segmentation ([[graft.functions.WordPieceSegment]]):
+  /** WordPiece greedy segmentation ([[graft.functions.WordPieceKernel]]):
     * derive a subword inventory from corpus character statistics (all
     * single chars + top-150 char bigrams + top-100 trigrams + top-50
     * 4-grams, frequency-weighted), segment the DISTINCT-word table

@@ -116,4 +116,39 @@ class FingerprintExpressionSpec extends SparkSpec {
     assert(sql === api)
     assert(sql === Seq("abc", "bc"))
   }
+
+  test("a kernel keeps its graft_* name in plans and column names") {
+    // a Range input, so the projection is not folded into a LocalRelation
+    val in = spark.range(2).select($"id".cast("string").as("t"))
+    // un-aliased: the default column name is the SQL form
+    assert(in.select(TextExpressions.tokens($"t")).columns.toSeq === Seq("graft_tokens(t)"))
+    val plan = in.select(TextExpressions.tokens($"t").as("toks"))
+      .queryExecution.optimizedPlan.toString
+    assert("graft_tokens\\(".r.findAllIn(plan).size === 1, plan)
+    assert(!plan.toLowerCase.contains("staticinvoke"), plan)
+    assert(!plan.contains("TextKernels$"), plan)
+  }
+
+  test("a wrongly typed kernel argument fails at analysis, naming the type") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq(1L).toDF("id").select(TextExpressions.tokens($"id")))
+    assert(e.getMessage.contains("graft_tokens(id)"), e.getMessage)
+    assert(e.getMessage.contains("\"STRING\""), e.getMessage)
+  }
+
+  test("kernels built separately from equal parameters are equal expressions") {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.expression
+    val t = $"t"
+    def same(a: => org.apache.spark.sql.Column): Unit = {
+      val (x, y) = (expression(a), expression(a))
+      assert(x === y && x.hashCode === y.hashCode && x.semanticEquals(y))
+    }
+    same(TextExpressions.countIn(t, Seq("a", "b")))
+    same(TextExpressions.termTfs(t, Seq("a", "b")))
+    same(AcExpressions.acMatches(t, Seq("x y", "z")))
+    same(BpeExpressions.bpeSegment(t, Seq(("l", "o"), ("lo", "w"))))
+    same(NgramExpressions.tokenNgramStrings(t, 3))
+    assert(expression(NgramExpressions.tokenNgramStrings(t, 3)) !==
+      expression(NgramExpressions.tokenNgramStrings(t, 2)))
+  }
 }
