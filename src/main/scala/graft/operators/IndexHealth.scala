@@ -34,8 +34,10 @@ import org.apache.spark.sql.functions._
   *
   * Both manifest layouts are supported — lexical/positional
   * (`id, gen, slice, batch_key`) and ANN (`neighbor_id, ...`); the
-  * id column is auto-detected. Generation 0 never appears in a
-  * manifest (base rows are never tombstoned), so every row counts.
+  * id column is auto-detected. The manifest itself — its layout,
+  * commit protocol and serve-side filters — is [[IndexManifest]].
+  * Generation 0 never appears in a manifest (base rows are never
+  * tombstoned), so every row counts.
   */
 object IndexHealth {
 
@@ -46,26 +48,14 @@ object IndexHealth {
     */
   val BytesPerTombstonedId = 24L
 
-  private def manifest(spark: SparkSession,
-      path: String): Option[(DataFrame, String)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val t = spark.read.parquet(p.toString)
-      val idCol = if (t.columns.contains("neighbor_id")) "neighbor_id"
-        else "id"
-      Some((t, idCol))
-    }
-  }
-
   /** ONE row: (n_generations, max_gen, n_committed_slices,
     * n_tombstone_rows, n_tombstoned_ids, est_broadcast_bytes) — all
     * BIGINT, all zeros for an index with no manifest (never appended,
     * or freshly compacted).
     */
   def report(spark: SparkSession, path: String): DataFrame =
-    manifest(spark, path).map { case (t, idCol) =>
+    IndexManifest.read(spark, path).map { t =>
+      val idCol = IndexManifest.idColumn(t)
       t.agg(
         count_distinct(col("gen")).as("n_generations"),
         coalesce(max(col("gen")), lit(0L)).as("max_gen"),
@@ -110,178 +100,4 @@ object IndexHealth {
           "flip the pointer.")
     }
   }
-}
-
-/** Manifest-tier plumbing shared by BOTH index families (the lexical
-  * `Retrieval` and the ANN `Similarity` manifests have identical
-  * (gen, slice, batch_key) columns — only the id column differs), so
-  * the fingerprints, caches and the single-writer check have exactly
-  * ONE definition (the same desynchronization argument as the shared
-  * query fixtures, ADVICE r19 — applied to the operators themselves).
-  */
-private[operators] object ManifestOps {
-
-  /** Cheap filesystem fingerprint of a manifest-sized directory —
-    * file names + lengths + modification times, sorted. One LIST
-    * call (no Spark job); any append/delete/compact/rebuild changes
-    * it, which is what keys the serve-state caches. "none" when the
-    * directory does not exist.
-    */
-  def dirSig(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "none"
-    else fs.listStatus(p)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-  }
-
-  /** Stable per-session cache token: a UUID assigned on first use,
-    * held WEAKLY — a stopped/collected session's token is never
-    * reissued (unlike identityHashCode, which the JVM reuses after
-    * GC), so a new session can never hit a dead session's cached
-    * plans; the dead entries age out of the bounded LRUs.
-    */
-  private val sessionToken = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-  def tokenOf(spark: SparkSession): String =
-    sessionToken.computeIfAbsent(spark,
-      _ => java.util.UUID.randomUUID().toString)
-
-  /** Unambiguous cache key from components: each part is
-    * LENGTH-PREFIXED before joining, so no delimiter that may also
-    * appear INSIDE a part (dirSig itself joins file entries with '|')
-    * can make two distinct (…, tombstones-sig, stats-sig, …) states
-    * collide onto one key (ADVICE r20).
-    */
-  def cacheKey(parts: Any*): String =
-    parts.map { p => val s = String.valueOf(p); s"${s.length}:$s" }
-      .mkString("|")
-
-  /** Small synchronized LRU; use with [[cached]]. */
-  def lruCache[V](cap: Int): java.util.Map[String, V] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, V]): Boolean = size > cap
-      })
-
-  /** Cache lookup that computes MISSES OUTSIDE the map mutex: a
-    * cache fill runs Spark jobs (manifest collects, stats heads),
-    * and holding the single synchronized-map lock through them would
-    * stall every concurrent serve — including warm hits on OTHER
-    * indexes. A racing duplicate computation is idempotent and
-    * last-write-wins.
-    */
-  def cached[V](map: java.util.Map[String, V], key: String)(f: => V): V = {
-    val hit = map.get(key)
-    if (hit != null) hit
-    else { val v = f; map.put(key, v); v }
-  }
-
-  /** POST-COMMIT single-writer verification (VERDICT r19 item 1):
-    * re-read the manifest and fail LOUDLY if a foreign slice shares
-    * this commit's generation — the signature of two concurrent
-    * writers that both read-max-plus-one'd the generation clock.
-    * Full CAS is out of scope for a parquet-directory manifest; this
-    * closes the SILENT half of the hole at O(manifest) cost — with
-    * the caveat (ADVICE r20) that only AT LEAST ONE writer is
-    * guaranteed to raise: the first committer's post-commit read can
-    * land before the second commit exists, so a caller must NOT
-    * treat its own successful append as proof that no collision
-    * happened (the collision surfaces loudly, but possibly in the
-    * OTHER writer's process). The
-    * corruption (ambiguous supersede order within the shared
-    * generation) is still on disk, but both writers raise with both
-    * nonces named. Recovery: serve `asOfGen = gen − 1` (still exact
-    * — the shared generation's rows are ALL later than it) and
-    * re-apply both deltas serially, or compact from that pin.
-    */
-  def verifySoleWriter(spark: SparkSession, path: String,
-      gen: Long, slice: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val foreign = if (!fs.exists(p)) Seq.empty else
-      spark.read.parquet(p.toString)
-        .filter(col("gen") === gen && col("slice") =!= slice)
-        .select(col("slice")).distinct().take(3).map(_.getString(0)).toSeq
-    if (foreign.nonEmpty)
-      throw new IllegalStateException(
-        s"commit-manifest writer collision at $path: generation $gen " +
-          s"was committed by this writer (slice $slice) AND by foreign " +
-          s"slice(s) ${foreign.mkString(", ")} — two concurrent " +
-          "appenders/deleters raced the generation clock. Recover by " +
-          s"serving asOfGen = ${gen - 1} and re-applying both deltas " +
-          "serially, or compact from that pinned state.")
-  }
-}
-
-/** COMPACTION LINEAGE — the retention contract of
-  * write-new-flip-pointer compaction, made explicit (VERDICT r19
-  * item 3). A compacted index starts a FRESH generation clock
-  * (gen 0, no manifest), which is correct for serving but severs the
-  * link to the source: a training run pinned to `asOfGen = N` of the
-  * OLD index must keep re-serving from the OLD path — compaction
-  * never rewrites or invalidates it — until every pinned run is
-  * retired, and only then may the old path be dropped. This sidecar
-  * records where the compacted state came from: ONE row
-  * (src_path, src_gen — the source's final committed generation,
-  * n_live — the live doc/vector count that was folded in), written
-  * as one file by every compactor. `indexHistory` on the compacted
-  * index surfaces it as a generation-0 row with batch_key
-  * `compact:gen=<src_gen>` (path deliberately omitted there — kept
-  * in [[read]] — so history output stays environment-independent).
-  */
-object IndexLineage {
-
-  /** Written by the four compactors after their data writes. */
-  private[operators] def write(spark: SparkSession, srcPath: String,
-      dstPath: String, nLive: Long): Unit = {
-    import spark.implicits._
-    val tp = new org.apache.hadoop.fs.Path(s"$srcPath/tombstones")
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the source's final committed generation = the pin ceiling a
-    // run could hold against the old path (gen/slice layout is
-    // shared by both tiers' manifests)
-    val srcGen = if (!fs.exists(tp)) 0L
-      else spark.read.parquet(tp.toString)
-        .agg(coalesce(max(col("gen")), lit(0L))).head().getLong(0)
-    Seq((srcPath, srcGen, nLive)).toDF("src_path", "src_gen", "n_live")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dstPath/lineage")
-  }
-
-  /** Full lineage row(s) of a compacted index — empty frame (same
-    * schema) when the index was never compacted-into.
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/lineage")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(p.toString)
-    else spark.range(0).select(lit("").as("src_path"),
-      lit(0L).as("src_gen"), lit(0L).as("n_live"))
-  }
-
-  /** The lineage row in `indexHistory`'s (gen, batch_key, n_docs)
-    * shape, if this index was produced by a compactor.
-    */
-  private[operators] def historyRow(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/lineage")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(p.toString).select(
-      lit(0L).as("gen"),
-      concat(lit("compact:gen="), col("src_gen")).as("batch_key"),
-      col("n_live").as("n_docs")))
-  }
-
-  /** Prepend the lineage row (when present) to a manifest history
-    * frame and order by generation — the shared tail of both tiers'
-    * `indexHistory`.
-    */
-  private[operators] def withHistory(spark: SparkSession, path: String,
-      hist: DataFrame): DataFrame =
-    historyRow(spark, path)
-      .map(_.unionByName(hist)).getOrElse(hist)
-      .orderBy(col("gen"))
 }

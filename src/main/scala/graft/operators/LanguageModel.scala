@@ -34,25 +34,6 @@ import graft.functions.Text
   */
 object LanguageModel {
 
-  /** Run independent model-sized collects CONCURRENTLY from a bounded
-    * driver pool (guide §2.6, the pqTrainCodebooks precedent): the
-    * broadcast builds they replace ran as concurrent futures, and a
-    * sequential chain of blocking collects would give that overlap
-    * back (the round-21 "persist is a serializing barrier" lesson).
-    */
-  private def collectConcurrently[A](thunks: (() => A)*): Seq[A] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(thunks.map(t =>
-          scala.concurrent.Future(t()))),
-        scala.concurrent.duration.Duration.Inf)
-    } catch { case e: Throwable => pool.shutdownNow(); throw e
-    } finally { pool.shutdown(); () }
-  }
-
   private[graft] def bigrams(df: DataFrame, textCol: String, keep: Column*): DataFrame = {
     // one codegen kernel pass per doc ([[graft.functions.NgramKernels
     // .pairs]]) instead of the interpreted zip_with-of-slices tree
@@ -114,7 +95,7 @@ object LanguageModel {
     // the driver first), minus three broadcast-build jobs and the
     // per-doc-bigram explode/join/groupBy per serve. Trained fresh
     // per call — no cross-run memoization.
-    val collected = collectConcurrently(
+    val collected = graft.core.DriverPool.collectConcurrently(
       () => bigramCounts.collect().map(r => (r.getAs[String]("w1"),
         r.getAs[String]("w2"), r.getAs[Long]("cnt"))): AnyRef,
       () => java.lang.Long.valueOf(vocab.head().getLong(0)): AnyRef)
@@ -316,7 +297,7 @@ object LanguageModel {
     // corpus per serve. Declarative form kept below as the executable
     // spec ([[perplexityTrigramHof]]; LanguageModelSpec locks
     // equality). Trained fresh per call — no cross-run memoization.
-    val collected = collectConcurrently(
+    val collected = graft.core.DriverPool.collectConcurrently(
       () => tri.collect().map(r => (r.getAs[String]("w1"), r.getAs[String]("w2"),
         r.getAs[String]("w3"), r.getAs[Long]("cnt3"))): AnyRef,
       () => bi.collect().map(r => (r.getAs[String]("w1"), r.getAs[String]("w2"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.{Text, TextExpressions}
 import graft.core.OpCache.TrackedPersist
+import graft.operators.IndexManifest.BaseSlice
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -320,183 +321,20 @@ object Retrieval {
       lit(slice).as("_slice"),
       pmod(hash(col("id")), lit(nBuckets)).as("bucket"))
 
-  /** The base build's slice label — always committed by definition
-    * (overwrite semantics: a base write either completes or the
-    * index does not exist). */
-  private val BaseSlice = "base"
+  /** The lexical tier's manifest id column ([[IndexManifest]]). */
+  private val ManifestId = "id"
 
-  /** The tombstone sidecar if any append has happened, else None —
-    * a base index's serving plan stays byte-identical to pre-append
-    * (no join or slice filter is added until the first tombstone
-    * exists). Mirrors `Similarity.readTombstones` (the ANN tier,
-    * q207). The tombstone table doubles as the COMMIT MANIFEST:
-    * (id, gen, slice, batch_key) rows, written LAST by every append.
-    */
-  private def readTombstones(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
+  private def serveState(spark: SparkSession, path: String,
+      asOf: Long = Long.MaxValue, sig0: String = null) =
+    IndexManifest.serveState(spark, path, ManifestId, asOf, sig0)
 
-  private def deleteDir(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  /** Everything serving needs from the tombstone/commit manifest, in
-    * ONE slim read: the committed slice labels (+ "base") and the
-    * max tombstone generation per re-ingested id. Both are
-    * manifest-sized (cumulative appends / re-ingests), the same
-    * bounded-collect discipline as the probe-bucket jobs.
-    */
-  private case class TombState(committed: Seq[String], tmax: DataFrame)
-
-  /** Small LRUs keyed on (session token, path, asOf, manifest
-    * fingerprint — `ManifestOps.dirSig`): [[TombState]] and the
-    * serve stats are per-INDEX-STATE, not per-query (VERDICT r19
-    * item 6) — a high-QPS serving loop was paying the manifest's
-    * distinct-slice collect, the stats head and the stale-stats
-    * probe on EVERY call. The fingerprint key self-invalidates on
-    * any manifest/stats change (the writers never mutate files in
-    * place — append/overwrite only), so a hit is always the current
-    * state; 64 entries bound the footprint (cached values are a
-    * slice-label list, a lazy tmax plan and five longs — no
-    * corpus-sized object). Cache fills run OUTSIDE the map mutex
-    * (`ManifestOps.cached`) so one cold index never stalls warm
-    * serves of others.
-    */
-  private val tombCache = ManifestOps.lruCache[TombState](64)
-  private val statsCache = ManifestOps.lruCache[(Long, Long, Int, Long, Long)](64)
-
-  /** Drop all cached serve state (spec isolation). */
-  private[graft] def clearServeCaches(): Unit = {
-    tombCache.clear(); statsCache.clear()
-  }
-
-  /** `asOf` = TIME TRAVEL: consider only manifest rows with
-    * gen ≤ asOf, so slices committed later — and deletes issued
-    * later — are invisible, reproducing the index state a past
-    * reader saw (generation numbers are the index's commit clock).
-    * Cached per (path, asOf, manifest fingerprint) — repeated serves
-    * of an unchanged index pay the manifest read once. `sig0` lets a
-    * caller that also caches DERIVED state (the serve stats) pin the
-    * SAME fingerprint for both reads: re-listing inside could see a
-    * newer manifest and file state-S1 values under a state-S2 key
-    * (the TOCTOU a concurrent appender opens).
-    */
-  private def tombState(spark: SparkSession, path: String,
-      asOf: Long = Long.MaxValue,
-      sig0: String = null): Option[TombState] = {
-    val sig = Option(sig0).getOrElse(
-      ManifestOps.dirSig(spark, s"$path/tombstones"))
-    if (sig == "none") None
-    else Some(ManifestOps.cached(tombCache,
-      ManifestOps.cacheKey(ManifestOps.tokenOf(spark), asOf, path, sig)) {
-        val raw = spark.read.parquet(s"$path/tombstones")
-        val t = if (asOf == Long.MaxValue) raw
-          else raw.filter(col("gen") <= asOf)
-        val committed = t.select(col("slice")).distinct()
-          .collect().map(_.getString(0)).toSeq :+ BaseSlice
-        TombState(committed, t.groupBy("id").agg(max("gen").as("_tg")))
-      })
-  }
-
-  /** Keep only rows of COMMITTED slices — the exactly-once half of
-    * the lifecycle: an append attempt that died before its tombstone
-    * write left rows whose `_slice` nonce never reached the manifest,
-    * and this filter makes them permanently invisible (the retry
-    * writes fresh rows under a NEW nonce). A conjunctive data filter
-    * on the scan: pushes to parquet, never disturbs the bucket
-    * partition prune.
-    *
-    * ON-DISK FORMAT note (ADVICE r19): serving requires `_slice` on
-    * the data rows and `slice`/`batch_key` on the manifest — the
-    * slice-commit layout every writer in this version produces. An
-    * index APPENDED under the pre-slice-commit layout fails here
-    * with an AnalysisException on the missing column; REBUILD it
-    * ([[writeInvertedIndex]]/[[writePositionalIndex]]) rather than
-    * migrating in place. A never-appended base index has no manifest
-    * and never reaches this filter.
-    */
-  private def committedRows(rows: DataFrame,
-      ts: Option[TombState]): DataFrame =
-    ts.map(s => rows.filter(col("_slice").isin(s.committed: _*)))
-      .getOrElse(rows)
-
-  /** [[committedRows]] + drop rows superseded by a NEWER tombstone
-    * for their id. The supersede must be an id-level broadcast
-    * filter, not a within-partition dedup: a re-crawled doc's stale
-    * postings live under the STALE text's term buckets (resp. the
-    * stale doc-hash bucket), which the replacement's partitions
-    * never touch — the exact argument at `Similarity.scala` (q207's
-    * tombstone supersede), lexical edition. Rows whose `_gen` equals
-    * their id's max tombstone generation are the replacement itself
-    * and survive.
-    */
-  private def liveRows(rows: DataFrame,
-      ts: Option[TombState]): DataFrame =
-    ts.map { s =>
-      committedRows(rows, ts)
-        .join(broadcast(s.tmax), Seq("id"), "left")
-        .filter(col("_tg").isNull || col("_gen") >= col("_tg"))
-        .drop("_tg")
-    }.getOrElse(rows)
-
-  /** Next generation stamp for an append at `path`: one past the
-    * newest COMMITTED tombstone (0-generation base rows are never
-    * tombstoned, so the first append is generation 1). A failed
-    * attempt never reached the manifest, so its retry recomputes the
-    * SAME generation — harmless, because the orphan rows differ by
-    * slice nonce and stay uncommitted forever.
-    *
-    * SINGLE-WRITER contract: this is read-max-plus-one, not a CAS —
-    * two writers that both read the manifest before either commits
-    * compute the SAME generation, and supersede order between their
-    * rows is undefined. Every committer therefore runs
-    * [[verifySoleWriter]] after its manifest write, turning the
-    * silent corruption into a loud post-commit failure.
-    */
-  private def nextGen(spark: SparkSession, path: String): Long =
-    1L + readTombstones(spark, path)
-      .map(_.agg(coalesce(max("gen"), lit(0L))).head().getLong(0))
-      .getOrElse(0L)
-
-  /** True iff `batchKey` already appears in the commit manifest —
-    * the idempotent-re-delivery guard for streaming ingest. */
-  private def batchCommitted(spark: SparkSession, path: String,
-      batchKey: String): Boolean =
-    readTombstones(spark, path).exists(
-      _.filter(col("batch_key") === batchKey).take(1).nonEmpty)
-
-  /** Post-commit single-writer verification — ONE shared definition
-    * for both manifest layouts (`ManifestOps.verifySoleWriter`,
-    * VERDICT r19 item 1): raise loudly, both nonces named, if a
-    * foreign slice shares this commit's generation.
-    */
-  private[graft] def verifySoleWriter(spark: SparkSession, path: String,
-      gen: Long, slice: String): Unit =
-    ManifestOps.verifySoleWriter(spark, path, gen, slice)
-
-  /** Create an EMPTY commit manifest (schema, zero rows) before the
-    * FIRST append's data writes. Without it, a first append dying
-    * mid-write would leave orphan rows indistinguishable from a
-    * never-appended base index — whose fast path skips the committed
-    * filter. With it, the manifest's existence flips serving to
-    * committed-slices mode BEFORE any uncommitted row can exist; a
-    * base index that has never seen an append keeps its
-    * filter-free plan.
-    */
-  private def ensureManifest(ids: DataFrame, path: String): Unit = {
-    val spark = ids.sparkSession
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      ids.select(col("id"), lit(0L).as("gen"), lit("").as("slice"),
-          lit(null).cast("string").as("batch_key"))
-        .limit(0).write.mode("append").parquet(p.toString)
-  }
+  /** Serve stats LRU keyed on (session token, asOf, path, manifest
+    * fingerprint, stats fingerprint): the corrected (N, total_len)
+    * are per-INDEX-STATE, not per-query (VERDICT r19 item 6), on the
+    * same self-invalidating discipline as the manifest serve state
+    * (five longs per entry). */
+  private val statsCache =
+    IndexManifest.lruCache[(Long, Long, Int, Long, Long)](64)
 
   /** STORED INVERTED INDEX — the lexical twin of the stored ANN index
     * (`Similarity.writeIvfPqIndex`): tokenize and aggregate ONCE,
@@ -511,10 +349,8 @@ object Retrieval {
     * from the probed bucket alone — nothing corpus-wide is read at
     * serve time.
     *
-    * A REBUILD resets the generation clock: stale tombstones from a
-    * previous append at this path would otherwise drop the fresh
-    * gen-0 postings at serve time (the ANN tier's rebuild rule,
-    * `Similarity.writeIvfPqIndex`).
+    * A REBUILD resets the generation clock and the history
+    * ([[IndexManifest.reset]]).
     *
     * 100 TB shape: the build is one explode + one (term, doc)-keyed
     * partial-agg exchange (never a vocabulary-sized key — (term, doc)
@@ -527,7 +363,7 @@ object Retrieval {
       path: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
     val spark = docs.sparkSession
-    deleteDir(spark, s"$path/tombstones")
+    IndexManifest.reset(spark, path)
     val toks = tokenized(docs, idCol, textCol).persistTracked
     postingsRows(toks, nBuckets, 0L, BaseSlice)
       .write.mode("overwrite").partitionBy("bucket")
@@ -549,8 +385,8 @@ object Retrieval {
     * full-rebuild values exactly (q220 gates serving over
     * base+append against the full-corpus SQL replay).
     *
-    * RE-INGESTED ids supersede their stale state through a TOMBSTONE
-    * sidecar (the ANN tier's q207 mechanism, lexical edition): each
+    * RE-INGESTED ids supersede their stale state through the
+    * TOMBSTONE manifest ([[IndexManifest]]): each
     * append records (id, gen) rows, and serving drops any postings
     * row with a newer tombstone for its id — necessary because a
     * re-crawled doc's changed text scatters stale postings across
@@ -563,37 +399,24 @@ object Retrieval {
     * true-corpus SQL replay; when cumulative tombstones grow large,
     * [[compactInvertedIndex]] folds them away.
     *
-    * EXACTLY-ONCE commit protocol (what makes streaming ingest safe,
-    * q237): every append stamps its postings/stats/doclens rows with
-    * a fresh SLICE NONCE and writes the tombstone manifest LAST —
-    * the manifest write is the commit point. Serving reads only
-    * committed slices ([[committedRows]]), so an attempt that died
-    * mid-append left rows that are permanently invisible; the retry
-    * recomputes the same generation (the manifest didn't change) but
-    * a new nonce, and only its completed write commits. Re-delivery
-    * of an already-COMMITTED batch is skipped via `batchKey` (the
-    * Structured Streaming replay contract: a batchId re-runs only
-    * until its foreachBatch returns). The manifest write itself is
-    * coalesced to ONE part file, so the commit is a single
-    * rename/PUT — atomic on HDFS/posix and object stores alike; a
-    * multi-file manifest job could crash having published only some
-    * of its part files, leaving the slice visible with part of its
-    * supersede rows missing (ADVICE r19).
+    * EXACTLY-ONCE (what makes streaming ingest safe, q237): the
+    * postings/stats/doclens writes run inside [[IndexManifest.commit]]
+    * under a fresh slice nonce, and serving reads only committed
+    * slices, so an attempt that died mid-append left rows that are
+    * permanently invisible. Re-delivery of an already-COMMITTED
+    * batch is skipped via `batchKey`.
     *
     * Preconditions: ids are unique WITHIN one delta (the q179
     * contract, narrowed); re-ingesting ids from the base or earlier
     * appends is the supported re-crawl path. An empty delta is a
     * no-op — no stats row, no new generation. SINGLE WRITER per
-    * index path: the generation stamp is read-max-plus-one, not a
-    * CAS, so two concurrent appenders would share a generation —
-    * [[verifySoleWriter]] re-reads the manifest post-commit and
-    * fails LOUDLY (both nonces named) instead of corrupting
-    * supersede order silently.
+    * index path, enforced loudly post-commit
+    * ([[IndexManifest.verifySoleWriter]]).
     */
   def appendToInvertedIndex(deltaDocs: DataFrame, idCol: String,
       textCol: String, path: String, batchKey: String = null): Unit = {
     val spark = deltaDocs.sparkSession
-    if (batchKey != null && batchCommitted(spark, path, batchKey)) return
+    if (IndexManifest.batchCommitted(spark, path, batchKey)) return
     // ONE tokenize pass feeds the emptiness probe and all four
     // sidecar writes (ADVICE r18: the delta plan was evaluated
     // three times)
@@ -601,28 +424,16 @@ object Retrieval {
     if (toks.select(col("id")).take(1).isEmpty) return
     val nBuckets = spark.read.parquet(s"$path/stats")
       .select(max(col("n_buckets"))).head().getInt(0)
-    ensureManifest(toks, path)
-    val gen = nextGen(spark, path)
-    val slice = java.util.UUID.randomUUID().toString
-    postingsRows(toks, nBuckets, gen, slice)
-      .write.mode("append").partitionBy("bucket")
-      .parquet(s"$path/postings")
-    statsRow(toks, nBuckets, slice)
-      .write.mode("append").parquet(s"$path/stats")
-    doclensRows(toks, nBuckets, gen, slice)
-      .write.mode("append").partitionBy("bucket")
-      .parquet(s"$path/doclens")
-    // the COMMIT: manifest rows land last, as ONE file (coalesce(1)
-    // — a multi-file manifest job could crash mid-commit having
-    // published a subset of its part files, leaving the slice
-    // half-committed; one file = one rename/PUT, atomic on HDFS and
-    // object stores alike; manifest rows are slim id+gen, so one
-    // task absorbs even a large crawl batch)
-    toks.select(col("id"), lit(gen).as("gen"), lit(slice).as("slice"),
-        lit(batchKey).cast("string").as("batch_key"))
-      .coalesce(1)
-      .write.mode("append").parquet(s"$path/tombstones")
-    verifySoleWriter(spark, path, gen, slice)
+    IndexManifest.commit(toks, path, ManifestId, batchKey) { (gen, slice) =>
+      postingsRows(toks, nBuckets, gen, slice)
+        .write.mode("append").partitionBy("bucket")
+        .parquet(s"$path/postings")
+      statsRow(toks, nBuckets, slice)
+        .write.mode("append").parquet(s"$path/stats")
+      doclensRows(toks, nBuckets, gen, slice)
+        .write.mode("append").partitionBy("bucket")
+        .parquet(s"$path/doclens")
+    }
   }
 
   /** RIGHT-TO-BE-FORGOTTEN DELETE from a stored inverted index — the
@@ -638,17 +449,19 @@ object Retrieval {
     * counts. A LATER re-ingest of the id resurrects it (its
     * generation outranks the delete's); [[compactInvertedIndex]]
     * physically drops deleted rows. O(|deletes|) write cost —
-    * nothing corpus-sized moves until compaction. Atomic: the
-    * manifest write IS the whole delete, coalesced to one file (one
-    * rename/PUT). `batchKey` gives streaming deletes the same
-    * idempotent re-delivery skip as ingest; the single-writer
-    * contract and post-commit collision check of
-    * [[appendToInvertedIndex]] apply (a delete claims a generation
-    * too).
+    * nothing corpus-sized moves until compaction. Atomic: the delete
+    * is an [[IndexManifest.commit]] with no data writes. `batchKey`
+    * gives streaming deletes the same idempotent re-delivery skip as
+    * ingest; the single-writer contract of [[appendToInvertedIndex]]
+    * applies (a delete claims a generation too).
     */
   def deleteFromInvertedIndex(ids: DataFrame, idCol: String,
-      path: String, batchKey: String = null): Unit =
-    tombstoneOnlyDelete(ids, idCol, path, batchKey)
+      path: String, batchKey: String = null): Unit = {
+    if (IndexManifest.batchCommitted(ids.sparkSession, path, batchKey)) return
+    val keyed = ids.select(col(idCol).as(ManifestId))
+    if (keyed.take(1).isEmpty) return
+    IndexManifest.commit(keyed, path, ManifestId, batchKey)((_, _) => ())
+  }
 
   /** [[deleteFromInvertedIndex]] for a positional index — identical
     * manifest layout, identical semantics (q240 gates the phrase
@@ -656,25 +469,7 @@ object Retrieval {
     */
   def deleteFromPositionalIndex(ids: DataFrame, idCol: String,
       path: String, batchKey: String = null): Unit =
-    tombstoneOnlyDelete(ids, idCol, path, batchKey)
-
-  private def tombstoneOnlyDelete(ids: DataFrame, idCol: String,
-      path: String, batchKey: String): Unit = {
-    val spark = ids.sparkSession
-    if (batchKey != null && batchCommitted(spark, path, batchKey)) return
-    val keyed = ids.select(col(idCol).as("id"))
-    if (keyed.take(1).isEmpty) return
-    ensureManifest(keyed, path)
-    val gen = nextGen(spark, path)
-    val slice = java.util.UUID.randomUUID().toString
-    // one-file commit + post-commit collision check, as in
-    // appendToInvertedIndex (the delete IS its manifest write)
-    keyed.select(col("id"), lit(gen).as("gen"), lit(slice).as("slice"),
-        lit(batchKey).cast("string").as("batch_key"))
-      .coalesce(1)
-      .write.mode("append").parquet(s"$path/tombstones")
-    verifySoleWriter(spark, path, gen, slice)
-  }
+    deleteFromInvertedIndex(ids, idCol, path, batchKey)
 
   /** The stale-instance correction to the SUMMED stats rows: docs
     * superseded by a newer tombstone contributed (1, dl) to the
@@ -685,7 +480,7 @@ object Retrieval {
     * (staleDocs, staleLen) — (0, 0) when no tombstones exist.
     */
   private def staleStats(spark: SparkSession, path: String,
-      nBuckets: Int, ts: Option[TombState]): (Long, Long) =
+      nBuckets: Int, ts: Option[IndexManifest.ServeState]): (Long, Long) =
     ts.map { s =>
       val buckets = s.tmax
         .select(pmod(hash(col("id")), lit(nBuckets)).as("b"))
@@ -693,7 +488,7 @@ object Retrieval {
       // committed slices only: an orphan doclens row was never
       // counted in the (committed-filtered) summed stats, so it must
       // not be subtracted either
-      val r = committedRows(spark.read.parquet(s"$path/doclens")
+      val r = IndexManifest.committed(spark.read.parquet(s"$path/doclens")
           .filter(col("bucket").isin(buckets: _*)), ts)
         .join(broadcast(s.tmax), Seq("id"))
         .filter(col("_gen") < col("_tg"))
@@ -721,7 +516,7 @@ object Retrieval {
     require(nBuckets > 0, "nBuckets must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    deleteDir(spark, s"$path/tombstones")
+    IndexManifest.reset(spark, path)
     positionalRows(docs, idCol, textCol, nBuckets, 0L, BaseSlice)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/postings")
@@ -765,24 +560,16 @@ object Retrieval {
   def appendToPositionalIndex(deltaDocs: DataFrame, idCol: String,
       textCol: String, path: String, batchKey: String = null): Unit = {
     val spark = deltaDocs.sparkSession
-    if (batchKey != null && batchCommitted(spark, path, batchKey)) return
+    if (IndexManifest.batchCommitted(spark, path, batchKey)) return
     if (deltaDocs.select(col(idCol)).take(1).isEmpty) return
     val nBuckets = spark.read.parquet(s"$path/meta")
       .select(max(col("n_buckets"))).head().getInt(0)
-    ensureManifest(deltaDocs.select(col(idCol).as("id")), path)
-    val gen = nextGen(spark, path)
-    val slice = java.util.UUID.randomUUID().toString
-    positionalRows(deltaDocs, idCol, textCol, nBuckets, gen, slice)
-      .write.mode("append").partitionBy("bucket")
-      .parquet(s"$path/postings")
-    // one-file commit + post-commit collision check (see
-    // appendToInvertedIndex)
-    deltaDocs.select(col(idCol).as("id"), lit(gen).as("gen"),
-        lit(slice).as("slice"),
-        lit(batchKey).cast("string").as("batch_key"))
-      .coalesce(1)
-      .write.mode("append").parquet(s"$path/tombstones")
-    verifySoleWriter(spark, path, gen, slice)
+    IndexManifest.commit(deltaDocs.select(col(idCol).as(ManifestId)), path,
+        ManifestId, batchKey) { (gen, slice) =>
+      positionalRows(deltaDocs, idCol, textCol, nBuckets, gen, slice)
+        .write.mode("append").partitionBy("bucket")
+        .parquet(s"$path/postings")
+    }
   }
 
   /** COMPACTION for a positional index: rewrite the LIVE postings
@@ -793,9 +580,9 @@ object Retrieval {
     */
   def compactPositionalIndex(spark: SparkSession, srcPath: String,
       dstPath: String): Unit = {
-    val ts = tombState(spark, srcPath)
-    deleteDir(spark, s"$dstPath/tombstones")
-    liveRows(spark.read.parquet(s"$srcPath/postings"), ts)
+    val ts = serveState(spark, srcPath)
+    IndexManifest.reset(spark, dstPath)
+    IndexManifest.live(spark.read.parquet(s"$srcPath/postings"), ts)
       .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dstPath/postings")
@@ -834,7 +621,7 @@ object Retrieval {
     val postings = spark.read.parquet(s"$path/postings")
       .filter(col("bucket").isin(buckets: _*) &&
         col("term").isin(terms: _*))
-    liveRows(postings, tombState(spark, path, asOf))
+    IndexManifest.live(postings, serveState(spark, path, asOf))
   }
 
   /** PHRASE occurrence counts served from a positional index
@@ -903,13 +690,13 @@ object Retrieval {
       dstPath: String): Unit = {
     val nBuckets = spark.read.parquet(s"$srcPath/stats")
       .select(max(col("n_buckets"))).head().getInt(0)
-    val ts = tombState(spark, srcPath)
-    deleteDir(spark, s"$dstPath/tombstones")
-    liveRows(spark.read.parquet(s"$srcPath/postings"), ts)
+    val ts = serveState(spark, srcPath)
+    IndexManifest.reset(spark, dstPath)
+    IndexManifest.live(spark.read.parquet(s"$srcPath/postings"), ts)
       .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dstPath/postings")
-    val liveDl = liveRows(spark.read.parquet(s"$srcPath/doclens"), ts)
+    val liveDl = IndexManifest.live(spark.read.parquet(s"$srcPath/doclens"), ts)
       .persistTracked
     liveDl.select(col("id"), col("dl"), lit(0L).as("_gen"),
         lit(BaseSlice).as("_slice"), col("bucket"))
@@ -936,20 +723,13 @@ object Retrieval {
     * (q242). A delete generation shows its doc count too — the
     * manifest cannot distinguish a delete from an append by itself
     * (both are id rows at a generation; only deletes write no data),
-    * which is exactly why this report exists for auditing. Manifest-
+    * which is exactly why this report exists for auditing. A
+    * compacted index leads with its lineage row (gen 0, batch_key
+    * `compact:gen=<source's final gen>`, [[IndexLineage]]). Manifest-
     * sized read; a never-appended base index reports zero rows.
     */
   def indexHistory(spark: SparkSession, path: String): DataFrame =
-    // a compacted index leads its history with the lineage row
-    // (gen 0, batch_key compact:gen=<source's final gen>) — the
-    // recorded answer to "where did this fresh clock come from?"
-    IndexLineage.withHistory(spark, path,
-      readTombstones(spark, path).map(
-        _.groupBy(col("gen"), col("batch_key"))
-          .agg(count(lit(1)).as("n_docs")))
-        .getOrElse(spark.range(0).select(lit(0L).as("gen"),
-          lit(null).cast("string").as("batch_key"),
-          lit(0L).as("n_docs"))))
+    IndexManifest.history(spark, path)
 
   /** VOCABULARY REPORT from a stored index — corpus term statistics
     * (document frequency, collection frequency) as ONE aggregate over
@@ -961,8 +741,8 @@ object Retrieval {
     */
   def vocabularyFromIndex(spark: SparkSession, path: String,
       k: Int): DataFrame =
-    liveRows(spark.read.parquet(s"$path/postings"),
-        tombState(spark, path))
+    IndexManifest.live(spark.read.parquet(s"$path/postings"),
+        serveState(spark, path))
       .groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
       .orderBy(col("df").desc, col("term"))
@@ -1100,21 +880,21 @@ object Retrieval {
   private def pivotedFromIndex(spark: SparkSession, path: String,
       terms: Seq[String],
       asOf: Long = Long.MaxValue): (DataFrame, Column, Column, () => Map[String, Long]) = {
-    // ONE manifest fingerprint feeds both the tombState key and the
-    // stats key: ts and the cached stats must describe the SAME
+    // ONE manifest fingerprint feeds both the serve-state key and
+    // the stats key: ts and the cached stats must describe the SAME
     // index state, or a commit racing this serve could file
     // old-state values under a new-state key
-    val tSig = ManifestOps.dirSig(spark, s"$path/tombstones")
-    val ts = tombState(spark, path, asOf, tSig)
+    val tSig = IndexManifest.fingerprint(spark, path)
+    val ts = serveState(spark, path, asOf, tSig)
     // the stats head + stale-stats probe are per-index-state, not
-    // per-query — cached on the same fingerprint discipline as
-    // [[tombState]] (plus the stats dir, which a REBUILD overwrites
+    // per-query — cached on the same fingerprint discipline as the
+    // serve state (plus the stats dir, which a REBUILD overwrites
     // without touching a manifest)
     val (nDocs, totLen, nBuckets, staleN, staleLen) =
-      ManifestOps.cached(statsCache,
-        ManifestOps.cacheKey(ManifestOps.tokenOf(spark), asOf, path, tSig,
-          ManifestOps.dirSig(spark, s"$path/stats"))) {
-          val st = committedRows(spark.read.parquet(s"$path/stats"), ts)
+      IndexManifest.cached(statsCache,
+        IndexManifest.cacheKey(IndexManifest.tokenOf(spark), asOf, path, tSig,
+          IndexManifest.dirSig(spark, s"$path/stats"))) {
+          val st = IndexManifest.committed(spark.read.parquet(s"$path/stats"), ts)
             .agg(sum(col("n_docs")).as("_n"),
               sum(col("total_len")).as("_len"),
               max(col("n_buckets")).as("_nb")).head()
@@ -1131,7 +911,7 @@ object Retrieval {
     // replaces the per-serve T-row Spark job the old `terms.toDF`
     // formulation paid
     val buckets = terms.map(termBucket(_, nBuckets)).distinct
-    val postings = liveRows(
+    val postings = IndexManifest.live(
       spark.read.parquet(s"$path/postings")
         .filter(col("bucket").isin(buckets: _*) &&
           col("term").isin(terms: _*)),

@@ -84,14 +84,14 @@ class CommitProtocolSpec extends SparkSpec {
     val mine = spark.read.parquet(s"$path/tombstones")
       .select("slice").head().getString(0)
     // no foreign slice at gen 1 → the check passes
-    Retrieval.verifySoleWriter(spark, path, 1L, mine)
+    IndexManifest.verifySoleWriter(spark, path, 1L, mine)
     // plant the row a concurrent writer would have committed at the
     // same generation under its own nonce
     Seq((999L, 1L, "foreign-nonce", null.asInstanceOf[String]))
       .toDF("id", "gen", "slice", "batch_key")
       .write.mode("append").parquet(s"$path/tombstones")
     val e = intercept[IllegalStateException] {
-      Retrieval.verifySoleWriter(spark, path, 1L, mine)
+      IndexManifest.verifySoleWriter(spark, path, 1L, mine)
     }
     assert(e.getMessage.contains("foreign-nonce"), e.getMessage)
     assert(e.getMessage.contains(mine), e.getMessage)
@@ -105,10 +105,10 @@ class CommitProtocolSpec extends SparkSpec {
       .toDF("neighbor_id", "gen", "slice", "batch_key")
       .write.mode("append").parquet(s"$apath/tombstones")
     val ea = intercept[IllegalStateException] {
-      Similarity.verifySoleWriter(spark, apath, 1L, "mine-a")
+      IndexManifest.verifySoleWriter(spark, apath, 1L, "mine-a")
     }
     assert(ea.getMessage.contains("theirs-b"), ea.getMessage)
-    Similarity.verifySoleWriter(spark, apath, 2L, "mine-a") // clean gen
+    IndexManifest.verifySoleWriter(spark, apath, 2L, "mine-a") // clean gen
   }
 
   test("two concurrent appenders: serialized generations or a loud failure — never a silent shared gen") {

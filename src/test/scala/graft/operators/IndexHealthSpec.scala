@@ -136,6 +136,11 @@ class IndexHealthSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1)))
     assert(hist2.head === ((0L, "compact:gen=2")))
     assert(hist2.length === 2 && hist2(1)._1 === 1L)
+    // a rebuild at the compacted path starts a fresh history: neither
+    // the appended generation nor the compaction lineage survives
+    Retrieval.writeInvertedIndex(docs, "doc_id", "text", dst, nBuckets = 4)
+    assert(Retrieval.indexHistory(spark, dst).isEmpty)
+    assert(IndexLineage.read(spark, dst).isEmpty)
   }
 
   test("ANN compaction lineage twin") {
@@ -157,5 +162,14 @@ class IndexHealthSpec extends SparkSpec {
     val hist = Similarity.indexHistory(spark, dst)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(hist.toSeq === Seq((0L, "compact:gen=1", 48L)))
+    // append to the compacted index, then rebuild it: the rebuild
+    // clears the manifest and the lineage alike
+    Similarity.appendToPqIndex(emb.filter($"vec_id" < 4), dst,
+      "vec_id", "embedding")
+    assert(new java.io.File(s"$dst/tombstones").exists)
+    Similarity.writePqIndex(emb, "vec_id", "embedding", books, dst)
+    assert(!new java.io.File(s"$dst/tombstones").exists)
+    assert(Similarity.indexHistory(spark, dst).isEmpty)
+    assert(IndexLineage.read(spark, dst).isEmpty)
   }
 }

@@ -753,4 +753,53 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.toString.contains("BroadcastHashJoin"),
       "tombstone supersede should be a broadcast hash join")
   }
+
+  test("never-appended index (both tiers): no slice filter and no supersede join until the first append") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
+    // (committed-slice filter present, tombstone supersede join present)
+    def manifestOps(plan: LogicalPlan): (Boolean, Boolean) = (
+      plan.exists {
+        case f: Filter => f.condition.references.exists(_.name == "_slice")
+        case _ => false },
+      plan.exists {
+        case j: Join => j.output.exists(_.name == "_tg")
+        case _ => false })
+
+    val vocab = Vector("spark", "join", "stream", "data", "row", "table")
+    val rnd = new scala.util.Random(47)
+    val docs = (1L to 40L).map { i =>
+      (i, Seq.fill(3 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size)))
+        .mkString(" "))
+    }.toDF("doc_id", "text")
+    val ipath = java.nio.file.Files.createTempDirectory("invidx_base")
+      .toString + "/idx"
+    Retrieval.writeInvertedIndex(docs.filter($"doc_id" <= 30L),
+      "doc_id", "text", ipath, nBuckets = 4)
+    def lexical() = manifestOps(Retrieval.bm25TopKFromIndex(spark, ipath,
+      "doc_id", Seq("spark", "stream"), k = 5).queryExecution.optimizedPlan)
+    assert(lexical() === ((false, false)))
+    Retrieval.appendToInvertedIndex(docs.filter($"doc_id" > 30L),
+      "doc_id", "text", ipath)
+    assert(lexical() === ((true, true)))
+
+    val centers = Array.tabulate(4, 8)((c, d) => if (d / 2 == c) 4f else 0f)
+    val corpus = (0 until 48).map { i =>
+      val v = if (i < 4) centers(i % 4).toSeq
+        else centers(i % 4).map(x => x + (rnd.nextInt(17) - 8).toFloat / 8f).toSeq
+      (i.toLong, v)
+    }.toDF("vec_id", "embedding")
+    val apath = java.nio.file.Files.createTempDirectory("ivfpq_base")
+      .toString + "/idx"
+    Similarity.writeIvfPqIndex(corpus.filter($"vec_id" < 40),
+      corpus.filter($"vec_id" < 4), "vec_id", "embedding", m = 4, dim = 8,
+      apath, bookSeeds = corpus.filter($"vec_id" >= 4 && $"vec_id" < 12))
+    def ann() = manifestOps(Similarity.pqIvfTopKFromIndex(
+      corpus.filter($"vec_id" === 20L), apath, "vec_id", "embedding",
+      k = 3, nProbe = 2).queryExecution.optimizedPlan)
+    assert(ann() === ((false, false)))
+    Similarity.appendToIvfPqIndex(corpus.filter($"vec_id" >= 40), apath,
+      "vec_id", "embedding")
+    assert(ann() === ((true, true)))
+    graft.core.OpCache.release(blocking = true)
+  }
 }

@@ -30,7 +30,7 @@ class ServeCacheSpec extends SparkSpec {
     spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
 
   test("second serve of an unchanged superseded index runs fewer jobs, same rows") {
-    Retrieval.clearServeCaches()
+    IndexManifest.clearServeCaches()
     val docs = corpus(1, 60, 3)
     val path = tmp("servecache")
     Retrieval.writeInvertedIndex(docs.filter($"doc_id" % 3 =!= 0L),
@@ -54,7 +54,7 @@ class ServeCacheSpec extends SparkSpec {
   }
 
   test("a new append/delete invalidates the cached state") {
-    Retrieval.clearServeCaches()
+    IndexManifest.clearServeCaches()
     val docs = corpus(1, 50, 9)
     val path = tmp("servecache_inv")
     Retrieval.writeInvertedIndex(docs.filter($"doc_id" <= 30L),
@@ -79,7 +79,7 @@ class ServeCacheSpec extends SparkSpec {
   }
 
   test("ANN: second serve of an unchanged appended index runs fewer jobs, same rows") {
-    Similarity.clearServeCaches()
+    IndexManifest.clearServeCaches()
     val rnd = new scala.util.Random(21)
     val emb = (0L until 64L).map(i =>
         (i, Seq.fill(8)(rnd.nextFloat()))).toDF("vec_id", "embedding")
