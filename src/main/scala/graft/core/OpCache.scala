@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped registry of the DataFrames graft operators persist.
@@ -144,21 +144,78 @@ object OpCache {
     }
   }
 
+  /** One iterative operator call's checkpoint lifecycle (the
+    * connected-components family, PageRank, the BPE and Unigram
+    * trainers, the distributed spectrum fit). Open one per call with
+    * [[checkpoints]]; [[Checkpoints.cut]] or [[Checkpoints.cutEager]]
+    * each lineage break, [[Checkpoints.settle]] once an action has
+    * materialized the newest cut, then end with [[Checkpoints.keep]]
+    * (the result reads the surviving cut) or [[Checkpoints.free]]
+    * (driver-value results and throw paths).
+    *
+    * Why the discipline exists: a checkpoint's blocks are
+    * lineage-truncated, so Spark's storage layer can NEVER evict them
+    * on its own, and `Dataset.unpersist` only touches CacheManager
+    * entries. Without the per-round free, every round of every call
+    * pins |state|-sized blocks until the session dies, which exhausts
+    * storage memory in a long-lived session (the round-11 leak).
+    *
+    * Reliable ⇒ eager: when the session has a checkpoint dir
+    * (`spark.checkpoint.dir` or `setCheckpointDir`) every cut is a
+    * reliable, eager `checkpoint(true)`, whose files survive executor
+    * loss — a lazy reliable checkpoint would recompute the frame when
+    * its files are written after the first action. Without one, `cut`
+    * is a LAZY local checkpoint (the next action materializes it: one
+    * job per round, not two) and `cutEager` an eager one. This is the
+    * rule Spark's own `PeriodicCheckpointer` follows.
+    */
+  final class Checkpoints private[OpCache] (spark: SparkSession) {
+    private val reliable = spark.sparkContext.getCheckpointDir.isDefined
+    // backing RDDs of the cuts still alive, oldest first
+    private val live = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+
+    private def take(df: DataFrame, eager: Boolean): DataFrame = {
+      val out = if (reliable) df.checkpoint(true) else df.localCheckpoint(eager)
+      live += checkpointRdd(out)
+      out
+    }
+
+    /** Truncate `df`'s lineage; lazy unless reliable. */
+    def cut(df: DataFrame): DataFrame = take(df, eager = false)
+
+    /** Truncate `df`'s lineage and materialize it now. */
+    def cutEager(df: DataFrame): DataFrame = take(df, eager = true)
+
+    /** Free every cut older than the newest. Call only after an action
+      * has materialized the newest cut: until then its plan still
+      * reads its predecessor's blocks. */
+    def settle(): Unit = while (live.size > 1) freeRdd(live.remove(0))
+
+    /** Hand the surviving cuts to the session registry: the caller's
+      * pipeline-boundary [[release]] frees them (after which any frame
+      * reading them is dead — checkpoints cannot recompute). */
+    def keep(): Unit = { live.foreach(registerRdd); live.clear() }
+
+    /** Free every cut now. */
+    def free(): Unit = { live.foreach(freeRdd(_)); live.clear() }
+  }
+
+  /** A fresh [[Checkpoints]] handle for one operator call on `spark`. */
+  def checkpoints(spark: SparkSession): Checkpoints = new Checkpoints(spark)
+
   /** Register ALREADY-materialized blocks that no `Dataset.persist`
-    * owns — the RDD backing an eager local/reliable checkpoint (e.g.
-    * the fixed-point frame of [[graft.operators.Dedup.componentsStar]])
-    * — so [[release]] frees them alongside the persisted frames.
+    * owns — the RDD backing a result's checkpoint
+    * ([[Checkpoints.keep]]) — so [[release]] frees them alongside the
+    * persisted frames.
     *
     * UNLIKE a persisted frame, a released checkpoint CANNOT recompute:
     * its lineage is truncated to a scan of the very blocks/files being
     * dropped, so any DataFrame reading it is DEAD after release.
-    * Operators register only their RESULT-backing checkpoint (interior
-    * rounds are freed eagerly by the operator itself); callers
-    * materialize or write the result BEFORE releasing — the same
-    * pipeline-boundary discipline the frame registry already requires,
-    * minus the recompute safety net.
+    * Callers materialize or write the result BEFORE releasing — the
+    * same pipeline-boundary discipline the frame registry already
+    * requires, minus the recompute safety net.
     */
-  def registerRdd(rdd: RDD[_]): Unit = {
+  private def registerRdd(rdd: RDD[_]): Unit = {
     rddRegistry.removeIf(r =>
       r.getStorageLevel == StorageLevel.NONE && r.getCheckpointFile.isEmpty)
     rddRegistry.add(rdd)
@@ -166,13 +223,11 @@ object OpCache {
     if (scope != null) scope.rdds.add(rdd)
   }
 
-  /** The RDD backing a frame that was JUST checkpointed (the lifecycle
-    * helper shared by [[graft.operators.Dedup]],
-    * [[graft.operators.PageRank]] and [[graft.operators.BpeTrainer]]):
-    * the analyzed plan of `df.checkpoint(true)` /
-    * `df.localCheckpoint(true)` is a `LogicalRDD` scan over exactly
-    * the persisted blocks — that RDD, not `queryExecution.toRdd` (a
-    * fresh MapPartitionsRDD over it), is what [[freeRdd]] must target.
+  /** The RDD backing a frame that was JUST checkpointed: the analyzed
+    * plan of `df.checkpoint(true)` / `df.localCheckpoint(_)` is a
+    * `LogicalRDD` scan over exactly the checkpointed blocks — that
+    * RDD, not `queryExecution.toRdd` (a fresh MapPartitionsRDD over
+    * it), is what [[freeRdd]] must target.
     *
     * The match is a reflection-based class-name probe (LogicalRDD is
     * `private[sql]`), so it THROWS when no LogicalRDD is found: on a
@@ -181,7 +236,7 @@ object OpCache {
     * per-round checkpoint-freeing discipline back into the block leak
     * it exists to kill.
     */
-  def checkpointRdd(df: DataFrame): RDD[_] =
+  private def checkpointRdd(df: DataFrame): RDD[_] =
     df.queryExecution.analyzed.collect {
       case p if p.getClass.getName == "org.apache.spark.sql.execution.LogicalRDD" =>
         p.getClass.getMethod("rdd").invoke(p).asInstanceOf[RDD[_]]
@@ -192,11 +247,9 @@ object OpCache {
 
   /** Free one checkpoint-backing RDD now: drop its storage blocks and,
     * for reliable checkpoints, delete the checkpoint files. The RDD
-    * (and any frame scanning it) is unusable afterwards. Exposed so
-    * operators can drop round N−1's checkpoint the moment round N
-    * materializes instead of stranding every round until session end.
+    * (and any frame scanning it) is unusable afterwards.
     */
-  def freeRdd(rdd: RDD[_], blocking: Boolean = false): Unit = {
+  private def freeRdd(rdd: RDD[_], blocking: Boolean = false): Unit = {
     try rdd.unpersist(blocking) catch { case _: Throwable => () }
     try rdd.getCheckpointFile.foreach { f =>
       val p = new org.apache.hadoop.fs.Path(f)

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.core.OpCache
 import graft.core.OpCache.TrackedPersist
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -44,23 +43,19 @@ import org.apache.spark.sql.types._
   *
   * Execution shape at 100 TB: corpus → word table is one shuffle of
   * |distinct words| rows (tens of millions, not the corpus);
-  * after that every round touches only the word table. Rounds are
-  * eagerly checkpointed every `checkpointEvery` merges (the fold
-  * chain is narrow but K-deep lineage would stack K codegen stages
-  * and recompute from the last materialization on failure), freeing
-  * the previous checkpoint as soon as the next lands
-  * ([[Dedup.componentsStar]]'s lifecycle discipline). For production
-  * vocab sizes (32k merges), per-round argmax latency — one tiny job
-  * per merge — dominates the all-distributed loop; [[trainHybrid]] is
-  * the production escape hatch: distributed corpus collapse + k
-  * distributed rounds, then one model-sized collect and driver-local
-  * incremental-stats rounds, bit-identical by construction.
+  * after that every round touches only the word table. The word table
+  * is checkpointed every `checkpointEvery` merges (the fold chain is
+  * narrow but K-deep lineage would stack K codegen stages and
+  * recompute from the last materialization on failure), freeing the
+  * previous cut as soon as the next lands ([[OpCache.Checkpoints]]).
+  * For production vocab sizes (32k merges), per-round argmax latency
+  * — one tiny job per merge — dominates the all-distributed loop;
+  * [[trainHybrid]] is the production escape hatch: distributed corpus
+  * collapse + k distributed rounds, then one model-sized collect and
+  * driver-local incremental-stats rounds, bit-identical by
+  * construction.
   */
 object BpeTrainer {
-
-  /** See [[OpCache.checkpointRdd]] — the shared fail-loud helper. */
-  private def checkpointRdd(df: DataFrame): Option[RDD[_]] =
-    Some(OpCache.checkpointRdd(df))
 
   /** Spark's string ordering for the tie-break, exactly:
     * `UTF8String.compareTo` is an unsigned byte comparison of the
@@ -203,10 +198,9 @@ object BpeTrainer {
       docs: DataFrame,
       textCol: String,
       numMerges: Int,
-      checkpointEvery: Int = 4,
-      reliableCheckpoint: Boolean = false): DataFrame =
+      checkpointEvery: Int = 4): DataFrame =
     trainHybrid(docs, textCol, numMerges, distributedRounds = numMerges,
-      checkpointEvery, reliableCheckpoint)
+      checkpointEvery)
 
   /** The production-vocab trainer: run the first `distributedRounds`
     * merges as distributed rounds (identical to [[train]]), then
@@ -237,32 +231,24 @@ object BpeTrainer {
       textCol: String,
       numMerges: Int,
       distributedRounds: Int,
-      checkpointEvery: Int = 4,
-      reliableCheckpoint: Boolean = false): DataFrame = {
+      checkpointEvery: Int = 4): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(distributedRounds >= 0,
       s"distributedRounds must be >= 0, got $distributedRounds")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
     val spark = docs.sparkSession
     graft.core.Exact.requireAnsi(spark, "BpeTrainer.train")
-    // lazy local checkpoint: the next round's argmax (or the hybrid
-    // collect) is the action that materializes it — one job per
-    // cadence point, not two (see componentsStar). Reliable stays
-    // eager (checkpoint files are written after the first action,
-    // which would recompute).
-    def cp(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(false)
-
-    var words = cp(docs
+    // lazy cuts: the next round's argmax (or the hybrid collect) is
+    // the action that materializes each — one job per cadence point,
+    // not two. A superseded cut must outlive its successor's FIRST
+    // action (the successor's plan reads its blocks), so every action
+    // below is followed by a settle.
+    val ck = OpCache.checkpoints(spark)
+    var words = ck.cut(docs
       .select(explode(graft.functions.Text.tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("w"), col("freq"), split(col("w"), "").as("syms")))
-    var prevCp = checkpointRdd(words)
     var sinceCp = 0
-    // a superseded checkpoint must outlive its successor's FIRST
-    // action (the successor's lazy-cp plan reads its blocks) — free it
-    // only after the next argmax/collect has materialized the successor
-    var pendingFree: Option[RDD[_]] = None
 
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var rank = 1
@@ -279,10 +265,7 @@ object BpeTrainer {
         .groupBy(col("p.l"), col("p.r")).agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1).collect()
-      // the argmax just materialized `words` — its superseded
-      // predecessor is now safe to free
-      pendingFree.foreach(OpCache.freeRdd(_))
-      pendingFree = None
+      ck.settle()
       if (best.isEmpty) done = true
       else {
         val Row(l: String, r: String, cnt: Long) = best(0)
@@ -290,10 +273,7 @@ object BpeTrainer {
         val nextPlan = words.withColumn("syms", applyMerge(col("syms"), l, r))
         sinceCp += 1
         if (sinceCp >= checkpointEvery || rank == distBound) {
-          val next = cp(nextPlan)
-          pendingFree = prevCp // still backs `next` until its first action
-          prevCp = checkpointRdd(next)
-          words = next
+          words = ck.cut(nextPlan)
           sinceCp = 0
         } else words = nextPlan
         rank += 1
@@ -305,16 +285,14 @@ object BpeTrainer {
       // the strings the distributed rounds operated on), then
       // driver-local rounds with incremental pair stats
       val rows = words.select(col("freq"), col("syms")).collect()
-      pendingFree.foreach(OpCache.freeRdd(_))
-      pendingFree = None
+      ck.settle()
       val freqs = rows.map(_.getLong(0))
       val syms = rows.map(_.getSeq[String](1).toArray)
       localRounds(freqs, syms, rank, numMerges, merges)
     }
     // the word table is training state, not the result — the model
     // is driver-sized by construction (numMerges rows). Free it now.
-    pendingFree.foreach(OpCache.freeRdd(_))
-    prevCp.foreach(OpCache.freeRdd(_))
+    ck.free()
 
     spark.createDataFrame(
       spark.sparkContext.parallelize(

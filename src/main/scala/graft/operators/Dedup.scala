@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,19 +17,6 @@ import graft.core.OpCache.TrackedPersist
   * the key, same as dropDuplicates would cost.
   */
 object Dedup {
-
-  /** The RDD whose blocks back an eagerly checkpointed frame — see
-    * [[OpCache.checkpointRdd]] (the shared, fail-loud implementation).
-    * Both components operators need the handle to free round N−1's
-    * checkpoint the moment round N materializes: `Dataset.unpersist`
-    * only touches CacheManager entries, never checkpoint blocks, so
-    * without this every round of every call pins |edges|-sized
-    * lineage-truncated blocks until the session dies — the round-11
-    * leak that broke `OpCacheSpec` and would exhaust storage memory in
-    * a long-lived incremental-dedup service.
-    */
-  private def checkpointRdd(df: DataFrame): Option[RDD[_]] =
-    Some(OpCache.checkpointRdd(df))
 
   /** Keep exactly one row per `keys`, the first by `order`. */
   def firstWins(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
@@ -56,9 +42,6 @@ object Dedup {
     * (long chains) use [[componentsStar]] — O(log n) rounds on any
     * diameter.
     *
-    * @param reliableCheckpoint use reliable `checkpoint()` (requires
-    *        `spark.checkpoint.dir`) instead of `localCheckpoint` —
-    *        survives executor loss on long cluster runs
     * @param requireConvergence throw IllegalStateException if labels
     *        are still changing when `maxIter` is exhausted (default) —
     *        returning silently would hand callers wrong cluster
@@ -72,35 +55,22 @@ object Dedup {
       aCol: String,
       bCol: String,
       maxIter: Int = 10,
-      reliableCheckpoint: Boolean = false,
       requireConvergence: Boolean = true): DataFrame = {
-    // lazy local checkpoint: the round's changed-count is the action
-    // that materializes it — one job per round, not two (see
-    // componentsStar). Reliable stays eager (checkpoint files are
-    // written after the first action, which would recompute).
-    def cp(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(false)
+    // lazy cut: the round's changed-count is the action that
+    // materializes it — one job per round, not two
+    val ck = OpCache.checkpoints(vertices.sparkSession)
     val edges = pairs.select(col(aCol).as("_src"), col(bCol).as("_dst"))
       .union(pairs.select(col(bCol).as("_src"), col(aCol).as("_dst")))
       .persistTracked
-    // localCheckpoint (not persist): each round references the label
+    // checkpoint (not persist): each round references the label
     // frame twice, so a lineage-preserving cache would DOUBLE the plan
     // tree per round — exponential plan growth that OOMs the driver on
-    // high-diameter graphs. Checkpointing truncates the plan to a scan
-    // of the materialized blocks; on a cluster with lost-executor
-    // tolerance requirements use reliable checkpoint() instead.
-    //
-    // Block lifecycle: round N's eager cp reads round N−1's blocks, so
-    // the moment it returns, N−1 is dead weight — freed immediately
-    // (checkpoint blocks are lineage-truncated, so Spark can NEVER
-    // evict them itself; stranding them pins |V|-sized storage per
-    // round per call forever). Only the RESULT-backing checkpoint
-    // survives the call, registered with OpCache so the session frees
-    // it at the usual pipeline boundary — after which the returned
-    // frame is dead (no recompute path), same contract as
-    // componentsStar.
-    var labels = cp(vertices.select(col(idCol).as("v"), col(idCol).as("comp")))
-    var prevCp = checkpointRdd(labels)
+    // high-diameter graphs. The cut truncates the plan to a scan of
+    // the materialized blocks. Once round N's count has materialized
+    // it, round N−1's cut is freed; only the RESULT-backing cut
+    // survives the call (see [[OpCache.Checkpoints]]) — after the
+    // caller's release the returned frame is dead (no recompute path).
+    var labels = ck.cut(vertices.select(col(idCol).as("v"), col(idCol).as("comp")))
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
@@ -108,25 +78,24 @@ object Dedup {
         .join(labels.select(col("v").as("_src"), col("comp")), "_src")
         .groupBy(col("_dst").as("v"))
         .agg(min(col("comp")).as("_nmin"))
-      val next = cp(labels
+      val next = ck.cut(labels
         .join(neighborMin, Seq("v"), "left")
         .select(col("v"), least(col("comp"), coalesce(col("_nmin"), col("comp"))).as("comp"),
           col("comp").as("_old")))
       changed = next.filter(col("comp") =!= col("_old")).count()
-      prevCp.foreach(OpCache.freeRdd(_))
-      prevCp = checkpointRdd(next)
+      ck.settle()
       labels = next.drop("_old")
       iter += 1
     }
     edges.unpersist()
     if (changed > 0 && requireConvergence) {
-      prevCp.foreach(OpCache.freeRdd(_))
+      ck.free()
       throw new IllegalStateException(
         s"components() did not converge in $maxIter rounds ($changed labels still " +
           "changing — graph diameter exceeds maxIter). Raise maxIter or use " +
           "componentsStar (O(log n) rounds on any diameter).")
     }
-    prevCp.foreach(OpCache.registerRdd)
+    ck.keep()
     labels
   }
 
@@ -196,18 +165,14 @@ object Dedup {
       aCol: String,
       bCol: String,
       maxIter: Int = 60,
-      reliableCheckpoint: Boolean = false,
       hotDegree: Long = HotDegree): DataFrame = {
-    // ONE job per round, not two: the local checkpoint is LAZY and the
-    // round's fingerprint aggregate is the action that materializes it
-    // (localCheckpoint persists partitions as the job computes them,
+    // ONE job per round, not two: the cut is LAZY and the round's
+    // fingerprint aggregate is the action that materializes it (the
+    // local checkpoint persists partitions as the job computes them,
     // then truncates lineage — same blocks, same semantics, minus a
     // whole materialization barrier per round; on short graphs the
-    // per-job constant IS the runtime). The reliable path stays eager:
-    // checkpoint(false) would recompute the frame when the checkpoint
-    // files are written after the first action.
-    def cp(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(false)
+    // per-job constant IS the runtime)
+    val ck = OpCache.checkpoints(vertices.sparkSession)
 
     def fingerprint(edges: DataFrame): (Long, Long) = {
       val r = edges.agg(
@@ -216,12 +181,11 @@ object Dedup {
       (r.getLong(0), r.getLong(1))
     }
 
-    var edges = cp(pairs
+    var edges = ck.cut(pairs
       .select(col(aCol).as("u"), col(bCol).as("v"))
       .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .distinct())
-    var prevCp = checkpointRdd(edges)
     var fp = fingerprint(edges)
     var iter = 0
     // emptiness is FREE from the fingerprint count — never a separate job
@@ -252,30 +216,25 @@ object Dedup {
       // each exchange is its own query-stage job, so the per-round
       // fixed cost is exchange-count-bound, and batching only added
       // overshoot pairs past convergence.)
-      val next = cp(smallStarRaw(largeStarRaw(edges, eff), eff).distinct())
+      val next = ck.cut(smallStarRaw(largeStarRaw(edges, eff), eff).distinct())
       val fpNext = fingerprint(next)
-      // round N−1's blocks fed the eager cp above and are now dead —
-      // free them NOW: checkpoint blocks are lineage-truncated, so the
-      // storage layer can never evict them on its own (the round-11
-      // leak: every round of every call stayed pinned for the session)
-      prevCp.foreach(OpCache.freeRdd(_))
-      prevCp = checkpointRdd(next)
+      // the fingerprint materialized `next`: round N−1 is dead weight
+      ck.settle()
       edges = next
       converged = fpNext == fp
       fp = fpNext
       iter += 1
     }
     if (!converged) {
-      prevCp.foreach(OpCache.freeRdd(_))
+      ck.free()
       throw new IllegalStateException(
         s"componentsStar() fingerprint still moving after $maxIter rounds — " +
           "not reachable for any real edge set (bound is O(log n) rounds)")
     }
     // the fixed-point star set backs the returned frame: its blocks
     // live until the caller's pipeline-boundary OpCache.release()
-    // (after which the frame is dead — checkpoints cannot recompute;
-    // materialize/write the labels first, as Bench/Verify already do)
-    prevCp.foreach(OpCache.registerRdd)
+    // (materialize/write the labels first, as Bench/Verify already do)
+    ck.keep()
     // stars are (child u, root v): label = root where present, self for
     // roots and isolated vertices
     vertices.select(col(idCol).as("v"))
@@ -309,8 +268,7 @@ object Dedup {
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int = 60,
-      reliableCheckpoint: Boolean = false): DataFrame = {
+      maxIter: Int = 60): DataFrame = {
     val vertices = labels.select(col(vCol).as("v"))
       .union(newVertices.select(col(newVCol).as("v")))
       .distinct()
@@ -318,8 +276,7 @@ object Dedup {
       .select(col(vCol).as("id_a"), col(compCol).as("id_b"))
       .filter(col("id_a") =!= col("id_b"))
       .unionByName(pairs.select(col(aCol).as("id_a"), col(bCol).as("id_b")))
-    componentsStar(vertices, "v", seedPairs, "id_a", "id_b",
-      maxIter, reliableCheckpoint)
+    componentsStar(vertices, "v", seedPairs, "id_a", "id_b", maxIter)
   }
 
   /** Degree at or above which a star-round key is HOT: its minimum is

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.core.OpCache
 import graft.core.OpCache.TrackedPersist
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,31 +35,19 @@ import org.apache.spark.sql.functions._
   * Execution shape at 100 TB: per iteration, ONE shuffle of the rank
   * frame to the edge partitioning (join on src) and one partial-agg
   * groupBy(dst) — edges themselves are deduped, pre-projected to two
-  * longs, and persisted ONCE across all K iterations. Each round is
-  * eagerly checkpointed (lineage would otherwise grow K joins deep —
-  * the straggler/recompute killer on clusters) and round N−1's blocks
-  * are freed as soon as round N materializes — the unpersist
-  * discipline [[Dedup.componentsStar]] settled in round 12. Dangling
-  * vertices (outdeg 0) simply contribute nothing; vertices with no
-  * in-edges hold rank `base` from iteration 1 on.
+  * longs, and persisted ONCE across all K iterations. Every
+  * `checkpointEvery` rounds the rank frame is eagerly checkpointed
+  * (lineage would otherwise grow K joins deep — the
+  * straggler/recompute killer on clusters) and the previous cut is
+  * freed as soon as the next materializes ([[OpCache.Checkpoints]]).
+  * Dangling vertices (outdeg 0) simply contribute nothing; vertices
+  * with no in-edges hold rank `base` from iteration 1 on.
   *
   * @param edges directed edge list; duplicate edges and self-loops
   *              are dropped (this is the unweighted-link semantics)
-  * @param reliableCheckpoint use `checkpoint(true)` (needs
-  *        `spark.checkpoint.dir`) instead of `localCheckpoint` —
-  *        survives executor loss on real clusters
   * @return (vertex, rank_scaled BIGINT) — rank ≈ rank_scaled / scale
   */
 object PageRank {
-
-  /** The checkpoint-backing RDD of a checkpointed frame ([[Dedup]]'s
-    * lifecycle helper): the analyzed plan of `cp(df)` is a LogicalRDD
-    * scan over exactly the persisted blocks — that RDD, not
-    * `queryExecution.toRdd` (a fresh MapPartitionsRDD over it), is
-    * what unpersist must target.
-    */
-  private def checkpointRdd(df: DataFrame): Option[RDD[_]] =
-    Some(OpCache.checkpointRdd(df))
 
   def pageRank(
       edges: DataFrame,
@@ -68,14 +55,12 @@ object PageRank {
       dstCol: String,
       iterations: Int = 5,
       scale: Long = 1000000000000L,
-      checkpointEvery: Int = 3,
-      reliableCheckpoint: Boolean = false): DataFrame = {
+      checkpointEvery: Int = 3): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(scale >= 100L, s"scale must be >= 100, got $scale")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
     graft.core.Exact.requireAnsi(edges.sparkSession, "PageRank.pageRank")
-    def cp(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
+    val ck = OpCache.checkpoints(edges.sparkSession)
 
     // canonical edge set: project to two longs, drop dup edges and
     // self-loops. persistTracked (released at the caller's pipeline
@@ -120,7 +105,6 @@ object PageRank {
       .select(col("v"), lit(base).as("rank_scaled"))
       .persistTracked
     var ranks = vertices.select(col("v"), lit(scale).as("rank_scaled"))
-    var prevCp: Option[RDD[_]] = None
     var sinceCp = 0
     var iter = 0
     while (iter < iterations) {
@@ -149,16 +133,14 @@ object PageRank {
       // checkpoints (the returned frame must not recompute through
       // freed interior state).
       if (sinceCp >= checkpointEvery || iter == iterations) {
-        val next = cp(nextPlan)
-        prevCp.foreach(OpCache.freeRdd(_))
-        prevCp = checkpointRdd(next)
-        ranks = next
+        ranks = ck.cutEager(nextPlan)
+        ck.settle()
         sinceCp = 0
       } else ranks = nextPlan
     }
     // the final round's blocks back the returned frame — caller frees
     // them via the pipeline-boundary OpCache.release()
-    prevCp.foreach(OpCache.registerRdd)
+    ck.keep()
     ranks
   }
 }

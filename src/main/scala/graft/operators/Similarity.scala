@@ -620,24 +620,36 @@ object Similarity {
     * frame's CANONICALIZED analyzed plan (expression ids normalized;
     * file relations compare by root path, so two separate
     * `spark.read.parquet(p).filter(...)` constructions of the same
-    * seed frame share one entry). Repeated operator calls over the
-    * same seed set — the common session shape: assignment, purity
-    * diagnostics and dedup all seeded from one frame — then pay ONE
-    * driver collect job instead of one per call. Models are
-    * model-sized by contract, so the map stays tiny; a 64-entry cap
-    * bounds the pinned plan trees in pathological many-model
-    * sessions. Staleness contract (same as Spark's own plan-keyed
-    * dataframe cache): rewriting the seed frame's BACKING FILES in
-    * place between calls serves the stale model — call
-    * [[clearSeedModels]] after in-place input mutation.
+    * seed frame share one entry) plus the name, length and
+    * modification time of every file the frame reads
+    * ([[seedFilesSig]]). Repeated operator calls over the same seed
+    * set — the common session shape: assignment, purity diagnostics
+    * and dedup all seeded from one frame — then pay ONE driver collect
+    * job instead of one per call. Models are model-sized by contract,
+    * so the map stays tiny; a 64-entry cap bounds the pinned plan
+    * trees in pathological many-model sessions. Staleness contract:
+    * rewriting the seed frame's backing files (e.g. a
+    * `mode("overwrite")` write to the seed dir) changes the file part
+    * of the key, so a frame read after the rewrite collects the new
+    * model — the [[IndexManifest.dirSig]] rule. Frames that read no
+    * files (in-memory or literal relations) key on the plan
+    * alone; [[clearSeedModels]] drops everything.
     */
   private val seedModelCache = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), Array[Seed]]()
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), Array[Seed]]()
 
-  /** Drop every memoized seed model (see [[seedModelCache]] staleness
-    * contract).
-    */
+  /** `path:length:mtime` of every file `seeds` reads, sorted; "" when
+    * it reads none. */
+  private def seedFilesSig(seeds: DataFrame): String =
+    seeds.inputFiles.sorted.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      val st = p.getFileSystem(seeds.sparkSession.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)
+      s"$f:${st.getLen}:${st.getModificationTime}"
+    }.mkString("|")
+
+  /** Drop every memoized seed model (see [[seedModelCache]]). */
   def clearSeedModels(): Unit = seedModelCache.clear()
 
   /** Memoized seed-model count (diagnostics/specs). */
@@ -651,7 +663,7 @@ object Similarity {
   private def collectSeeds(s: DataFrame): Array[Seed] = {
     if (seedModelCache.size > 64) seedModelCache.clear()
     seedModelCache.computeIfAbsent(
-      (s.sparkSession, s.queryExecution.analyzed.canonicalized), _ => {
+      (s.sparkSession, s.queryExecution.analyzed.canonicalized, seedFilesSig(s)), _ => {
         val rows = s.orderBy("_cell").collect().map { r =>
           Seed(r.get(0), r.getSeq[Float](1).toArray, r.getDouble(2))
         }

@@ -310,23 +310,22 @@ object Spectrum {
         .groupBy("i", "j")
         .agg(sum((col("xi") * col("xj")).cast("decimal(38,12)")).as("s"))
         .select(col("i"), col("j"), col("s").cast("double").as("sd"))
-    val full = upper.unionByName(
+    // EAGER checkpoint cut, not persist: every power iteration
+    // plans a fresh aggregate over this frame, and with persist the
+    // whole moments pipeline (explodes, union, 2080-element literal
+    // lookups) is re-analyzed/canonicalized for the cache probe on
+    // EVERY iteration — measured ~0.3 s planning vs ~0.06 s actual
+    // execution per matvec. The cut truncates the lineage to a 3-node
+    // LogicalRDD scan, so per-iteration planning is flat. Same rows,
+    // materialized once — bit-identical results (SpectrumPowerSpec).
+    val ck = graft.core.OpCache.checkpoints(spark)
+    val full = ck.cutEager(upper.unionByName(
         upper.filter(col("i") =!= col("j"))
           .select(col("j").as("i"), col("i").as("j"), col("sd")))
       .select(col("i"), col("j"),
         round(col("sd") / n -
           element_at(mLit, col("i") + 1) * element_at(mLit, col("j") + 1),
-          9).as("c9"))
-      // EAGER localCheckpoint, not persist: every power iteration
-      // plans a fresh aggregate over this frame, and with persist the
-      // whole moments pipeline (explodes, union, 2080-element literal
-      // lookups) is re-analyzed/canonicalized for the cache probe on
-      // EVERY iteration — measured ~0.3 s planning vs ~0.06 s actual
-      // execution per matvec. The checkpoint truncates the lineage to
-      // a 3-node LogicalRDD scan, so per-iteration planning is flat.
-      // Same rows, materialized once — bit-identical results
-      // (SpectrumPowerSpec).
-      .localCheckpoint(true)
+          9).as("c9")))
     try {
       val traceDec = full.filter(col("i") === col("j"))
         .agg(sum(col("c9").cast(DecimalType(18, 9))).as("t"))
@@ -367,7 +366,7 @@ object Spectrum {
       }
       SpectrumModel(mean9, v, lambda, trace)
     } finally {
-      graft.core.OpCache.freeRdd(graft.core.OpCache.checkpointRdd(full)); ()
+      ck.free()
     }
   }
 

@@ -43,30 +43,21 @@ import graft.functions.{UnigramExpressions, UnigramLmModel}
   * driver traffic is one model-sized collect per round (the
   * [[BpeTrainer]] contract — models ride a plan constant, never
   * a join).
+  *
+  * The loop frames are lazy checkpoint cuts
+  * ([[graft.core.OpCache.Checkpoints]]), not lineage-preserving
+  * persists. The EM loop re-plans a query against them every round
+  * (and the final output plan embeds them), so with plain persist the
+  * FULL seed/segment lineage is re-analyzed and re-canonicalized on
+  * every round's cache probe — the q152 output plan measured ~290 KB
+  * of formatted text, i.e. seconds of driver-side Catalyst walks per
+  * serve (the Spectrum r21 rationale). A cut makes every round's plan
+  * a flat LogicalRDD scan. Blocks still materialize inside the first
+  * consuming job, and the frames are vocabulary-bounded (distinct
+  * words / inventory pieces — Heaps' law), not corpus-sized, so the
+  * truncated-lineage fault-tolerance trade stays on model-class data.
   */
 object UnigramTrainer {
-
-  /** LAZY localCheckpoint registered with OpCache (released at the
-    * caller's pipeline boundary, the persistTracked lifecycle) — used
-    * for the trainer's loop frames instead of a lineage-preserving
-    * persist. The EM loop re-plans a query against these frames every
-    * round (and the final output plan embeds them), so with plain
-    * persist the FULL seed/segment lineage is re-analyzed and
-    * re-canonicalized on every round's cache probe — the q152 output
-    * plan measured ~290 KB of formatted text, i.e. seconds of
-    * driver-side Catalyst walks per serve (the Spectrum r21
-    * localCheckpoint rationale). Truncating to a LogicalRDD scan
-    * makes every round's plan flat. Blocks still materialize inside
-    * the first consuming job (lazy), and the frames are
-    * vocabulary-bounded (distinct words / inventory pieces — Heaps'
-    * law), not corpus-sized, so the truncated-lineage
-    * fault-tolerance trade stays on model-class data.
-    */
-  private def cpTracked(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(false)
-    graft.core.OpCache.registerRdd(graft.core.OpCache.checkpointRdd(out))
-    out
-  }
 
   /** Distinct words with corpus frequency (the q123 word table). */
   def distinctWords(docs: DataFrame, textCol: String): DataFrame =
@@ -139,8 +130,9 @@ object UnigramTrainer {
   def train(words: DataFrame, maxPieceLen: Int, topKMulti: Int,
       emRounds: Int): DataFrame = {
     require(emRounds >= 1, s"emRounds must be >= 1, got $emRounds")
-    val w = cpTracked(words)
-    val inventory = cpTracked(seedInventory(w, maxPieceLen, topKMulti))
+    val ck = graft.core.OpCache.checkpoints(words.sparkSession)
+    val w = ck.cut(words)
+    val inventory = ck.cut(seedInventory(w, maxPieceLen, topKMulti))
     var model = modelFrom(inventory.select(col("piece"), col("f").as("c")))
     for (_ <- 1 until emRounds) {
       model = modelFrom(
@@ -148,9 +140,11 @@ object UnigramTrainer {
           .select(col("piece"), (col("c_raw") + 1L).as("c")))
     }
     // the LAST round's counts stay lazy — the output plan IS the
-    // final E-step plus the in-plan M-step re-estimate (persisted:
-    // the normalizer aggregate and the output both read it)
-    val counts = cpTracked(segCounts(w, inventory, model))
+    // final E-step plus the in-plan M-step re-estimate (cut: the
+    // normalizer aggregate and the output both read it); the lazy
+    // result reads the cuts, so they live until the caller's release
+    val counts = ck.cut(segCounts(w, inventory, model))
+    ck.keep()
     val sm = counts.select(col("piece"), col("c_raw"), (col("c_raw") + 1L).as("c"))
     val tot = sm.agg(sum(col("c")).as("_tot"))
     sm.crossJoin(broadcast(tot))
@@ -175,8 +169,9 @@ object UnigramTrainer {
       emRounds: Int, pruneToMulti: Int): DataFrame = {
     require(emRounds >= 1, s"emRounds must be >= 1, got $emRounds")
     require(pruneToMulti >= 0, s"pruneToMulti must be >= 0, got $pruneToMulti")
-    val w = cpTracked(words)
-    val inventory = cpTracked(seedInventory(w, maxPieceLen, topKMulti))
+    val ck = graft.core.OpCache.checkpoints(words.sparkSession)
+    val w = ck.cut(words)
+    val inventory = ck.cut(seedInventory(w, maxPieceLen, topKMulti))
     var model = modelFrom(inventory.select(col("piece"), col("f").as("c")))
     for (_ <- 1 to emRounds) {
       model = modelFrom(
@@ -184,16 +179,17 @@ object UnigramTrainer {
           .select(col("piece"), (col("c_raw") + 1L).as("c")))
     }
     // prune on usage under the final EM model
-    val cnts = cpTracked(segCounts(w, inventory, model))
+    val cnts = ck.cut(segCounts(w, inventory, model))
     val prunedInv = cnts.filter(length(col("piece")) === 1).select("piece")
       .unionByName(cnts.filter(length(col("piece")) > 1)
         .orderBy(col("c_raw").desc, col("piece")).limit(pruneToMulti)
         .select("piece"))
-    val prunedInvCp = cpTracked(prunedInv)
+    val prunedInvCp = ck.cut(prunedInv)
     val prunedModel = modelFrom(
       cnts.join(prunedInvCp, Seq("piece"), "left_semi")
         .select(col("piece"), (col("c_raw") + 1L).as("c")))
-    val fin = cpTracked(segCounts(w, prunedInvCp, prunedModel))
+    val fin = ck.cut(segCounts(w, prunedInvCp, prunedModel))
+    ck.keep()
     val sm = fin.select(col("piece"), col("c_raw"), (col("c_raw") + 1L).as("c"))
     val tot = sm.agg(sum(col("c")).as("_tot"))
     sm.crossJoin(broadcast(tot))
@@ -207,14 +203,17 @@ object UnigramTrainer {
   def trainModel(words: DataFrame, maxPieceLen: Int, topKMulti: Int,
       emRounds: Int): UnigramLmModel = {
     require(emRounds >= 1, s"emRounds must be >= 1, got $emRounds")
-    val w = cpTracked(words)
-    val inventory = cpTracked(seedInventory(w, maxPieceLen, topKMulti))
+    val ck = graft.core.OpCache.checkpoints(words.sparkSession)
+    val w = ck.cut(words)
+    val inventory = ck.cut(seedInventory(w, maxPieceLen, topKMulti))
     var model = modelFrom(inventory.select(col("piece"), col("f").as("c")))
     for (_ <- 1 to emRounds) {
       val counts = segCounts(w, inventory, model)
       model = modelFrom(
         counts.select(col("piece"), (col("c_raw") + 1L).as("c")))
     }
+    // the model is driver-side: nothing reads the cuts any more
+    ck.free()
     model
   }
 }

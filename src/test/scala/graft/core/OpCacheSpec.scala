@@ -112,4 +112,71 @@ class OpCacheSpec extends SparkSpec {
     }
     assert(OpCache.registered === 0)
   }
+
+  private def jobsIn(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  // an aggregate over a shuffle: the shape of every loop round
+  private def roundLike(n: Int) =
+    (1 to n).toDF("x").groupBy(($"x" % 7).as("k")).count()
+
+  test("checkpoint handle: a local cut launches no job, cutEager does; settle frees older cuts, keep registers the rest") {
+    spark.catalog.clearCache()
+    OpCache.release(blocking = true)
+    val sc = spark.sparkContext
+    assert(sc.getCheckpointDir.isEmpty)
+    val ck = OpCache.checkpoints(spark)
+    var first: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn("ck-lazy") { first = ck.cut(spark.range(0, 200).select(($"id" % 7).as("k"))) } === 0,
+      "a lazy cut must leave materialization to the round's own action")
+    var second: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn("ck-eager") { second = ck.cutEager(first.distinct()) } >= 1)
+    assert(sc.getPersistentRDDs.size === 2)
+    ck.settle()
+    assert(sc.getPersistentRDDs.size === 1, "settle must free every cut but the newest")
+    ck.keep()
+    assert(OpCache.registeredRdds === 1)
+    assert(second.collect().length === 7)
+    OpCache.release(blocking = true)
+    assert(OpCache.registeredRdds === 0)
+    assert(sc.getPersistentRDDs.isEmpty)
+
+    // over a shuffle, adaptive execution runs the map stage while the
+    // cut is planned; the lazy cut still saves the materializing job
+    val ck2 = OpCache.checkpoints(spark)
+    val lazyJobs = jobsIn("ck-lazy-agg") { ck2.cut(roundLike(200)) }
+    val eagerJobs = jobsIn("ck-eager-agg") { ck2.cutEager(roundLike(201)) }
+    assert(lazyJobs < eagerJobs, s"lazy $lazyJobs vs eager $eagerJobs jobs")
+    ck2.free()
+    assert(sc.getPersistentRDDs.isEmpty)
+  }
+
+  test("checkpoint handle: with a session checkpoint dir every cut is reliable and eager; free deletes its files") {
+    spark.catalog.clearCache()
+    OpCache.release(blocking = true)
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_ck_handle").toString
+    def rddDirs(): Int = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try s.filter(_.getFileName.toString.startsWith("rdd-")).count().toInt
+      finally s.close()
+    }
+    try {
+      sc.setCheckpointDir(dir)
+      val ck = OpCache.checkpoints(spark)
+      var out: org.apache.spark.sql.DataFrame = null
+      assert(jobsIn("ck-reliable") { out = ck.cut(roundLike(300)) } >= 1,
+        "a reliable cut must be eager")
+      assert(rddDirs() === 1, "the cut must be written to the checkpoint dir")
+      assert(out.collect().length === 7)
+      ck.free()
+      assert(rddDirs() === 0, "free must delete the checkpoint files")
+      assert(OpCache.registeredRdds === 0)
+    } finally sc.setCheckpointDir(null)
+    assert(sc.getCheckpointDir.isEmpty)
+  }
 }

@@ -225,6 +225,22 @@ class NearDupSimilaritySpec extends SparkSpec {
     Similarity.clearSeedModels()
   }
 
+  test("seed-model memo: a seed dir rewritten in place serves the new model") {
+    Similarity.clearSeedModels()
+    val p = java.nio.file.Files.createTempDirectory("seedstale").toString + "/seeds"
+    val emb = (0 until 16).map(i => (i.toLong, Array.tabulate(4)(d => (i * 3 + d).toFloat + 1f)))
+      .toDF("vec_id", "embedding")
+    def cells(): Set[Long] =
+      Similarity.assignCells(emb, spark.read.parquet(p), "vec_id", "embedding")
+        .select("cell").as[Long].collect().toSet
+    emb.filter($"vec_id" < 2).write.mode("overwrite").parquet(p)
+    assert(cells().subsetOf(Set(0L, 1L)))
+    emb.filter($"vec_id" >= 14).write.mode("overwrite").parquet(p)
+    assert(cells().subsetOf(Set(14L, 15L)),
+      "the memo served the model collected before the seed files were rewritten")
+    Similarity.clearSeedModels()
+  }
+
   test("containmentPairs finds the quoted excerpt symmetric Jaccard misses") {
     val long = (1 to 60).map(i => s"w$i").mkString(" ")
     val quote = (20 to 31).map(i => s"w$i").mkString(" ") // 12-token excerpt
