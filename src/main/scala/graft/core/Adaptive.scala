@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Scale-adaptive parallelism for CPU-bound per-row stages (guide
   * §2.5): derive the stage width from the INPUT SIZE instead of a
@@ -29,6 +29,31 @@ import org.apache.spark.sql.DataFrame
   * contract (order-independent integer/decimal sums, per-row
   * projections), so this changes wall-clock shape only — the specs
   * that lock those contracts gate it.
+  *
+  * '''Ordered per-row queries: [[rangeForCpu]], not [[spreadForCpu]].'''
+  * A query of the shape `scan → per-row kernel projection →
+  * orderBy(key)` gets its range exchange from `EnsureRequirements`
+  * ABOVE the projection. Spark's `RangePartitioner` builds its bounds
+  * with a sampling job that runs the exchange's whole child pipeline,
+  * and the shuffle map stage then runs it again: every row is scored
+  * twice, and over a one-split scan both passes are one task.
+  * `spreadForCpu` would not help: its round-robin exchange spreads
+  * the kernels but the orderBy still adds its own range exchange
+  * above them (and a second sampling pass). `rangeForCpu` instead
+  * range-partitions the projection's INPUT by the order key. A
+  * projection that passes the key through as a plain attribute keeps
+  * `RangePartitioning(key)` as its output partitioning, which already
+  * satisfies the final sort's `OrderedDistribution`, so no second
+  * exchange is planned: the sampling job reads raw scan columns only,
+  * and the kernels run once, after the shuffle, on every core.
+  *
+  * The trade: the shuffle now carries the projection's INPUT (the
+  * document text) instead of its output (a handful of scores), so
+  * shuffle bytes grow, in exchange for scoring each row once, in
+  * parallel. It pays when the per-row work costs more than moving the
+  * row (measured on the `text_kernels` benchmark workload: see
+  * CHANGES.md). A scan that already arrives split is left to the
+  * orderBy's own exchange, unmeasured so far.
   */
 object Adaptive {
 
@@ -43,16 +68,38 @@ object Adaptive {
     if (tasks >= par) par else math.max(1, tasks.toInt)
   }
 
+  /** Plan-statistics estimate of how many splits `df`'s scan arrives
+    * in: estimated bytes over `spark.sql.files.maxPartitionBytes` (no
+    * job, no action).
+    */
+  private def estSplits(df: DataFrame): Int = {
+    val splitBytes = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    (bytes / math.max(1L, splitBytes)).min(Int.MaxValue).toInt
+  }
+
   /** Repartition `df` to [[cpuWidth]] UNLESS its scan already arrives
     * at least that wide (plan-statistics estimate of the split count —
     * no job, no action).
     */
   def spreadForCpu(df: DataFrame, bytesPerTask: Long): DataFrame = {
     val target = cpuWidth(df, bytesPerTask)
-    val conf = df.sparkSession.sessionState.conf
-    val splitBytes = conf.filesMaxPartitionBytes
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val estSplits = (bytes / math.max(1L, splitBytes)).min(Int.MaxValue).toInt
-    if (estSplits >= target || target <= 1) df else df.repartition(target)
+    if (estSplits(df) >= target || target <= 1) df else df.repartition(target)
+  }
+
+  /** Range-partition `df`, the INPUT of a per-row projection whose
+    * result is ordered by `keys`, by those keys at [[cpuWidth]] (see
+    * the object doc), UNLESS its scan already arrives at least that
+    * wide: then `df` is returned as is and the orderBy plans its own
+    * exchange, the [[spreadForCpu]] rule. Plan statistics only, no
+    * action; width 1 builds no sampling job, and the exchange is a
+    * repartition by number, so AQE does not coalesce it. The caller
+    * must pass the keys through the projection as plain attributes,
+    * or the final sort plans its own exchange again.
+    */
+  def rangeForCpu(df: DataFrame, bytesPerTask: Long, keys: Column*): DataFrame = {
+    val target = cpuWidth(df, bytesPerTask)
+    if (estSplits(df) >= target && target > 1) df
+    else df.repartitionByRange(target, keys: _*)
   }
 }

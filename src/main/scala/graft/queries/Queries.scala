@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.{AggMethod, ColSpec, Exact, Tables}
+import graft.core.{Adaptive, AggMethod, ColSpec, Exact, Tables}
 import graft.functions.{Text, Url, ZOrder}
 import graft.operators._
 import graft.sources.DelimitedSource
@@ -115,6 +115,17 @@ object Queries {
 
   private def events(s: SparkSession, dir: String) = Tables.events(s, dir)
   private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
+
+  /** The input of a per-row scoring projection whose result is ordered
+    * by `doc_id`, range-partitioned by `doc_id` so the final orderBy
+    * needs no exchange of its own and every row is scored once, on
+    * every core ([[Adaptive.rangeForCpu]]). `doc_id` must pass through
+    * the projection as a plain column. The shuffle then moves the text
+    * instead of the scores, so a site is wrapped only where per-query
+    * timing showed a gain (CHANGES.md); trivial kernels are left as is.
+    */
+  private def byDocId(df: DataFrame): DataFrame =
+    Adaptive.rangeForCpu(df, 64L << 10, col("doc_id"))
 
   /** events with the diary-adapter columns: d (date), k (json weight). */
   private def ev(s: SparkSession, dir: String): DataFrame =
@@ -463,7 +474,7 @@ object Queries {
   /** Text analysis: token counts, ratios, quality score, language-ID. */
   val q18Text: Q = (s, dir) => {
     val t = col("text")
-    docs(s, dir).select(
+    byDocId(docs(s, dir)).select(
       col("doc_id"),
       Text.tokenCount(t).cast("long").as("token_count"),
       Text.bpeishTokenCount(t).as("bpeish_tokens"),
@@ -921,7 +932,7 @@ object Queries {
   val q48PiiRedact: Q = (s, dir) => {
     val emailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
     val phonePat = "\\b555-[0-9]{4}\\b"
-    val planted = docs(s, dir).select(col("doc_id"),
+    val planted = byDocId(docs(s, dir)).select(col("doc_id"),
       concat(col("text"),
         when(col("doc_id") % 3 === 0,
           concat(lit(" contact user"), col("doc_id"), lit("@example.com"))).otherwise(lit("")),
@@ -1984,7 +1995,7 @@ object Queries {
       "lang_en"    -> (Text.langId(txt) === "en"),
       "stopword"   -> (Text.stopwordRatio(txt) >= 0.04),
       "punct"      -> (Text.punctRatio(txt) <= 0.2))
-    QualityCascade.annotate(docs(s, dir).select(col("doc_id"), txt), rules)
+    QualityCascade.annotate(byDocId(docs(s, dir)).select(col("doc_id"), txt), rules)
       .select("doc_id", "verdict")
       .orderBy("doc_id")
   }
@@ -2352,7 +2363,7 @@ object Queries {
     * codepoint-class semantics are cross-checked, not assumed.
     */
   val q96ScriptProfile: Q = (s, dir) => {
-    val planted = docs(s, dir).select(col("doc_id"),
+    val planted = byDocId(docs(s, dir)).select(col("doc_id"),
       concat(col("text"),
         when(col("doc_id") % 4 === 1, lit(" привет мир"))
           .when(col("doc_id") % 4 === 2, lit(" 你好世界"))
@@ -3920,7 +3931,7 @@ object Queries {
     val d = docs(s, dir).select("doc_id", "text")
     val (bg, _) = LanguageModel.trainBigram(
       d.filter(col("doc_id") % 10 < 8), "text")
-    LanguageModel.perplexityKneserNey(d, "doc_id", "text", bg)
+    LanguageModel.perplexityKneserNey(byDocId(d), "doc_id", "text", bg)
       .orderBy("doc_id")
   }
 
@@ -4075,10 +4086,10 @@ object Queries {
     * unredacted) and a valid one — all derived from doc_id, so the
     * DuckDB oracle rebuilds the injection with the same CASE.
     */
-  private def piiInjectedDocs(s: SparkSession, dir: String): DataFrame = {
+  private def piiInjectedDocs(base: DataFrame): DataFrame = {
     val id = col("doc_id")
     val ids = id.cast("string")
-    docs(s, dir).select(col("doc_id"), col("lang"),
+    base.select(col("doc_id"), col("lang"),
       when(id % 9 === 0, concat(col("text"),
           lit(" contact user"), ids, lit("@example.com at 10."),
           (id % 200).cast("string"), lit("."),
@@ -4108,7 +4119,7 @@ object Queries {
     * replays it byte-for-byte (`Redact` scaladoc).
     */
   val q155PiiRedact: Q = (s, dir) => {
-    Redact.redactPii(piiInjectedDocs(s, dir), "text")
+    Redact.redactPii(piiInjectedDocs(byDocId(docs(s, dir))), "text")
       .select("doc_id", "n_emails", "n_phones", "n_ips", "clean_text")
       .orderBy("doc_id")
   }
@@ -4122,7 +4133,7 @@ object Queries {
   val q156StreamingPiiRedact: Q = (s, dir) => {
     val tmp = Scratch.fresh("q156")
     val (out, chk) = (s"$tmp/out", s"$tmp/chk")
-    val fixture = piiInjectedDocs(s, dir).select("doc_id", "text")
+    val fixture = piiInjectedDocs(docs(s, dir)).select("doc_id", "text")
     val in = memoFixture("q156in", dir) { p =>
       fixture.write.mode("overwrite").parquet(p)
     }
@@ -4145,7 +4156,7 @@ object Queries {
     */
   val q157HtmlNormalize: Q = (s, dir) => {
     val id = col("doc_id")
-    val wrapped = docs(s, dir).select(col("doc_id"),
+    val wrapped = byDocId(docs(s, dir)).select(col("doc_id"),
       when(id % 5 === 0, concat(
           lit("<p class=\"body\">"), col("text"),
           lit("</p>\n<a href=\"https://site.example/d"), id.cast("string"),
@@ -4482,9 +4493,9 @@ object Queries {
     * (below the candidate length floor). Oracle replays the split/
     * extract scan, the per-candidate digit fold, and reassembly.
     */
-  private def ccInjectedDocs(s: SparkSession, dir: String): DataFrame = {
+  private def ccInjectedDocs(base: DataFrame): DataFrame = {
     val id = col("doc_id")
-    docs(s, dir).select(col("doc_id"),
+    base.select(col("doc_id"),
       concat(col("text"),
         when(id % 6 === 0,
           lit(" pay with 4539148803436467 or 1234567890123456"))
@@ -4495,7 +4506,7 @@ object Queries {
   }
 
   val q171LuhnRedact: Q = (s, dir) =>
-    Redact.redactCreditCards(ccInjectedDocs(s, dir), "text")
+    Redact.redactCreditCards(ccInjectedDocs(byDocId(docs(s, dir))), "text")
       .select("doc_id", "n_cc", "n_rejected", "clean_text")
       .orderBy("doc_id")
 
@@ -4507,7 +4518,7 @@ object Queries {
   val q184StreamingLuhn: Q = (s, dir) => {
     val tmp = Scratch.fresh("q184")
     val (out, chk) = (s"$tmp/out", s"$tmp/chk")
-    val fixture = ccInjectedDocs(s, dir)
+    val fixture = ccInjectedDocs(docs(s, dir))
     val in = memoFixture("q184in", dir) { p =>
       fixture.write.mode("overwrite").parquet(p)
     }
@@ -5192,10 +5203,10 @@ object Queries {
     * fractions plus the pass verdict gate against a full SQL replay
     * (line counts, gram windows, the interval-union char coverage).
     */
-  private def repetitionCorpus(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def repetitionCorpus(base: DataFrame): DataFrame = {
     val id = col("doc_id")
     val ids = id.cast("string")
-    docs(s, dir).select(col("doc_id"), concat(
+    base.select(col("doc_id"), concat(
       lit("nav home about contact"), lit("\n"),
       col("text"), lit("\n"),
       when(id % 4 === 0, lit("nav home about contact"))
@@ -5205,7 +5216,7 @@ object Queries {
   }
 
   val q198GopherRepetition: Q = (s, dir) =>
-    Repetition.report(repetitionCorpus(s, dir), "doc_id", "text")
+    Repetition.report(repetitionCorpus(byDocId(docs(s, dir))), "doc_id", "text")
       .orderBy("doc_id")
 
   /** STREAMING Gopher repetition filter ([[Repetition.reportRowwise]]
@@ -5217,7 +5228,7 @@ object Queries {
   val q199StreamingRepetition: Q = (s, dir) => {
     val tmp = Scratch.fresh("q199")
     val (out, chk) = (s"$tmp/out", s"$tmp/chk")
-    val mixed = repetitionCorpus(s, dir)
+    val mixed = repetitionCorpus(docs(s, dir))
     val in = memoFixture("q199in", dir) { p =>
       mixed.write.mode("overwrite").parquet(p)
     }
@@ -5410,7 +5421,7 @@ object Queries {
   val q205CappedRepetition: Q = (s, dir) => {
     val id = col("doc_id")
     val spam = " " + ("spam token " * 60).trim
-    val corpus = repetitionCorpus(s, dir).select(id, concat(col("text"),
+    val corpus = repetitionCorpus(byDocId(docs(s, dir))).select(id, concat(col("text"),
       when(id % 7 === 0, lit(spam)).otherwise(lit("")),
       when(id % 11 === 0, lit("\nextra alpha line\nextra beta line"))
         .otherwise(lit(""))).as("text"))
@@ -5667,7 +5678,7 @@ object Queries {
         "</a></li></ul>"))
   }
 
-  private def mainContentCorpus(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def mainContentCorpus(base: DataFrame): DataFrame = {
     val id = col("doc_id")
     val ids = id.cast("string")
     def branchHtml(segs: Seq[String]): Column =
@@ -5675,7 +5686,7 @@ object Queries {
         (if (i == 0) Seq.empty[Column] else Seq(ids)) :+ lit(seg)
       }: _*)
     val branches = MainContentBranches.map(branchHtml)
-    docs(s, dir).select(id,
+    base.select(id,
       branches.zipWithIndex.tail.foldLeft(
         when(id % 6 === 0, branches(0))) {
         case (acc, (b, i)) => acc.when(id % 6 === i, b)
@@ -5692,7 +5703,7 @@ object Queries {
     * both class passes, and the joined content byte-for-byte.
     */
   val q209MainContent: Q = (s, dir) =>
-    MainContent.extract(mainContentCorpus(s, dir), "doc_id", "html")
+    MainContent.extract(mainContentCorpus(byDocId(docs(s, dir))), "doc_id", "html")
       .orderBy("doc_id")
 
   /** The per-block diagnostics under q209's fixtures
@@ -5701,7 +5712,7 @@ object Queries {
     * — every threshold decision is a gated row.
     */
   val q210MainContentBlocks: Q = (s, dir) =>
-    MainContent.blockReport(mainContentCorpus(s, dir), "doc_id", "html")
+    MainContent.blockReport(mainContentCorpus(byDocId(docs(s, dir))), "doc_id", "html")
       .orderBy("doc_id", "block_idx")
 
   /** STREAMING main-content extraction — [[MainContent.extract]] is a
@@ -5713,7 +5724,7 @@ object Queries {
   val q211StreamingMainContent: Q = (s, dir) => {
     val tmp = Scratch.fresh("q211")
     val (out, chk) = (s"$tmp/out", s"$tmp/chk")
-    val mixed = mainContentCorpus(s, dir)
+    val mixed = mainContentCorpus(docs(s, dir))
     val in = memoFixture("q211in", dir) { p =>
       mixed.write.mode("overwrite").parquet(p)
     }
@@ -5735,7 +5746,7 @@ object Queries {
     * statement.
     */
   val q213WebPipeline: Q = (s, dir) => {
-    val content = MainContent.extract(mainContentCorpus(s, dir),
+    val content = MainContent.extract(mainContentCorpus(byDocId(docs(s, dir))),
         "doc_id", "html")
       .select(col("doc_id"), col("content"))
     GopherQuality.report(content, "doc_id", "content", minWords = 8L)
@@ -5879,11 +5890,11 @@ object Queries {
     * otherwise unique by construction (each boundary token sequence
     * appears once per doc).
     */
-  private def fullRepetitionCorpus(s: SparkSession, dir: String): DataFrame = {
+  private def fullRepetitionCorpus(base: DataFrame): DataFrame = {
     val id = col("doc_id")
     val ids = id.cast("string")
     val ten = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs(s, dir).select(col("doc_id"), concat(
+    base.select(col("doc_id"), concat(
       lit("intro "), col("text"), lit("\n\n"),
       when(id % 3 === 0, lit("shared paragraph body repeated"))
         .otherwise(concat(lit("solo para "), ids)), lit("\n\n"),
@@ -5905,7 +5916,7 @@ object Queries {
     * same (n, threshold) tables the operator uses).
     */
   val q217FullRepetition: Q = (s, dir) =>
-    Repetition.reportFull(fullRepetitionCorpus(s, dir), "doc_id", "text")
+    Repetition.reportFull(fullRepetitionCorpus(byDocId(docs(s, dir))), "doc_id", "text")
       .orderBy("doc_id")
 
   /** STREAMING end-to-end web ingestion — q213's two stages
@@ -5918,7 +5929,7 @@ object Queries {
   val q218StreamingWebPipeline: Q = (s, dir) => {
     val tmp = Scratch.fresh("q218")
     val (out, chk) = (s"$tmp/out", s"$tmp/chk")
-    val mixed = mainContentCorpus(s, dir)
+    val mixed = mainContentCorpus(docs(s, dir))
     val in = memoFixture("q218in", dir) { p =>
       mixed.write.mode("overwrite").parquet(p)
     }
@@ -6024,7 +6035,7 @@ object Queries {
   val q222StreamingFullRepetition: Q = (s, dir) => {
     val tmp = Scratch.fresh("q222")
     val (out, chk) = (s"$tmp/out", s"$tmp/chk")
-    val mixed = fullRepetitionCorpus(s, dir)
+    val mixed = fullRepetitionCorpus(docs(s, dir))
     val in = memoFixture("q222in", dir) { p =>
       mixed.write.mode("overwrite").parquet(p)
     }

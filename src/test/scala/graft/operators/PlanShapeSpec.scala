@@ -221,6 +221,43 @@ class PlanShapeSpec extends SparkSpec {
       s"frame sampling should be a pure map-side fan-out before the sort, got $shuffles hash exchanges")
   }
 
+  test("ordered per-row queries: the range exchange sits below the kernels, and is the only one") {
+    val dir = "/root/testdata/sf0.01"
+    assume(new java.io.File(s"$dir/documents.parquet").exists())
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+    def onDocId(shape: graft.PlanDump.Shape): Boolean =
+      shape.finalExchange.map(_.outputPartitioning).exists {
+        case SinglePartition => true
+        case r: RangePartitioning => r.ordering.headOption.exists(_.child match {
+          case a: Attribute => a.name == "doc_id"
+          case _ => false
+        })
+        case _ => false
+      }
+    // one exchange on doc_id over the raw scan columns (a single-
+    // partition one at sf0.01, one task's worth): no sampling job runs
+    // a kernel, and the final sort adds none
+    for (name <- Seq("q18_text", "q48_pii_redact", "q82_quality_cascade",
+        "q96_script_profile", "q150_kneser_ney_perplexity", "q155_pii_redact",
+        "q157_html_normalize", "q171_luhn_redact", "q198_gopher_repetition",
+        "q205_capped_repetition", "q209_main_content", "q210_main_content_blocks",
+        "q213_web_pipeline", "q217_full_repetition")) {
+      val q = graft.SparkEntry.queries(name)(spark, dir)
+      q.collect()
+      val shape = graft.PlanDump.shape(q.queryExecution.executedPlan)
+      assert(shape.exchanges === 1, s"$name: $shape")
+      assert(onDocId(shape), s"$name: the final exchange is not on doc_id: $shape")
+      assert(!shape.computedBelow, s"$name: a computed projection runs below the exchange")
+    }
+    // the streaming twins' fixtures still come from the plain scan
+    val docs = graft.core.Tables.documents(spark, dir)
+    for (fixture <- Seq(graft.queries.Queries.repetitionCorpus(docs),
+        graft.queries.Queries.mainContentCorpus(docs)))
+      assert(graft.PlanDump.shape(fixture.queryExecution.executedPlan).exchanges === 0)
+    graft.core.OpCache.release(blocking = true)
+  }
+
   test("quantizedTopK: group-limit pushdown survives; survivor band is a broadcast join, not a window") {
     val emb = (0 until 80).map(i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 17 + d * 5) % 11).toFloat / 11f - 0.4f)))

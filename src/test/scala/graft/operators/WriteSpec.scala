@@ -48,7 +48,9 @@ class WriteSpec extends SparkSpec {
   }
 
   test("dsum survives large magnitudes under ANSI mode (no silent null)") {
-    val prev = spark.conf.get("spark.sql.ansi.enabled", "false")
+    // the session's real value (Spark 4 defaults to true), restored
+    // as is so later suites on the shared session keep it
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
       // 10^12-scale values: DECIMAL(18,4) would overflow at the cast;
