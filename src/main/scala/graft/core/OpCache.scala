@@ -33,8 +33,8 @@ import org.apache.spark.storage.StorageLevel
   * call persists and returns a [[Scope]] releasable independently:
   *
   * {{{
-  * val (dedup, s1) = OpCache.scoped(Dedup.nearDupRemoval(docs))
-  * val (ann, s2)   = OpCache.scoped(Similarity.ivfTopK(q, corpus))
+  * val (dedup, s1) = OpCache.scoped(NearDup.nearDupPairs(docs, "doc_id", "text", 0.5))
+  * val (ann, s2)   = OpCache.scoped(Similarity.ivfTopKSeeded(q, corpus, seeds, "id", "v", 5, 4))
   * dedup.write.parquet(out); s1.release()   // ann's blocks untouched
   * }}}
   *

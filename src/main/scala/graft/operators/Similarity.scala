@@ -24,7 +24,8 @@ import graft.operators.IndexManifest.BaseSlice
   * All vector math is higher-order-function `Column` expressions
   * (zip_with/aggregate) — codegen-friendly, no UDFs.
   *
-  * Caching contract: the exact paths ([[bruteForceTopK]] with
+  * Caching contract: the exact paths (every caller of the certified
+  * refine [[certifiedTopK]], e.g. [[bruteForceTopK]] with
   * `exact = true`, [[ivfTopKSeeded]], [[quantizedTopK]]) persist
   * intermediate frames (norms, the slim candidate pass) because each
   * feeds several consumers of one returned plan. The blocks cannot be
@@ -53,10 +54,12 @@ object Similarity {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity; 0 when either vector is all-zero. */
-  def cosine(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d > 0, dot(a, b) / d).otherwise(0.0)
-  }
+  def cosine(a: Column, b: Column): Column = cosineOf(dot(a, b), norm(a) * norm(b))
+
+  /** A cosine from a dot product and the product of the two norms;
+    * 0 when either vector is all-zero. */
+  private def cosineOf(dotAB: Column, den: Column): Column =
+    when(den > 0, dotAB / den).otherwise(0.0)
 
   /** Order-independent dot product: each float·float product (exact in
     * double) is quantized to scale 12 and exact-summed, so the result
@@ -81,10 +84,21 @@ object Similarity {
       (s, v) => (s + v).cast(DecimalType(28, 12))).cast("double")
 
   /** Deterministic cosine built on [[dotExact]]. */
-  def cosineExact(a: Column, b: Column): Column = {
-    val den = sqrt(dotExact(a, a)) * sqrt(dotExact(b, b))
-    when(den > 0, dotExact(a, b) / den).otherwise(0.0)
-  }
+  def cosineExact(a: Column, b: Column): Column =
+    cosineOf(dotExact(a, b), sqrt(dotExact(a, a)) * sqrt(dotExact(b, b)))
+
+  /** The decimal-exact norm of a vector column — the one norm every
+    * exact path divides by. */
+  private def exactNorm(vecCol: String): Column =
+    sqrt(dotExact(col(vecCol), col(vecCol)))
+
+  /** `df` as (`id`, `_<p>v` vector, `_<p>n` exact norm, `extra`…): the
+    * query (`p` = "q"), corpus ("c") and seed ("s") sides of the exact
+    * paths. */
+  private def normed(df: DataFrame, id: Column, vecCol: String, p: String,
+      extra: Column*): DataFrame =
+    df.select(Seq(id, col(vecCol).as(s"_${p}v"),
+      exactNorm(vecCol).as(s"_${p}n")) ++ extra: _*)
 
   /** Exact top-k neighbors for each query vector against the corpus.
     * Both frames need (`idCol`, `vecCol`). Ties broken by corpus id —
@@ -107,23 +121,17 @@ object Similarity {
     // exact mode they're persisted too, since the pair pass and the
     // survivor re-attach would otherwise each run the decimal-exact
     // norm scan
-    def d(a: Column, b: Column) = if (exact) dotExact(a, b) else dot(a, b)
-    def persistIfExact(df: DataFrame) =
-      if (exact) df.persistTracked else df
-    val q = persistIfExact(queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-      sqrt(d(col(vecCol), col(vecCol))).as("_qn")))
-    val c = persistIfExact(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-      sqrt(d(col(vecCol), col(vecCol))).as("_cn")))
-    val den = col("_qn") * col("_cn")
+    def side(df: DataFrame, id: String, p: String) =
+      if (exact) normed(df, col(idCol).as(id), vecCol, p).persistTracked
+      else df.select(col(idCol).as(id), col(vecCol).as(s"_${p}v"),
+        norm(col(vecCol)).as(s"_${p}n"))
+    val q = side(queries, "query_id", "q")
+    val c = side(corpus, "neighbor_id", "c")
     val pairs = q.join(c, col("query_id") =!= col("neighbor_id"))
     if (exact) exactTopKRefine(q, c, pairs, k, roundDp)
     else {
-      val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-      val cos = when(den > 0, dot(col("_qv"), col("_cv")) / den).otherwise(0.0)
-      pairs.withColumn("sim", if (roundDp < 0) cos else round(cos, roundDp))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+      val cos = cosineOf(dot(col("_qv"), col("_cv")), col("_qn") * col("_cn"))
+      rankTopK(pairs, "sim", if (roundDp < 0) cos else round(cos, roundDp), k)
     }
   }
 
@@ -132,7 +140,7 @@ object Similarity {
     * DIFFERENT label — "looks like the anchor but isn't" is exactly
     * the negative that teaches a contrastive model its decision
     * boundary (in-batch random negatives are mostly easy and carry
-    * little gradient). Same decimal-exact epsilon-band refine as
+    * little gradient). Same decimal-exact refine as
     * [[bruteForceTopK]] exact mode, with the label-mismatch predicate
     * fused into the pair pass — label filtering AFTER a plain top-k
     * would under-fill k whenever same-label vectors crowd the
@@ -149,17 +157,28 @@ object Similarity {
       labelCol: String,
       k: Int,
       roundDp: Int = 6): DataFrame = {
-    val q = anchors.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("_qn"),
-        col(labelCol).as("_ql"))
-      .persistTracked
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("_cn"),
-        col(labelCol).as("_cl"))
-      .persistTracked
+    val q = normed(anchors, col(idCol).as("query_id"), vecCol, "q",
+      col(labelCol).as("_ql")).persistTracked
+    val c = normed(corpus, col(idCol).as("neighbor_id"), vecCol, "c",
+      col(labelCol).as("_cl")).persistTracked
     val pairs = q.join(c,
       col("query_id") =!= col("neighbor_id") && col("_ql") =!= col("_cl"))
     exactTopKRefine(q, c, pairs, k, roundDp)
+  }
+
+  /** The one rank policy of every top-k here: per query, `score`
+    * descending with ties to the lower `neighbor_id`, the first k
+    * rows — (query_id, neighbor_id, `score`, rank). The pure
+    * `rank <= k` filter keeps Spark's WindowGroupLimit rewrite: each
+    * map task keeps k rows per query before the window shuffle.
+    */
+  private def rankTopK(pairs: DataFrame, score: String, value: Column,
+      k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col(score).desc, col("neighbor_id"))
+    pairs.withColumn(score, value)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", score, "rank")
   }
 
   /** Per-query k-th value bound — the VALUE at row k of
@@ -204,62 +223,82 @@ object Similarity {
     }
   }
 
-  /** Decimal-exact top-k over a candidate-pair frame — the staged
-    * epsilon-band refine shared by [[bruteForceTopK]] exact mode and
-    * [[ivfTopKSeeded]]. Rank with the cheap double cosine, keep
-    * everything within a band of the kth fast sim, score only the
-    * survivors decimal-exactly. Soundness: |double−exact| ≤ ε₀ ≈ 1e-11
-    * per cosine (bounded term count), so any pair in the exact top-k
-    * has fast ≥ kth_fast − 2ε₀ > kth_fast − 1e-9 — even mass ties at
-    * the cutoff (duplicate embeddings) ALL survive; output is identical
-    * to scoring every pair exactly, at a small fraction of the decimal
-    * work.
+  /** The certificate of a cheap screen score: every pair of the exact
+    * top-k has `upper` ≥ the query's k-th largest `lower` − `slack`.
+    * `kth` names the column that carries that k-th bound. */
+  private case class Band(lower: Column, upper: Column, slack: Double, kth: String)
+
+  /** The double cosine `_sim_fast`: |double − exact| ≤ ε₀ ≈ 1e-11 per
+    * cosine (bounded term count), so a 1e-9 slack covers 2ε₀ with
+    * room to spare — even mass ties at the cutoff (duplicate
+    * embeddings) all survive. */
+  private val FastBand =
+    Band(col("_sim_fast"), col("_sim_fast"), 1e-9, "_kth_fast")
+
+  /** A quantized estimate `_est` with a rigorous per-pair error bound
+    * `_beta` (int8 in [[quantizedTopK]], PQ in [[pqCertifiedTopK]]). */
+  private val EstBand = Band(col("_est") - col("_beta"),
+    col("_est") + col("_beta"), 0.0, "_kth_lb")
+
+  /** The certified top-k refine every exact ANN path ends in: screen
+    * each candidate pair with a cheap score, keep the pairs whose
+    * upper bound reaches the per-query k-th lower bound, re-score only
+    * those survivors decimal-exactly, rank. Output is identical to
+    * scoring every candidate exactly, at a small fraction of the
+    * decimal work.
     *
-    * The staging is engineered to keep Spark's WindowGroupLimit
-    * pushdown: a pure `rank === k` filter lets every map task keep only
-    * k rows per query BEFORE the window shuffle, while OR-ing the band
-    * predicate into the rank filter would disable the rewrite and
-    * shuffle+sort every pair (~2× whole-query cost, measured). So:
-    * (A) a slim vector-free pass persists (query, neighbor, fast);
-    * (B) the kth fast sim per query comes from the group-limited rank;
-    * (C) the band filter is a broadcast join + filter, no window;
-    * (D) vectors re-attach to the tiny survivor set for the
-    * decimal-exact score.
+    * Soundness: with L the k-th largest lower bound, at least k pairs
+    * score ≥ L, so every pair of the exact top-k has upper ≥ L. When
+    * the similarity is rounded to `roundDp` before ranking, a pair up
+    * to one rounding quantum below can round INTO a tie at the cutoff
+    * and win on its lower `neighbor_id`, so the band widens by
+    * 10^-roundDp.
     *
-    * @param q     unique query rows (query_id, _qv, _qn)
-    * @param c     unique corpus rows (neighbor_id, _cv, _cn)
-    * @param pairs candidate pairs carrying all six columns
+    * The staging keeps Spark's WindowGroupLimit pushdown: OR-ing the
+    * band predicate into the final rank filter would disable the
+    * rewrite and shuffle+sort every pair (~2× whole-query cost,
+    * measured). So:
+    * (A) `slim` — one vector-free (query_id, neighbor_id, bounds) row
+    * per candidate — is persisted, since (B) and (C) both read it;
+    * (B) the k-th lower bound per query is a mergeable bottom-k
+    * aggregate ([[kthValueBound]]), no window;
+    * (C) the band filter is a broadcast join + filter, no window; a
+    * query with fewer than k candidates has no bound row and keeps
+    * them all;
+    * (D) vectors re-attach to the small survivor set for the
+    * decimal-exact score, and [[rankTopK]]'s pure rank filter ranks.
+    *
+    * @param q    unique query rows (query_id, _qv, _qn)
+    * @param c    unique corpus rows (neighbor_id, _cv, _cn)
+    * @param slim one row per candidate pair with the band's columns
     */
+  private def certifiedTopK(q: DataFrame, c: DataFrame, slim: DataFrame,
+      band: Band, k: Int, roundDp: Int): DataFrame = {
+    val cands = slim.persistTracked
+    val kth = kthValueBound(cands, band.lower, k, band.kth)
+    val roundSlack = if (roundDp >= 0) math.pow(10.0, -roundDp) else 0.0
+    val surv = cands.join(broadcast(kth), Seq("query_id"), "left")
+      .filter(col(band.kth).isNull ||
+        band.upper >= col(band.kth) - (band.slack + roundSlack))
+      .select("query_id", "neighbor_id")
+    val cosE = cosineOf(dotExact(col("_qv"), col("_cv")), col("_qn") * col("_cn"))
+    rankTopK(c.join(broadcast(surv.join(q, "query_id")), "neighbor_id"),
+      "sim", if (roundDp < 0) cosE else round(cosE, roundDp), k)
+  }
+
+  /** [[certifiedTopK]] over a candidate-pair frame carrying all six
+    * columns of `q` and `c`, screened by the double cosine
+    * ([[FastBand]]). */
   private def exactTopKRefine(
       q: DataFrame,
       c: DataFrame,
       pairs: DataFrame,
       k: Int,
       roundDp: Int): DataFrame = {
-
-    val den = col("_qn") * col("_cn")
-    val fast = when(den > 0, dot(col("_qv"), col("_cv")) / den).otherwise(0.0)
-    val slim = pairs.withColumn("_sim_fast", fast)
-      .select("query_id", "neighbor_id", "_sim_fast")
-      .persistTracked
-    // mergeable bottom-k kth bound (see [[kthValueBound]]) — the
-    // former WindowGroupLimit-friendly row_number window achieved the
-    // same map-side k-per-query cap but still sorted each partition
-    // and carried a Window node; the aggregate form drops both
-    val kth = kthValueBound(slim, col("_sim_fast"), k, "_kth_fast")
-    // left join: a query with < k candidates has no kth row — keep all
-    // its candidates
-    val surv = slim.join(broadcast(kth), Seq("query_id"), "left")
-      .filter(col("_kth_fast").isNull ||
-        col("_sim_fast") >= col("_kth_fast") - 1e-9)
-      .select("query_id", "neighbor_id")
-    val cosE = when(den > 0, dotExact(col("_qv"), col("_cv")) / den).otherwise(0.0)
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(broadcast(surv.join(q, "query_id")), "neighbor_id")
-      .withColumn("sim", if (roundDp < 0) cosE else round(cosE, roundDp))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    val fast = cosineOf(dot(col("_qv"), col("_cv")), col("_qn") * col("_cn"))
+    certifiedTopK(q, c,
+      pairs.withColumn("_sim_fast", fast).select("query_id", "neighbor_id", "_sim_fast"),
+      FastBand, k, roundDp)
   }
 
   /** Deterministic pseudo-random unit hyperplanes (fixed seed — the
@@ -341,13 +380,8 @@ object Similarity {
 
     // each corpus vector lives in exactly ONE cell (argmax assignment),
     // so (query, neighbor) pairs are already unique — no dedup shuffle
-    val scored = q.join(c, Seq("_cell")).filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(cosine(col("_qv"), col("_cv")), 6))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    rankTopK(q.join(c, Seq("_cell")).filter(col("query_id") =!= col("neighbor_id")),
+      "sim", round(cosine(col("_qv"), col("_cv")), 6), k)
   }
 
   /** IVF ANN with DATA-DERIVED coarse centroids: cells are actual
@@ -375,28 +409,35 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int,
-      nProbe: Int): DataFrame = {
+      nProbe: Int): DataFrame =
+    ivfServe(queries, corpus, seeds, idCol, vecCol, k, nProbe) { (cN, model) =>
+      assignCellsFromModel(cN, model, "neighbor_id").withColumnRenamed("cell", "_cell")
+    }
 
-    val s = seeds.select(col(idCol).as("_cell"), col(vecCol).as("_sv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_sn"))
+  /** The IVF serve body of [[ivfTopKSeeded]] and [[ivfTopKFromIndex]];
+    * `cellsOf(cN, model)` gives each corpus vector its cell as
+    * (neighbor_id, _cell) — the one step the two differ in.
+    */
+  private def ivfServe(
+      queries: DataFrame,
+      corpus: DataFrame,
+      seeds: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      nProbe: Int)(
+      cellsOf: (DataFrame, Array[Seed]) => DataFrame): DataFrame = {
+
     // the seed set is model-sized — one driver collect serves both the
     // corpus assignment and the query probes as literal expressions
-    val model = collectSeeds(s)
+    val model = seedModel(seeds, idCol, vecCol)
 
     // the decimal-exact self-dot norms feed three consumers each
     // (assignment, probe join, survivor re-attach) — persist so the
     // exact norm pass runs once per vector, not once per consumer
-    val cN = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_cn"))
-      .persistTracked
-    val qN = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_qn"))
-      .persistTracked
-
-    val withCell = cN.join(
-      assignCellsFromModel(cN, model, "neighbor_id")
-        .withColumnRenamed("cell", "_cell"),
-      "neighbor_id")
+    val cN = normed(corpus, col(idCol).as("neighbor_id"), vecCol, "c").persistTracked
+    val qN = normed(queries, col(idCol).as("query_id"), vecCol, "q").persistTracked
+    val withCell = cN.join(cellsOf(cN, model), "neighbor_id")
 
     // queries probe their nProbe closest cells — per query, an array
     // of struct(-exact_sim, cell) over the seed LITERALS, array_sort
@@ -404,11 +445,10 @@ object Similarity {
     // csim DESC, cell), slice to nProbe, explode. A pure map-side
     // projection of qN: no |Q|×|seeds| shuffle, no window, and the
     // query vectors never ride an exchange just to be ranked.
-    def qden(i: Int) = col("_qn") * lit(model(i).norm)
     val probeArr = array(model.indices.map { i =>
       struct(
-        (-when(qden(i) > 0, dotExact(col("_qv"), lit(model(i).vec)) / qden(i))
-          .otherwise(0.0)).as("_negs"),
+        (-cosineOf(dotExact(col("_qv"), lit(model(i).vec)),
+          col("_qn") * lit(model(i).norm))).as("_negs"),
         lit(model(i).cell).as("_cell"))
     }.toIndexedSeq: _*)
     val probes = qN
@@ -416,8 +456,8 @@ object Similarity {
         explode(slice(array_sort(probeArr), 1, nProbe)).as("_pc"))
       .select(col("query_id"), col("_qv"), col("_qn"), col("_pc._cell").as("_cell"))
 
-    // candidates = probed cells' members; exact top-k via the shared
-    // banded refine (decimal work only on the handful of survivors)
+    // candidates = probed cells' members; exact top-k via the certified
+    // refine (decimal work only on the handful of survivors)
     val pairs = probes.join(withCell, Seq("_cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "_qv", "_qn", "neighbor_id", "_cv", "_cn")
@@ -459,42 +499,10 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int,
-      nProbe: Int): DataFrame = {
-
-    val s = seeds.select(col(idCol).as("_cell"), col(vecCol).as("_sv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_sn"))
-    val model = collectSeeds(s)
-
-    val cN = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_cn"))
-      .persistTracked
-    val qN = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_qn"))
-      .persistTracked
-
-    // the stored assignment replaces assignCellsFromModel — the one
-    // structural difference from the inline operator
-    val withCell = cN.join(
-      index.select(col(idCol).as("neighbor_id"), col("cell").as("_cell")),
-      "neighbor_id")
-
-    def qden(i: Int) = col("_qn") * lit(model(i).norm)
-    val probeArr = array(model.indices.map { i =>
-      struct(
-        (-when(qden(i) > 0, dotExact(col("_qv"), lit(model(i).vec)) / qden(i))
-          .otherwise(0.0)).as("_negs"),
-        lit(model(i).cell).as("_cell"))
-    }.toIndexedSeq: _*)
-    val probes = qN
-      .select(col("query_id"), col("_qv"), col("_qn"),
-        explode(slice(array_sort(probeArr), 1, nProbe)).as("_pc"))
-      .select(col("query_id"), col("_qv"), col("_qn"), col("_pc._cell").as("_cell"))
-
-    val pairs = probes.join(withCell, Seq("_cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "_qv", "_qn", "neighbor_id", "_cv", "_cn")
-    exactTopKRefine(qN, cN, pairs, k, roundDp = -1)
-  }
+      nProbe: Int): DataFrame =
+    ivfServe(queries, corpus, seeds, idCol, vecCol, k, nProbe) { (_, _) =>
+      index.select(col(idCol).as("neighbor_id"), col("cell").as("_cell"))
+    }
 
   /** Database-friendly random projection (Achlioptas, "Database-
     * friendly random projections: Johnson-Lindenstrauss with binary
@@ -601,12 +609,7 @@ object Similarity {
       seeds: DataFrame,
       idCol: String,
       vecCol: String): DataFrame =
-    assignCellsFrom(
-      corpus.select(col(idCol), col(vecCol).as("_cv"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("_cn")),
-      seeds.select(col(idCol).as("_cell"), col(vecCol).as("_sv"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("_sn")),
-      idCol)
+    assignCellsFrom(normed(corpus, col(idCol), vecCol, "c"), seeds, idCol, vecCol)
 
   /** One collected seed: (cell id, vector, engine-computed exact norm).
     * The norm is collected rather than recomputed on the driver so the
@@ -655,6 +658,11 @@ object Similarity {
   /** Memoized seed-model count (diagnostics/specs). */
   private[graft] def seedModelsCached: Int = seedModelCache.size
 
+  /** The seed model of a (`idCol`, `vecCol`) seed frame: its
+    * (`_cell`, `_sv`, `_sn`) projection through [[collectSeeds]]. */
+  private def seedModel(seeds: DataFrame, idCol: String, vecCol: String): Array[Seed] =
+    collectSeeds(normed(seeds, col(idCol).as("_cell"), vecCol, "s"))
+
   /** Collect a model-sized seed frame (`_cell`,`_sv`,`_sn`) to the
     * driver, ordered by cell id (the plan must not depend on collect
     * order). Same move as [[lshTopKSeeded]]'s hyperplane seeds.
@@ -673,12 +681,13 @@ object Similarity {
   }
 
   /** [[assignCells]] over a pre-normed corpus frame (`idCol`,`_cv`,
-    * `_cn`) and pre-normed seeds (`_cell`,`_sv`,`_sn`) — lets callers
-    * persist the corpus norm pass when it feeds more consumers than
-    * the assignment.
+    * `_cn`) — lets callers persist the corpus norm pass when it feeds
+    * more consumers than the assignment.
     */
-  private def assignCellsFrom(cN: DataFrame, s: DataFrame, idCol: String): DataFrame =
-    assignCellsFromModel(cN, collectSeeds(s), idCol).select(col(idCol), col("cell"))
+  private def assignCellsFrom(cN: DataFrame, seeds: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    assignCellsFromModel(cN, seedModel(seeds, idCol, vecCol), idCol)
+      .select(col(idCol), col("cell"))
 
   /** The assignment engine: seeds enter the plan as LITERALS (they are
     * model-sized and already on the driver), so the per-vector fast
@@ -710,10 +719,8 @@ object Similarity {
       idCol: String): DataFrame = {
 
     def den(i: Int) = col("_cn") * lit(model(i).norm)
-    def fastSim(i: Int) =
-      when(den(i) > 0, dot(col("_cv"), lit(model(i).vec)) / den(i)).otherwise(0.0)
-    def exactSim(i: Int) =
-      when(den(i) > 0, dotExact(col("_cv"), lit(model(i).vec)) / den(i)).otherwise(0.0)
+    def fastSim(i: Int) = cosineOf(dot(col("_cv"), lit(model(i).vec)), den(i))
+    def exactSim(i: Int) = cosineOf(dotExact(col("_cv"), lit(model(i).vec)), den(i))
     val csimByPos = (1 until model.length).foldLeft(
       when(col("_pos") === 0, exactSim(0))) {
       case (acc, i) => acc.when(col("_pos") === i, exactSim(i))
@@ -748,12 +755,8 @@ object Similarity {
       seeds: DataFrame,
       idCol: String,
       vecCol: String): DataFrame =
-    assignCellsFromModel(
-      corpus.select(col(idCol), col(vecCol).as("_cv"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("_cn")),
-      collectSeeds(seeds.select(col(idCol).as("_cell"), col(vecCol).as("_sv"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("_sn"))),
-      idCol)
+    assignCellsFromModel(normed(corpus, col(idCol), vecCol, "c"),
+      seedModel(seeds, idCol, vecCol), idCol)
       .select(col(idCol), col("cell"), col("_sim").as("sim"))
 
   /** [[nearestSeed]] as a PURE PER-ROW PROJECTION — no groupBy, no
@@ -773,14 +776,11 @@ object Similarity {
       seeds: DataFrame,
       idCol: String,
       vecCol: String): DataFrame = {
-    val model = collectSeeds(seeds.select(col(idCol).as("_cell"), col(vecCol).as("_sv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_sn")))
-    def den(i: Int) = col("_cn") * lit(model(i).norm)
-    def exactSim(i: Int) =
-      when(den(i) > 0, dotExact(col("_cv"), lit(model(i).vec)) / den(i)).otherwise(0.0)
+    val model = seedModel(seeds, idCol, vecCol)
+    def exactSim(i: Int) = cosineOf(dotExact(col("_cv"), lit(model(i).vec)),
+      col("_cn") * lit(model(i).norm))
     val cells = array(model.map(m => lit(m.cell)).toIndexedSeq: _*)
-    corpus.select(col(idCol), col(vecCol).as("_cv"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("_cn"))
+    normed(corpus, col(idCol), vecCol, "c")
       .select(col(idCol),
         array(model.indices.map(exactSim).toIndexedSeq: _*).as("_sa"))
       .select(col(idCol),
@@ -868,13 +868,8 @@ object Similarity {
       threshold: Double): (DataFrame, DataFrame) = {
     require(!threshold.isNaN, "threshold must not be NaN (every comparison would be false)")
 
-    val s = seeds.select(col(idCol).as("_cell"), col(vecCol).as("_sv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_sn"))
-    val cN = corpus.select(col(idCol), col(vecCol).as("_cv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_cn"))
-      .persistTracked
-
-    val assign = assignCellsFrom(cN, s, idCol)
+    val cN = normed(corpus, col(idCol), vecCol, "c").persistTracked
+    val assign = assignCellsFrom(cN, seeds, idCol, vecCol)
 
     // both sides of the cell self-join read this — materialize once
     val withCell = cN.join(assign, idCol)
@@ -886,9 +881,9 @@ object Similarity {
     val den = col("_na") * col("_nb")
     val pairs = a.join(b, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("_fast", when(den > 0, dot(col("_va"), col("_vb")) / den).otherwise(0.0))
+      .withColumn("_fast", cosineOf(dot(col("_va"), col("_vb")), den))
       .filter(col("_fast") >= threshold - 1e-6)
-      .withColumn("_sim", when(den > 0, dotExact(col("_va"), col("_vb")) / den).otherwise(0.0))
+      .withColumn("_sim", cosineOf(dotExact(col("_va"), col("_vb")), den))
       .filter(col("_sim") >= threshold)
       .select(col("id_a"), col("id_b"), col("cell"))
     (withCell, pairs)
@@ -1055,12 +1050,10 @@ object Similarity {
           .otherwise(when(dotExact(vec, sv) >= 0, bit).otherwise(lit(0L)))
       }.reduce(_ + _)
 
-    val qN0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_qn"))
-    val cN0 = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_cn"))
-    val q = qN0.withColumn("_b", bucket(col("_qv"), col("_qn")))
-    val c = cN0.withColumn("_b", bucket(col("_cv"), col("_cn")))
+    val q = normed(queries, col(idCol).as("query_id"), vecCol, "q")
+      .withColumn("_b", bucket(col("_qv"), col("_qn")))
+    val c = normed(corpus, col(idCol).as("neighbor_id"), vecCol, "c")
+      .withColumn("_b", bucket(col("_cv"), col("_cn")))
     val pairs = q.join(c, Seq("_b")).filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "_qv", "_qn", "neighbor_id", "_cv", "_cn")
     exactTopKRefine(
@@ -1087,13 +1080,8 @@ object Similarity {
       lshBucket(col(vecCol), dim, planes).as("_b"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
       lshBucket(col(vecCol), dim, planes).as("_b"))
-    val scored = q.join(c, Seq("_b")).filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(cosine(col("_qv"), col("_cv")), 6))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    rankTopK(q.join(c, Seq("_b")).filter(col("query_id") =!= col("neighbor_id")),
+      "sim", round(cosine(col("_qv"), col("_cv")), 6), k)
   }
 
   /** EXACT cosine top-k through an int8-quantized scan — the
@@ -1117,10 +1105,9 @@ object Similarity {
     * similarity values, same ranking, same tie-break — which is
     * exactly what its oracle checks.
     *
-    * The staging keeps Spark's WindowGroupLimit pushdown (pure
-    * `row_number = k` filter, band applied as a broadcast join —
-    * see [[exactTopKRefine]]'s rationale). Persisted frames follow the
-    * file-head caching contract (lazy result — caller clears cache).
+    * The screen and re-score are [[certifiedTopK]]'s, with the band
+    * (est ± β). Persisted frames follow the file-head caching contract
+    * (lazy result — caller clears cache).
     *
     * At 100 TB: quantization is a map-side projection persisted with
     * the corpus (in a real deployment the byte arrays would be the
@@ -1137,12 +1124,9 @@ object Similarity {
       roundDp: Int = -1): DataFrame = {
 
     import graft.functions.QuantExpressions._
-    def prep(df: DataFrame, id: String, p: String) = df.select(
-      col(idCol).as(id),
-      col(vecCol).as(s"_${p}v"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as(s"_${p}n"),
-      i8Scale(col(vecCol)).as(s"_${p}s"),
-      i8Quantize(col(vecCol)).as(s"_${p}q"))
+    def prep(df: DataFrame, id: String, p: String) =
+      normed(df, col(idCol).as(id), vecCol, p,
+        i8Scale(col(vecCol)).as(s"_${p}s"), i8Quantize(col(vecCol)).as(s"_${p}q"))
       .withColumn(s"_${p}a", i8AbsSum(col(s"_${p}q")))
       .persistTracked
     val q = prep(queries, "query_id", "q")
@@ -1155,32 +1139,11 @@ object Similarity {
     val bndDot = col("_qs") * col("_cs") *
       (col("_ca").cast("double") / 2 + col("_qa").cast("double") / 2 +
         size(col("_qq")).cast("double") / 4)
-    // rounding before ranking widens the must-survive band by one
-    // rounding quantum (pairs that round INTO a tie at the cutoff)
-    val roundSlack = if (roundDp >= 0) math.pow(10.0, -roundDp) else 0.0
-
     val slim = q.join(c, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        when(den > 0, estDot / den).otherwise(0.0).as("_est"),
+        cosineOf(estDot, den).as("_est"),
         when(den > 0, bndDot / den + 1e-9).otherwise(lit(1e-9)).as("_beta"))
-      .persistTracked
-    // mergeable bottom-k kth bound (see [[kthValueBound]]) instead of
-    // the per-query row_number window sort
-    val kth = kthValueBound(slim, col("_est") - col("_beta"), k, "_kth_lb")
-    // left join: a query with < k candidates keeps them all
-    val surv = slim.join(broadcast(kth), Seq("query_id"), "left")
-      .filter(col("_kth_lb").isNull ||
-        col("_est") + col("_beta") >= col("_kth_lb") - roundSlack)
-      .select("query_id", "neighbor_id")
-
-    val cosE = when(den > 0, dotExact(col("_qv"), col("_cv")) / den).otherwise(0.0)
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(broadcast(surv.join(q.select("query_id", "_qv", "_qn"), "query_id")),
-        "neighbor_id")
-      .withColumn("sim", if (roundDp < 0) cosE else round(cosE, roundDp))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    certifiedTopK(q.select("query_id", "_qv", "_qn"), c, slim, EstBand, k, roundDp)
   }
 
   // ------------------------------------------------------------------
@@ -1270,7 +1233,7 @@ object Similarity {
     // remain the executable spec of the per-codeword semantics.
     corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"))
-      .withColumn("_cn", sqrt(dotExact(col("_cv"), col("_cv"))))
+      .withColumn("_cn", exactNorm("_cv"))
       .withColumn("_codes",
         graft.functions.CentroidExpressions.pqAssign(col("_cv"), books, exact))
       .withColumn("_r",
@@ -1322,14 +1285,12 @@ object Similarity {
       books: Array[Array[Array[Double]]], k: Int, roundDp: Int): DataFrame = {
     val m = books.length
     val ks = books(0).length
-    val ds = books(0)(0).length
     // per-query ADC lookup table: lut(j·ks + c) = qⱼ·codeword(j,c) —
     // m·ks dots per QUERY row, computed once, joined to the codes scan
     // LUT as one native kernel (codebooks as a reference object) — the
     // per-query m·ks HOF dots in one O(m·ks·ds) loop, identical fold
     // order (CentroidKernelSpec)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("_qn"),
+    val q = normed(queries, col(idCol).as("query_id"), vecCol, "q",
         graft.functions.CentroidExpressions.pqLut(col(vecCol), books).as("_lut"))
       .persistTracked
     val den = col("_qn") * col("_cn")
@@ -1339,29 +1300,10 @@ object Similarity {
     val slim = q.select("query_id", "_qn", "_lut")
       .join(codes, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        when(den > 0, estDot / den).otherwise(0.0).as("_est"),
+        cosineOf(estDot, den).as("_est"),
         when(den > 0, col("_r") / col("_cn") + 1e-9)
           .otherwise(lit(1e-9)).as("_beta"))
-      .persistTracked
-    val roundSlack = if (roundDp >= 0) math.pow(10.0, -roundDp) else 0.0
-    // mergeable bottom-k kth bound (see [[kthValueBound]]) instead of
-    // the per-query row_number window sort
-    val kth = kthValueBound(slim, col("_est") - col("_beta"), k, "_kth_lb")
-    val surv = slim.join(broadcast(kth), Seq("query_id"), "left")
-      .filter(col("_kth_lb").isNull ||
-        col("_est") + col("_beta") >= col("_kth_lb") - roundSlack)
-      .select("query_id", "neighbor_id")
-    val cosE = when(den > 0,
-      dotExact(col("_qv"), col("_cv")) / den).otherwise(0.0)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    vectors
-      .join(broadcast(surv.join(q.select("query_id", "_qv", "_qn"), "query_id")),
-        "neighbor_id")
-      .withColumn("sim", if (roundDp < 0) cosE else round(cosE, roundDp))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sim", "rank")
+    certifiedTopK(q.select("query_id", "_qv", "_qn"), vectors, slim, EstBand, k, roundDp)
   }
 
   /** Persist a PQ index: the SLIM codes table (id, exact norm, m
@@ -1373,13 +1315,20 @@ object Similarity {
   def writePqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       books: Array[Array[Array[Double]]], path: String): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     // a REBUILD resets the generation clock and the history
     IndexManifest.reset(spark, path)
     pqEncode(corpus, idCol, vecCol, books)
       .select("neighbor_id", "_cn", "_codes", "_r")
       .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
       .write.mode("overwrite").parquet(s"$path/codes")
+    writePqBooks(spark, books, path)
+  }
+
+  /** Codebooks as the `books` sidecar of a stored index: one
+    * (j, c, w) row per codeword c of subspace j. */
+  private def writePqBooks(spark: org.apache.spark.sql.SparkSession,
+      books: Array[Array[Array[Double]]], path: String): Unit = {
+    import spark.implicits._
     books.zipWithIndex.flatMap { case (bk, j) =>
       bk.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
     }.toSeq.toDF("j", "c", "w").write.mode("overwrite").parquet(s"$path/books")
@@ -1474,20 +1423,16 @@ object Similarity {
     */
   private[graft] def topSeedCellsFull(queries: DataFrame, seeds: DataFrame,
       idCol: String, vecCol: String, nProbe: Int): DataFrame = {
-    val model = collectSeeds(seeds.select(col(idCol).as("_cell"),
-      col(vecCol).as("_sv"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_sn")))
+    val model = seedModel(seeds, idCol, vecCol)
     val cells = array(model.map(m => lit(m.cell)).toIndexedSeq: _*)
     val norms = array(model.map(m => lit(m.norm)).toIndexedSeq: _*)
-    queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("_qn"))
+    normed(queries, col(idCol).as("query_id"), vecCol, "q")
       .select(col("query_id"), col("_qn"),
         posexplode(array(model.indices.map(i =>
           dotExact(col("_qv"), lit(model(i).vec))).toIndexedSeq: _*))
           .as(Seq("_p", "qcdot")))
       .withColumn("_den", col("_qn") * element_at(norms, col("_p") + 1))
-      .withColumn("_sim",
-        when(col("_den") > 0, col("qcdot") / col("_den")).otherwise(0.0))
+      .withColumn("_sim", cosineOf(col("qcdot"), col("_den")))
       .withColumn("cell", element_at(cells, col("_p") + 1))
       .withColumn("_rn", row_number().over(Window.partitionBy("query_id")
         .orderBy(col("_sim").desc, col("cell"))))
@@ -1560,14 +1505,21 @@ object Similarity {
       bookSeeds: DataFrame = null, residual: Boolean = true): DataFrame = {
     require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
     requireDim(corpus, vecCol, dim, "pqIvfAdcRank")
-    val bs = Option(bookSeeds).getOrElse(seeds)
-    val books =
-      if (residual) pqResidualCodebooksSeeded(bs, seeds, idCol, vecCol, dim, m)
-      else pqCodebooksSeeded(bs, idCol, vecCol, dim, m)
+    val books = ivfPqBooks(seeds, bookSeeds, idCol, vecCol, dim, m, residual)
     val codes = ivfPqCodes(corpus, seeds, idCol, vecCol, books, residual)
     val probes = topSeedCellsFull(queries, seeds, idCol, vecCol, nProbe)
     pqIvfRankFromCodes(queries, probes, codes, idCol, vecCol,
       books, k, residual)
+  }
+
+  /** The IVF-PQ codebooks: residual ([[pqResidualCodebooksSeeded]]) or
+    * raw ([[pqCodebooksSeeded]]) codewords from `bookSeeds`, which
+    * default to the coarse `seeds` when null. */
+  private def ivfPqBooks(seeds: DataFrame, bookSeeds: DataFrame, idCol: String,
+      vecCol: String, dim: Int, m: Int, residual: Boolean): Array[Array[Array[Double]]] = {
+    val bs = Option(bookSeeds).getOrElse(seeds)
+    if (residual) pqResidualCodebooksSeeded(bs, seeds, idCol, vecCol, dim, m)
+    else pqCodebooksSeeded(bs, idCol, vecCol, dim, m)
   }
 
   /** Fail-fast check that the vectors actually have the
@@ -1595,15 +1547,13 @@ object Similarity {
   private def ivfPqCodes(corpus: DataFrame, seeds: DataFrame, idCol: String,
       vecCol: String, books: Array[Array[Array[Double]]],
       residual: Boolean): DataFrame = {
-    val m = books.length
-    val ds = books(0)(0).length
     val seedVecs = seeds.select(col(idCol).as("cell"), col(vecCol).as("_sv"))
     // exact PQ assignment below is the heavy per-row stage — spread the
     // corpus scan scale-adaptively (guide §2.5, the pqAdcRank rationale)
     val spread = graft.core.Adaptive.spreadForCpu(corpus, 64L << 10)
     val withCell = spread
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("_v"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("_cn"))
+        exactNorm(vecCol).as("_cn"))
       .join(assignCells(spread, seeds, idCol, vecCol)
         .select(col(idCol).as("neighbor_id"), col("cell")), "neighbor_id")
     val enc =
@@ -1630,13 +1580,11 @@ object Similarity {
       residual: Boolean): DataFrame = {
     val m = books.length
     val ks = books(0).length
-    val ds = books(0)(0).length
     // exact LUT as one native kernel (codebooks as a reference
     // object): per (j,c) entry = quantize-at-12-and-sum-exactly of the
     // sub-vector x codeword products, the dotExactHof image
     // (CentroidKernelSpec locks the bit-identity)
-    val q = queries.select(col(idCol).as("query_id"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_qn"),
+    val q = queries.select(col(idCol).as("query_id"), exactNorm(vecCol).as("_qn"),
       graft.functions.CentroidExpressions.pqLutExact(col(vecCol), books).as("_lut"))
     val den = col("_qn") * col("_cn")
     // every term is an exact 12-dp value living in a double (dotExact /
@@ -1649,16 +1597,10 @@ object Similarity {
     val estDot = graft.functions.CentroidExpressions.pqAdcEstDot(
       col("_codes"), col("_lut"),
       if (residual) col("qcdot") else lit(0.0), ks, m)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("est").desc, col("neighbor_id"))
-    probes.join(codes, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .join(q, "query_id")
-      .withColumn("est",
-        round(when(den > 0, estDot / den).otherwise(0.0), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "est", "rank")
+    rankTopK(probes.join(codes, "cell")
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .join(q, "query_id"),
+      "est", round(cosineOf(estDot, den), 6), k)
   }
 
   /** Persist an IVF-PQ index, CELL-PARTITIONED — the 100 TB serving
@@ -1678,20 +1620,15 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     requireDim(corpus, vecCol, dim, "writeIvfPqIndex")
-    val bs = Option(bookSeeds).getOrElse(seeds)
-    val books =
-      if (residual) pqResidualCodebooksSeeded(bs, seeds, idCol, vecCol, dim, m)
-      else pqCodebooksSeeded(bs, idCol, vecCol, dim, m)
+    val books = ivfPqBooks(seeds, bookSeeds, idCol, vecCol, dim, m, residual)
     // a REBUILD resets the generation clock and the history
     IndexManifest.reset(spark, path)
     ivfPqCodes(corpus, seeds, idCol, vecCol, books, residual)
       .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    books.zipWithIndex.flatMap { case (bk, j) =>
-      bk.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
-    }.toSeq.toDF("j", "c", "w").write.mode("overwrite").parquet(s"$path/books")
+    writePqBooks(spark, books, path)
     seeds.select(col(idCol).as("cell"), col(vecCol).as("sv"),
-        sqrt(dotExact(col(vecCol), col(vecCol))).as("sn"))
+        exactNorm(vecCol).as("sn"))
       .write.mode("overwrite").parquet(s"$path/cells")
     Seq((m, dim, residual)).toDF("m", "dim", "residual")
       .write.mode("overwrite").parquet(s"$path/meta")
@@ -1912,7 +1849,6 @@ object Similarity {
       vecCol: String, k: Int, books: Array[Array[Array[Double]]]): DataFrame = {
     val m = books.length
     val ks = books(0).length
-    val ds = books(0)(0).length
     // exact assignment + exact LUT dots: every number on the ranking
     // path is an exact-decimal value (or its one double cast), so a
     // SQL oracle replays codes, estimates, and the rounded-then-ranked
@@ -1928,8 +1864,7 @@ object Similarity {
     // object): per (j,c) entry = quantize-at-12-and-sum-exactly of the
     // sub-vector x codeword products, the dotExactHof image
     // (CentroidKernelSpec locks the bit-identity)
-    val q = queries.select(col(idCol).as("query_id"),
-      sqrt(dotExact(col(vecCol), col(vecCol))).as("_qn"),
+    val q = queries.select(col(idCol).as("query_id"), exactNorm(vecCol).as("_qn"),
       graft.functions.CentroidExpressions.pqLutExact(col(vecCol), books).as("_lut"))
     val den = col("_qn") * col("_cn")
     // each LUT entry is an exact 12-dp value in a double; ONE kernel
@@ -1940,8 +1875,6 @@ object Similarity {
     // q190's single post-join stage)
     val estDot = graft.functions.CentroidExpressions.pqAdcEstDot(
       col("_codes"), col("_lut"), lit(0.0), ks, m)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("est").desc, col("neighbor_id"))
     // broadcast the QUERY side deliberately (guide §3.1): by stats the
     // planner picked the slim codes side as the BNLJ build (its rows
     // are 128x smaller than the LUT-carrying query rows), which made
@@ -1950,12 +1883,8 @@ object Similarity {
     // query side broadcast, the spread codes side streams — parallel
     // locally, and at 100 TB the corpus is the side that must never be
     // the build side anyway.
-    broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("est",
-        round(when(den > 0, estDot / den).otherwise(0.0), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "est", "rank")
+    rankTopK(broadcast(q).join(c, col("query_id") =!= col("neighbor_id")),
+      "est", round(cosineOf(estDot, den), 6), k)
   }
 
   /** The prior decimal-cast expression tree of the ADC estimate, kept

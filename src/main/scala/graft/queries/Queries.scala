@@ -3517,6 +3517,20 @@ object Queries {
     Triangles.triangleCount(edges, "x", "y")
   }
 
+  /** The exact top-5 gold of the 50 ANN probe queries (vec_id < 50):
+    * q17's retriever written once per corpus dir, the one gold every
+    * ANN recall report reads (the label-fixture cost split; the
+    * oracles replay it in full).
+    */
+  private def exactGold(emb: DataFrame, dir: String): String =
+    memoFixture("q132exact", dir) { p =>
+      Similarity.bruteForceTopK(emb.filter(col("vec_id") < 50), emb, "vec_id",
+          "embedding", k = 5, roundDp = -1, exact = true)
+        .select(col("query_id"), col("neighbor_id"))
+        .write.mode("overwrite").parquet(p)
+      graft.core.OpCache.release()
+    }
+
   /** ANN index-quality report: recall@5 of the seeded IVF index (the
     * q29 configuration) against the exact brute-force top-5 (the q17
     * gold), per query plus the corpus mean — the eval every
@@ -3528,16 +3542,7 @@ object Queries {
   val q132AnnRecall: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    // the exact gold is the q17 retriever's output — computed once per
-    // dir (the label-fixture cost split; the oracle replays it in full)
-    val exactPath = memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    }
-    val exact = s.read.parquet(exactPath)
+    val exact = s.read.parquet(exactGold(emb, dir))
     val approx = Similarity.ivfTopKSeeded(q, emb, emb.filter(col("vec_id") < 16),
         "vec_id", "embedding", k = 5, nProbe = 4)
       .select(col("query_id"), col("neighbor_id"))
@@ -4884,14 +4889,7 @@ object Queries {
   val q190PqRecall: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    val exactPath = memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    }
-    val exact = s.read.parquet(exactPath)
+    val exact = s.read.parquet(exactGold(emb, dir))
     val books = Similarity.pqCodebooksSeeded(
       emb.filter(col("vec_id") < 16), "vec_id", "embedding", dim = 64, m = 4)
     val approx = Similarity.pqAdcRank(q, emb, "vec_id", "embedding",
@@ -5031,14 +5029,7 @@ object Queries {
   val q196PqIvfRecall: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    val exactPath = memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    }
-    val exact = s.read.parquet(exactPath)
+    val exact = s.read.parquet(exactGold(emb, dir))
     val approx = Similarity.pqIvfAdcRank(q, emb,
         emb.filter(col("vec_id") < 16), "vec_id", "embedding",
         k = 5, nProbe = 4, m = 4, dim = 64,
@@ -5126,6 +5117,18 @@ object Queries {
       .orderBy("doc_id")
   }
 
+  /** q200's stored flat-PQ index (trained books, m = 4, ks = 16),
+    * written once per corpus dir. `emb` is by-name: it is read only
+    * when the index is first written.
+    */
+  private def pqIndex(emb: => DataFrame, dir: String): String =
+    memoFixture("q200idx", dir) { p =>
+      val e = emb
+      val books = Similarity.pqCodebooksExact(e, "vec_id", "embedding",
+        dim = 64, m = 4, ks = 16, iters = 2)
+      Similarity.writePqIndex(e, "vec_id", "embedding", books, p)
+    }
+
   /** PQ against a STORED index ([[Similarity.pqTopKFromIndex]], the
     * q104 index-once/query-forever discipline applied to PQ): the
     * codes table + codebooks are persisted once per corpus dir
@@ -5137,16 +5140,24 @@ object Queries {
     */
   val q200PqStoredIndex: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val idx = memoFixture("q200idx", dir) { p =>
-      val books = Similarity.pqCodebooksExact(emb, "vec_id", "embedding",
-        dim = 64, m = 4, ks = 16, iters = 2)
-      Similarity.writePqIndex(emb, "vec_id", "embedding", books, p)
-    }
+    val idx = pqIndex(emb, dir)
     Similarity.pqTopKFromIndex(emb.filter(col("vec_id") < 50), emb,
         "vec_id", "embedding", k = 5, idx, roundDp = -1)
       .withColumn("rank", col("rank").cast("long"))
       .orderBy("query_id", "rank")
   }
+
+  /** q201's stored cell-partitioned IVF-PQ index (seeded cells
+    * vec_id < 16, residual books from vec_id 16..31), written once per
+    * corpus dir.
+    */
+  private def ivfPqIndex(emb: DataFrame, dir: String): String =
+    memoFixture("q201idx", dir) { p =>
+      Similarity.writeIvfPqIndex(emb, emb.filter(col("vec_id") < 16),
+        "vec_id", "embedding", m = 4, dim = 64, p,
+        bookSeeds = emb.filter(col("vec_id") >= 16 && col("vec_id") < 32))
+      graft.core.OpCache.release()
+    }
 
   /** IVF-PQ served from the STORED, CELL-PARTITIONED index
     * ([[Similarity.writeIvfPqIndex]]/[[Similarity.pqIvfTopKFromIndex]]
@@ -5162,19 +5173,8 @@ object Queries {
   val q201IvfPqStoredIndex: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    val exact = s.read.parquet(memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    })
-    val idx = memoFixture("q201idx", dir) { p =>
-      Similarity.writeIvfPqIndex(emb, emb.filter(col("vec_id") < 16),
-        "vec_id", "embedding", m = 4, dim = 64, p,
-        bookSeeds = emb.filter(col("vec_id") >= 16 && col("vec_id") < 32))
-      graft.core.OpCache.release()
-    }
+    val exact = s.read.parquet(exactGold(emb, dir))
+    val idx = ivfPqIndex(emb, dir)
     val approx = Similarity.pqIvfTopKFromIndex(q, idx, "vec_id", "embedding",
         k = 5, nProbe = 4)
       .select(col("query_id"), col("neighbor_id"))
@@ -5195,11 +5195,7 @@ object Queries {
     */
   val q202StreamingAnnServe: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val idx = memoFixture("q200idx", dir) { p =>
-      val books = Similarity.pqCodebooksExact(emb, "vec_id", "embedding",
-        dim = 64, m = 4, ks = 16, iters = 2)
-      Similarity.writePqIndex(emb, "vec_id", "embedding", books, p)
-    }
+    val idx = pqIndex(emb, dir)
     streamServe("q202in", dir, emb.filter(col("vec_id") < 50)) { batch =>
       Some(Similarity.pqTopKFromIndex(batch, emb, "vec_id", "embedding",
           k = 5, idx, roundDp = -1)
@@ -5346,19 +5342,30 @@ object Queries {
   val q206TrainedIvfPq: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    val exact = s.read.parquet(memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    })
+    val exact = s.read.parquet(exactGold(emb, dir))
     val approx = Similarity.pqIvfAdcRank(q, emb, trainedSeeds(s, dir), "vec_id",
         "embedding", k = 5, nProbe = 2, m = 4, dim = 64,
         bookSeeds = emb.filter(col("vec_id") >= 16 && col("vec_id") < 32))
       .select(col("query_id"), col("neighbor_id"))
     pqRecallReport(exact, approx)
   }
+
+  /** q207's appended IVF-PQ index: q201's layout built over a corpus
+    * whose vec_id % 3 == 0 rows are stale (negated), then one append
+    * re-ingesting the true rows; written once per corpus dir.
+    */
+  private def appendedIvfPqIndex(emb: DataFrame, dir: String): String =
+    memoFixture("q207idx", dir) { p =>
+      val stale = emb.withColumn("embedding",
+        when(col("vec_id") % 3 === 0, transform(col("embedding"), x => -x))
+          .otherwise(col("embedding")))
+      Similarity.writeIvfPqIndex(stale, emb.filter(col("vec_id") < 16),
+        "vec_id", "embedding", m = 4, dim = 64, p,
+        bookSeeds = emb.filter(col("vec_id") >= 16 && col("vec_id") < 32))
+      Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") % 3 === 0),
+        p, "vec_id", "embedding")
+      graft.core.OpCache.release()
+    }
 
   /** INCREMENTAL APPEND to the stored IVF-PQ index
     * ([[Similarity.appendToIvfPqIndex]] — the q85/q148/q179
@@ -5376,24 +5383,8 @@ object Queries {
   val q207IvfPqAppend: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    val exact = s.read.parquet(memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    })
-    val idx = memoFixture("q207idx", dir) { p =>
-      val stale = emb.withColumn("embedding",
-        when(col("vec_id") % 3 === 0, transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")))
-      Similarity.writeIvfPqIndex(stale, emb.filter(col("vec_id") < 16),
-        "vec_id", "embedding", m = 4, dim = 64, p,
-        bookSeeds = emb.filter(col("vec_id") >= 16 && col("vec_id") < 32))
-      Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") % 3 === 0),
-        p, "vec_id", "embedding")
-      graft.core.OpCache.release()
-    }
+    val exact = s.read.parquet(exactGold(emb, dir))
+    val idx = appendedIvfPqIndex(emb, dir)
     val approx = Similarity.pqIvfTopKFromIndex(q, idx, "vec_id",
         "embedding", k = 5, nProbe = 4)
       .select(col("query_id"), col("neighbor_id"))
@@ -5414,12 +5405,7 @@ object Queries {
     */
   val q208StreamingIvfPqServe: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val idx = memoFixture("q201idx", dir) { p =>
-      Similarity.writeIvfPqIndex(emb, emb.filter(col("vec_id") < 16),
-        "vec_id", "embedding", m = 4, dim = 64, p,
-        bookSeeds = emb.filter(col("vec_id") >= 16 && col("vec_id") < 32))
-      graft.core.OpCache.release()
-    }
+    val idx = ivfPqIndex(emb, dir)
     streamServe("q202in", dir, emb.filter(col("vec_id") < 50)) { batch =>
       Some(Similarity.pqIvfTopKFromIndex(batch, idx, "vec_id", "embedding",
           k = 5, nProbe = 4)
@@ -5452,13 +5438,7 @@ object Queries {
   val q212TrainedIvfPqStored: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    val exact = s.read.parquet(memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    })
+    val exact = s.read.parquet(exactGold(emb, dir))
     val idx = memoFixture("q212idx", dir) { p =>
       Similarity.writeIvfPqIndex(emb, trainedSeeds(s, dir),
         "vec_id", "embedding", m = 4, dim = 64, p,
@@ -5755,6 +5735,14 @@ object Queries {
     }.orderBy("doc_id")
   }
 
+  /** q219's stored BM25 index (16 buckets), written once per corpus
+    * dir. */
+  private def bm25Index(s: SparkSession, dir: String): String =
+    memoFixture("q219idx", dir) { p =>
+      Retrieval.writeInvertedIndex(docs(s, dir), "doc_id", "text", p,
+        nBuckets = 16)
+    }
+
   /** STORED BM25 INVERTED INDEX ([[Retrieval.writeInvertedIndex]] /
     * [[Retrieval.bm25TopKFromIndex]]) — the lexical twin of the
     * stored ANN index tier (q200/q201): tokenize and aggregate the
@@ -5765,10 +5753,7 @@ object Queries {
     * bit-identical to the from-scratch scan.
     */
   val q219StoredBm25Index: Q = (s, dir) => {
-    val idx = memoFixture("q219idx", dir) { p =>
-      Retrieval.writeInvertedIndex(docs(s, dir), "doc_id", "text", p,
-        nBuckets = 16)
-    }
+    val idx = bm25Index(s, dir)
     Retrieval.bm25TopKFromIndex(s, idx, "doc_id",
       Seq("spark", "join", "stream"), k = 20)
   }
@@ -5812,19 +5797,8 @@ object Queries {
   val q221IvfPqProbeSweep: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    val exact = s.read.parquet(memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    })
-    val idx = memoFixture("q201idx", dir) { p =>
-      Similarity.writeIvfPqIndex(emb, emb.filter(col("vec_id") < 16),
-        "vec_id", "embedding", m = 4, dim = 64, p,
-        bookSeeds = emb.filter(col("vec_id") >= 16 && col("vec_id") < 32))
-      graft.core.OpCache.release()
-    }
+    val exact = s.read.parquet(exactGold(emb, dir))
+    val idx = ivfPqIndex(emb, dir)
     Seq(1, 2, 4).map { p =>
       Similarity.pqIvfTopKFromIndex(q, idx, "vec_id", "embedding",
           k = 5, nProbe = p)
@@ -5863,10 +5837,7 @@ object Queries {
     * retriever bit-for-bit.
     */
   val q223Bm25BatchServe: Q = (s, dir) => {
-    val idx = memoFixture("q219idx", dir) { p =>
-      Retrieval.writeInvertedIndex(docs(s, dir), "doc_id", "text", p,
-        nBuckets = 16)
-    }
+    val idx = bm25Index(s, dir)
     Retrieval.bm25TopKBatchFromIndex(s, idx, "doc_id", HybridQueries, k = 10)
       .orderBy("query_id", "rank")
   }
@@ -5882,10 +5853,7 @@ object Queries {
     */
   val q224StreamingBm25Serve: Q = (s, dir) => {
     import s.implicits._
-    val idx = memoFixture("q219idx", dir) { p =>
-      Retrieval.writeInvertedIndex(docs(s, dir), "doc_id", "text", p,
-        nBuckets = 16)
-    }
+    val idx = bm25Index(s, dir)
     streamServe("q224in", dir, HybridQueries.toDF("query_id", "terms")) { batch =>
       val qs = batch.select(col("query_id"), col("terms")).collect()
         .map(r => (r.getLong(0), r.getSeq[String](1).toSeq)).toSeq
@@ -5908,13 +5876,18 @@ object Queries {
     */
   val q225PhraseFromIndex: Q = (s, dir) => {
     val corp = phraseCorpus(s, dir)
-    val idx = memoFixture("q225idx", dir) { p =>
-      Retrieval.writePositionalIndex(corp, "doc_id", "text", p,
-        nBuckets = 8)
-    }
+    val idx = positionalIndex(corp, dir)
     Retrieval.phraseOccurrencesFromIndex(s, idx, "doc_id",
       Seq("alpha", "beta", "gamma")).orderBy("doc_id")
   }
+
+  /** q225's stored positional index over [[phraseCorpus]] (8 buckets),
+    * written once per corpus dir. */
+  private def positionalIndex(corp: DataFrame, dir: String): String =
+    memoFixture("q225idx", dir) { p =>
+      Retrieval.writePositionalIndex(corp, "doc_id", "text", p,
+        nBuckets = 8)
+    }
 
   /** Planted phrase corpus for q225 — the phrase, twice the phrase,
     * a 2-of-3 prefix (must NOT match), or a unique filler, appended
@@ -5959,10 +5932,7 @@ object Queries {
     * tokens.
     */
   val q227VocabFromIndex: Q = (s, dir) => {
-    val idx = memoFixture("q219idx", dir) { p =>
-      Retrieval.writeInvertedIndex(docs(s, dir), "doc_id", "text", p,
-        nBuckets = 16)
-    }
+    val idx = bm25Index(s, dir)
     Retrieval.vocabularyFromIndex(s, idx, k = 20)
   }
 
@@ -5975,10 +5945,7 @@ object Queries {
     * replays the smoothed log-likelihood tree term-for-term.
     */
   val q228QlFromIndex: Q = (s, dir) => {
-    val idx = memoFixture("q219idx", dir) { p =>
-      Retrieval.writeInvertedIndex(docs(s, dir), "doc_id", "text", p,
-        nBuckets = 16)
-    }
+    val idx = bm25Index(s, dir)
     Retrieval.qlTopKFromIndex(s, idx, "doc_id",
       Seq("spark", "join", "stream", "zzzunseen"), k = 20)
   }
@@ -5991,10 +5958,7 @@ object Queries {
     */
   val q229ProximityFromIndex: Q = (s, dir) => {
     val corp = phraseCorpus(s, dir)
-    val idx = memoFixture("q225idx", dir) { p =>
-      Retrieval.writePositionalIndex(corp, "doc_id", "text", p,
-        nBuckets = 8)
-    }
+    val idx = positionalIndex(corp, dir)
     Retrieval.proximityFromIndex(s, idx, "doc_id", "alpha", "gamma",
       window = 2).orderBy("doc_id")
   }
@@ -6011,16 +5975,8 @@ object Queries {
     * composition gated end-to-end with zero new oracle surface.
     */
   val q230HybridFromIndexes: Q = (s, dir) => {
-    val lexIdx = memoFixture("q219idx", dir) { p =>
-      Retrieval.writeInvertedIndex(docs(s, dir), "doc_id", "text", p,
-        nBuckets = 16)
-    }
-    val annIdx = memoFixture("q200idx", dir) { p =>
-      val emb = Tables.embeddings(s, dir)
-      val books = Similarity.pqCodebooksExact(emb, "vec_id", "embedding",
-        dim = 64, m = 4, ks = 16, iters = 2)
-      Similarity.writePqIndex(emb, "vec_id", "embedding", books, p)
-    }
+    val lexIdx = bm25Index(s, dir)
+    val annIdx = pqIndex(Tables.embeddings(s, dir), dir)
     hybridFromIndexes(s, dir, lexIdx, annIdx)
   }
 
@@ -6197,24 +6153,8 @@ object Queries {
   val q236IvfPqIndexCompact: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    val exact = s.read.parquet(memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    })
-    val src = memoFixture("q207idx", dir) { p =>
-      val stale = emb.withColumn("embedding",
-        when(col("vec_id") % 3 === 0, transform(col("embedding"), x => -x))
-          .otherwise(col("embedding")))
-      Similarity.writeIvfPqIndex(stale, emb.filter(col("vec_id") < 16),
-        "vec_id", "embedding", m = 4, dim = 64, p,
-        bookSeeds = emb.filter(col("vec_id") >= 16 && col("vec_id") < 32))
-      Similarity.appendToIvfPqIndex(emb.filter(col("vec_id") % 3 === 0),
-        p, "vec_id", "embedding")
-      graft.core.OpCache.release()
-    }
+    val exact = s.read.parquet(exactGold(emb, dir))
+    val src = appendedIvfPqIndex(emb, dir)
     val idx = memoFixture("q236idx", dir) { p =>
       Similarity.compactIvfPqIndex(s, src, p)
     }
@@ -6271,13 +6211,7 @@ object Queries {
   val q238StreamingAnnIngest: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    val exact = s.read.parquet(memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    })
+    val exact = s.read.parquet(exactGold(emb, dir))
     val idx = memoFixture("q238idx", dir) { p =>
       // base: %3==0 vectors stale (negated), exactly q207's fixture —
       // but the true vectors now ARRIVE AS A STREAM in two batches
@@ -6476,13 +6410,7 @@ object Queries {
   val q245AnnTimeTravel: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter(col("vec_id") < 50)
-    val exact = s.read.parquet(memoFixture("q132exact", dir) { p =>
-      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding",
-          k = 5, roundDp = -1, exact = true)
-        .select(col("query_id"), col("neighbor_id"))
-        .write.mode("overwrite").parquet(p)
-      graft.core.OpCache.release()
-    })
+    val exact = s.read.parquet(exactGold(emb, dir))
     val approx = Similarity.pqIvfTopKFromIndex(q, deletedAnnIndex(s, dir),
         "vec_id", "embedding", k = 5, nProbe = 4, asOfGen = 1L)
       .select(col("query_id"), col("neighbor_id"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class NearDupSimilaritySpec extends SparkSpec {
@@ -99,6 +100,60 @@ class NearDupSimilaritySpec extends SparkSpec {
         k = 5, roundDp = -1, exact = true)
       .select("neighbor_id", "rank").as[(Long, Int)].collect().toSeq
     assert(out === Seq((10L, 1), (11L, 2), (12L, 3), (13L, 4), (14L, 5)))
+  }
+
+  test("exact top-k with rounding ≡ all-pairs exact reference: a pair that rounds into the cutoff tie survives") {
+    // reference: every (query, other-label-or-any) pair scored
+    // decimal-exactly, rounded to dp, ranked (sim DESC, neighbor_id)
+    def reference(emb: DataFrame, queries: Column, k: Int,
+        dp: Int, otherLabel: Boolean): Set[(Long, Long, Double, Int)] = {
+      val q = emb.filter(queries)
+        .select($"vec_id".as("query_id"), $"embedding".as("_qv"), $"label".as("_ql"))
+      val c = emb.select($"vec_id".as("neighbor_id"), $"embedding".as("_cv"), $"label".as("_cl"))
+      val cos = Similarity.cosineExact($"_qv", $"_cv")
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+        .orderBy($"sim".desc, $"neighbor_id")
+      q.crossJoin(c)
+        .filter($"query_id" =!= $"neighbor_id" && (!lit(otherLabel) || $"_ql" =!= $"_cl"))
+        .withColumn("sim", if (dp < 0) cos else round(cos, dp))
+        .withColumn("rank", row_number().over(w))
+        .filter($"rank" <= k)
+        .select("query_id", "neighbor_id", "sim", "rank")
+        .as[(Long, Long, Double, Int)].collect().toSet
+    }
+    def topK(emb: DataFrame, queries: Column, k: Int, dp: Int) =
+      Similarity.bruteForceTopK(emb.filter(queries), emb, "vec_id", "embedding",
+          k = k, roundDp = dp, exact = true)
+        .as[(Long, Long, Double, Int)].collect().toSet
+    def negatives(emb: DataFrame, queries: Column, k: Int, dp: Int) =
+      Similarity.hardNegatives(emb.filter(queries), emb, "vec_id", "embedding", "label",
+          k = k, roundDp = dp)
+        .as[(Long, Long, Double, Int)].collect().toSet
+
+    // planted: cos(query, 1) = 0.60000013 sits 2.7e-7 BELOW
+    // cos(query, 2) = 0.60000040 — far outside the 1e-9 fast band — yet
+    // both round to 0.600000 at 6 dp, where neighbor 1 wins on its id
+    val planted = Seq((0L, Array(1f, 0f), 0), (1L, Array(1f, 1.333332896232605f), 1),
+      (2L, Array(1f, 1.3333319425582886f), 1), (3L, Array(0f, 1f), 1))
+      .toDF("vec_id", "embedding", "label")
+    val q0 = $"vec_id" === 0
+    assert(reference(planted, q0, 1, 6, otherLabel = false) === Set((0L, 1L, 0.6, 1)))
+    assert(topK(planted, q0, 1, 6) === reference(planted, q0, 1, 6, otherLabel = false))
+    assert(negatives(planted, q0, 1, 6) === reference(planted, q0, 1, 6, otherLabel = true))
+
+    // seeded random vectors: coarse rounding makes cutoff ties common
+    val rnd = new scala.util.Random(23)
+    val emb = (0L until 80L).map(i =>
+      (i, Array.fill(4)(rnd.nextFloat() * 2f - 1f), (i % 3).toInt))
+      .toDF("vec_id", "embedding", "label")
+    val qs = $"vec_id" < 16
+    for (dp <- Seq(2, 3, 6, -1)) {
+      assert(topK(emb, qs, 3, dp) === reference(emb, qs, 3, dp, otherLabel = false),
+        s"bruteForceTopK(exact = true, roundDp = $dp)")
+      assert(negatives(emb, qs, 3, dp) === reference(emb, qs, 3, dp, otherLabel = true),
+        s"hardNegatives(roundDp = $dp)")
+    }
+    graft.core.OpCache.release(blocking = true)
   }
 
   test("kmeansCentroids: recovers separated cluster means") {

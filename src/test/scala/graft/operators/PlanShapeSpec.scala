@@ -183,7 +183,20 @@ class PlanShapeSpec extends SparkSpec {
       // AGGREGATE since r22 (Similarity.kthValueBound) — only the final
       // exact-rank window remains
       ("ivfTopKSeeded", 1, Similarity.ivfTopKSeeded(emb.filter($"vec_id" < 6), emb,
-        emb.filter($"vec_id" % 16 === 0), "vec_id", "embedding", k = 3, nProbe = 2)))
+        emb.filter($"vec_id" % 16 === 0), "vec_id", "embedding", k = 3, nProbe = 2)),
+      // every other certified operator ends in the same refine: its
+      // k-th bound is an aggregate, so only the exact-rank window remains
+      ("bruteForceTopK exact", 1, Similarity.bruteForceTopK(emb.filter($"vec_id" < 6), emb,
+        "vec_id", "embedding", k = 3, roundDp = -1, exact = true)),
+      ("hardNegatives", 1, Similarity.hardNegatives(
+        emb.filter($"vec_id" < 6).withColumn("label", $"vec_id" % 3),
+        emb.withColumn("label", $"vec_id" % 3), "vec_id", "embedding", "label", k = 3)),
+      ("lshTopKSeeded", 1, Similarity.lshTopKSeeded(emb.filter($"vec_id" < 6), emb,
+        emb.filter($"vec_id" % 16 === 0), "vec_id", "embedding", k = 3)),
+      ("quantizedTopK", 1, Similarity.quantizedTopK(emb.filter($"vec_id" < 6), emb,
+        "vec_id", "embedding", k = 3)),
+      ("pqTopK", 1, Similarity.pqTopK(emb.filter($"vec_id" < 6), emb,
+        "vec_id", "embedding", k = 3, m = 4, ks = 4, iters = 1)))
     for ((name, expected, q) <- variants) {
       q.collect()
       val plan = q.queryExecution.executedPlan.toString()
