@@ -15,11 +15,13 @@ import org.apache.spark.sql.functions._
   * ("pull the top-k documents about X") and contamination forensics
   * ("which documents score highest against this benchmark prompt?").
   *
-  * 100 TB shape — the plan is deliberately inverted-index-free:
+  * 100 TB shape — the scan path ([[bm25TopK]], [[bm25TopKBatch]]) is
+  * deliberately inverted-index-free:
   *
   *  1. ONE map-side pass projects per-doc state: the token array, its
-  *     length `dl`, and per-query-term term frequencies (array HOFs
-  *     over the tokens — no explode, no per-term shuffle).
+  *     length `dl`, and per-query-term term frequencies (the native
+  *     `termTfs` kernel, one walk over the tokens — no explode, no
+  *     per-term shuffle).
   *  2. ONE tiny mergeable aggregate (count / sum / per-term
   *     contains-counts — all algebraic, map-side combined) produces the
   *     corpus stats `N, total_len, df_t` as a SINGLE ROW, broadcast
@@ -37,6 +39,12 @@ import org.apache.spark.sql.functions._
   * floating-point score is computed in ONE fixed expression-tree order
   * from those integers and rounded at 6dp before ranking; ties at the
   * rounded score break on the doc id.
+  *
+  * The stored-index rankers ([[writeInvertedIndex]] and its serves)
+  * feed the same integers to the same scorer: both paths build one
+  * `LexicalStats`, scored by one BM25 term formula and ranked by one
+  * tail per output shape (single query: TakeOrdered; batch: grouped
+  * bottom-k).
   */
 object Retrieval {
 
@@ -44,53 +52,15 @@ object Retrieval {
     *
     * Score(d) = Σ_t idf(t) · (tf · (k1+1)) / (tf + k1·(1−b + b·dl/avgdl))
     * summed in the fixed order of `terms`; docs matching no term are
-    * dropped. Output: (idCol, dl, score) ranked by (score desc, id).
+    * dropped; a repeated query term is rejected. Output: (idCol, dl,
+    * score) ranked by (score desc, id).
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                terms: Seq[String], k: Int,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "BM25 needs at least one query term")
-    // per-doc state in ONE token pass: the tf VECTOR (term i →
-    // occurrences) comes from the native single-scan kernel
-    // (graft_term_tfs: O(dl + T) per doc), not T separate
-    // size(filter(...)) HOFs (O(dl · T) — each term re-walks the
-    // whole token array), so cost stays flat as the query grows from
-    // 3 to 100 terms
-    val toks = docs.select(col(idCol), Text.tokens(col(textCol)).as("_toks"))
-      .withColumn("_dl", size(col("_toks")).cast("long"))
-      .withColumn("_tfs", TextExpressions.termTfs(col("_toks"), terms))
-
-    // single-row corpus stats: mergeable integer aggregates only
-    val statAggs: Seq[Column] =
-      Seq(count(lit(1)).as("_n"), sum(col("_dl")).as("_len")) ++
-        terms.indices.map { i =>
-          sum(when(element_at(col("_tfs"), i + 1) > lit(0L), 1L)
-            .otherwise(0L)).as(s"_df$i")
-        }
-    val stats = toks.agg(statAggs.head, statAggs.tail: _*)
-
-    val scored = toks.crossJoin(broadcast(stats))
-    val dlD = col("_dl").cast("double")
-    val nD = col("_n").cast("double")
-    val avgdl = col("_len").cast("double") / nD
-    // per-term score, summed in fixed `terms` order (left-assoc, same
-    // tree as the oracle SQL's `t0 + t1 + ...`)
-    val score: Column = terms.indices.map { i =>
-      val tf = element_at(col("_tfs"), i + 1).cast("double")
-      val dfD = col(s"_df$i").cast("double")
-      val idf = log(lit(1.0) + (nD - dfD + lit(0.5)) / (dfD + lit(0.5)))
-      when(tf > lit(0.0),
-        (idf * (tf * (lit(k1) + lit(1.0)))) /
-          (tf + lit(k1) * ((lit(1.0) - lit(b)) + lit(b) * (dlD / avgdl))))
-        .otherwise(lit(0.0))
-    }.reduce(_ + _)
-
-    scored
-      .withColumn("score", round(score, 6))
-      .filter(col("score") > lit(0.0))
-      .select(col(idCol), col("_dl").as("dl"), col("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+    val s = scanStats(docs, idCol, textCol, terms)
+    rankTopK(s, bm25Score(s, terms, k1, b, "bm25TopK"), idCol, k)(positive)
   }
 
   /** BATCH multi-query BM25: all `queries` scored in ONE corpus pass.
@@ -121,45 +91,129 @@ object Retrieval {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty),
       "each query needs at least one term")
-    requireNumericId(docs, idCol, "bm25TopKBatch")
-    val allTerms = queries.flatMap(_._2).distinct
+    rankTopKBatch(scanStats(docs, idCol, textCol, queries.flatMap(_._2)),
+      queries, idCol, k, k1, b, "bm25TopKBatch")
+  }
+
+  // ---------------------------------------------------------------
+  // The one lexical scorer: both corpus paths (scan and stored index)
+  // build a LexicalStats, and every ranker scores it through the same
+  // term formula and one rank tail per output shape.
+  // ---------------------------------------------------------------
+
+  /** What every lexical ranker scores: a per-doc `frame` (doc id
+    * column `id`, token-count column `dl`), per-term tf and df
+    * accessors over the distinct `terms` (integer Columns: the float
+    * arithmetic only ever sees the integers a full scan produces),
+    * the corpus doc count `n` and total token length `len` as double
+    * Columns, and — from a stored index only — the lazy per-term
+    * collection frequencies the language-model ranker reads.
+    */
+  private final case class LexicalStats(frame: DataFrame, id: String,
+      dl: String, terms: Seq[String], tf: Int => Column,
+      df: Int => Column, n: Column, len: Column,
+      cf: Option[() => Map[String, Long]])
+
+  /** The scan path's [[LexicalStats]]: per-doc state in ONE token
+    * pass — the tf VECTOR (term i → occurrences) comes from the native
+    * single-scan kernel (graft_term_tfs: O(dl + T) per doc), not T
+    * separate size(filter(...)) HOFs (O(dl · T) — each term re-walks
+    * the whole token array), so cost stays flat as the query grows
+    * from 3 to 100 terms — and ONE single-row stats aggregate of
+    * mergeable integers (count, token sum, per-term doc counts)
+    * broadcast back by a cross join.
+    */
+  private def scanStats(docs: DataFrame, idCol: String, textCol: String,
+      queryTerms: Seq[String]): LexicalStats = {
+    val terms = queryTerms.distinct
     val toks = docs.select(col(idCol), Text.tokens(col(textCol)).as("_toks"))
       .withColumn("_dl", size(col("_toks")).cast("long"))
-      .withColumn("_tfs", TextExpressions.termTfs(col("_toks"), allTerms))
+      .withColumn("_tfs", TextExpressions.termTfs(col("_toks"), terms))
+    def tf(i: Int): Column = element_at(col("_tfs"), i + 1)
     val statAggs: Seq[Column] =
       Seq(count(lit(1)).as("_n"), sum(col("_dl")).as("_len")) ++
-        allTerms.indices.map { i =>
-          sum(when(element_at(col("_tfs"), i + 1) > lit(0L), 1L)
-            .otherwise(0L)).as(s"_df$i")
+        terms.indices.map { i =>
+          sum(when(tf(i) > lit(0L), 1L).otherwise(0L)).as(s"_df$i")
         }
     val stats = toks.agg(statAggs.head, statAggs.tail: _*)
-    val scored = toks.crossJoin(broadcast(stats))
-    val dlD = col("_dl").cast("double")
-    val nD = col("_n").cast("double")
-    val avgdl = col("_len").cast("double") / nD
-    def termScore(i: Int): Column = {
-      val tf = element_at(col("_tfs"), i + 1).cast("double")
-      val dfD = col(s"_df$i").cast("double")
-      val idf = log(lit(1.0) + (nD - dfD + lit(0.5)) / (dfD + lit(0.5)))
-      when(tf > lit(0.0),
-        (idf * (tf * (lit(k1) + lit(1.0)))) /
-          (tf + lit(k1) * ((lit(1.0) - lit(b)) + lit(b) * (dlD / avgdl))))
-        .otherwise(lit(0.0))
-    }
-    // fan out to (query_id, score) structs — generator input is an
-    // array over ALREADY-PROJECTED cheap expressions (the tf vector
-    // is an attribute), so nothing expensive re-inlines (the r13
-    // generator-shape rule)
+    LexicalStats(toks.crossJoin(broadcast(stats)), idCol, "_dl", terms,
+      tf, i => col(s"_df$i"), col("_n").cast("double"),
+      col("_len").cast("double"), None)
+  }
+
+  /** One BM25 term with Lucene's idf, every input a double Column.
+    * The expression order is fixed: the oracle SQL replays it op for
+    * op. */
+  private def bm25Term(tf: Column, dfD: Column, nD: Column, avgdl: Column,
+      dlD: Column, k1: Double, b: Double): Column = {
+    val idf = log(lit(1.0) + (nD - dfD + lit(0.5)) / (dfD + lit(0.5)))
+    when(tf > lit(0.0),
+      (idf * (tf * (lit(k1) + lit(1.0)))) /
+        (tf + lit(k1) * ((lit(1.0) - lit(b)) + lit(b) * (dlD / avgdl))))
+      .otherwise(lit(0.0))
+  }
+
+  /** The slots of one query's terms in `s.terms`. A repeated query
+    * term would be weighted twice, so every ranker rejects it here;
+    * `fn` and the batch query id name the offender. */
+  private def slots(s: LexicalStats, terms: Seq[String], fn: String,
+      qid: Option[Long]): Seq[Int] = {
+    val repeated = terms.diff(terms.distinct)
+    require(repeated.isEmpty, s"$fn: ${qid.fold("the query")(q => s"query $q")} " +
+      s"repeats term '${repeated.headOption.orNull}' — each query term " +
+      "may appear once")
+    terms.map(s.terms.indexOf)
+  }
+
+  /** BM25 score of one query: [[bm25Term]] per term, summed
+    * left-associatively in the order of `terms` (the same tree as the
+    * oracle SQL's `t0 + t1 + ...`). */
+  private def bm25Score(s: LexicalStats, terms: Seq[String], k1: Double,
+      b: Double, fn: String, qid: Option[Long] = None): Column = {
+    val avgdl = s.len / s.n
+    val dlD = col(s.dl).cast("double")
+    slots(s, terms, fn, qid).map { i =>
+      bm25Term(s.tf(i).cast("double"), s.df(i).cast("double"), s.n,
+        avgdl, dlD, k1, b)
+    }.reduce(_ + _)
+  }
+
+  /** The BM25 rankers' filter: docs matching no query term score 0. */
+  private val positive: DataFrame => DataFrame =
+    _.filter(col("score") > lit(0.0))
+
+  /** The single-query rank tail: (idCol, dl, score rounded 6 dp),
+    * `keep` applied to the rounded rows, then the global top-k by
+    * (score desc, id) via TakeOrdered — per-partition top-k and a
+    * k-row merge, never a global sort. Keeps the native id type. */
+  private def rankTopK(s: LexicalStats, score: Column, idCol: String,
+      k: Int)(keep: DataFrame => DataFrame): DataFrame =
+    keep(s.frame.select(col(s.id).as(idCol), col(s.dl).as("dl"),
+        round(score, 6).as("score")))
+      .orderBy(col("score").desc, col(idCol))
+      .limit(k)
+
+  /** The batch rank tail: each doc fans out to its Q (query_id,
+    * 6-dp score) structs, and the per-query top-k is the mergeable
+    * grouped bottom-k on the negated 6-dp-scaled score, keyed on a
+    * BIGINT doc id (hence the numeric-id check). */
+  private def rankTopKBatch(s: LexicalStats,
+      queries: Seq[(Long, Seq[String])], idCol: String, k: Int,
+      k1: Double, b: Double, fn: String): DataFrame = {
+    requireNumericId(s.frame, s.id, fn)
+    // generator input is an array over ALREADY-PROJECTED cheap
+    // expressions (the tf vector is an attribute), so nothing
+    // expensive re-inlines (the r13 generator-shape rule)
     val qStructs = queries.map { case (qid, terms) =>
-      val sc = terms.map(t => termScore(allTerms.indexOf(t))).reduce(_ + _)
-      struct(lit(qid).as("q"), round(sc, 6).as("s"))
+      struct(lit(qid).as("q"),
+        round(bm25Score(s, terms, k1, b, fn, Some(qid)), 6).as("s"))
     }
-    scored
-      .select(col(idCol), explode(array(qStructs: _*)).as("_e"))
+    s.frame
+      .select(col(s.id), explode(array(qStructs: _*)).as("_e"))
       .filter(col("_e.s") > lit(0.0))
       .select(col("_e.q").as("query_id"),
         (-round(col("_e.s") * 1e6)).cast("long").as("_k"),
-        col(idCol).cast("long").as("_id"))
+        col(s.id).cast("long").as("_id"))
       .groupBy("query_id")
       .agg(graft.functions.BottomK.bottomK(k)(col("_k"), col("_id")).as("_s"))
       .select(col("query_id"), posexplode(col("_s")))
@@ -168,25 +222,18 @@ object Retrieval {
         (-col("col._1").cast("double") / 1e6).as("score"))
   }
 
-  /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009):
-    * fuse N ranked lists by score(q, d) = Σ_lists 1/(c + rank_list(d))
-    * — the standard hybrid-retrieval combiner (sparse BM25 ⊕ dense
-    * ANN) precisely because it needs no score calibration between
-    * modalities, only ranks. Contributions are EXACT integers
-    * (10^12 div (c + rank) — integer division, no floats anywhere),
-    * so fusion sums, ordering, and ties are engine-exact by
-    * construction; the quantization cannot reorder single-list
-    * contributions (monotone in rank) and cross-list ties break on
-    * ascending id.
-    *
-    * At scale: each input list is already top-k (≤ Q·k rows), the
-    * fusion groupBy is map-side combinable, and the per-query top-k
-    * is the mergeable grouped bottom-k — the whole fuse never
-    * shuffles more than the lists themselves.
-    *
-    * Output: (queryCol, rank, idCol, rrf BIGINT — the 10^12-scaled
-    * fused score, n_lists BIGINT — how many input lists ranked it).
-    */
+  /** The batch retrievers' bottom-k pair key is a BIGINT, so a
+    * non-numeric id would silently cast to null — fail loudly
+    * instead (ADVICE r18). */
+  private def requireNumericId(df: DataFrame, idCol: String,
+      fn: String): Unit = {
+    val t = df.schema(idCol).dataType
+    require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
+      s"$fn keys its mergeable bottom-k on a BIGINT doc id; column " +
+        s"'$idCol' has type $t — cast it to a numeric id first (the " +
+        "single-query rankers preserve the native id type)")
+  }
+
   /** Per-document TF-IDF keyword extraction: the top-`k` terms of
     * each document by `tf × ln(N/df)` — the classic topic-tagging /
     * feature-extraction pass (Salton & Buckley 1988) a curation
@@ -227,6 +274,25 @@ object Retrieval {
         round(col("_score"), 6).cast("double").as("score"))
   }
 
+  /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009):
+    * fuse N ranked lists by score(q, d) = Σ_lists 1/(c + rank_list(d))
+    * — the standard hybrid-retrieval combiner (sparse BM25 ⊕ dense
+    * ANN) precisely because it needs no score calibration between
+    * modalities, only ranks. Contributions are EXACT integers
+    * (10^12 div (c + rank) — integer division, no floats anywhere),
+    * so fusion sums, ordering, and ties are engine-exact by
+    * construction; the quantization cannot reorder single-list
+    * contributions (monotone in rank) and cross-list ties break on
+    * ascending id.
+    *
+    * At scale: each input list is already top-k (≤ Q·k rows), the
+    * fusion groupBy is map-side combinable, and the per-query top-k
+    * is the mergeable grouped bottom-k — the whole fuse never
+    * shuffles more than the lists themselves.
+    *
+    * Output: (queryCol, rank, idCol, rrf BIGINT — the 10^12-scaled
+    * fused score, n_lists BIGINT — how many input lists ranked it).
+    */
   def rrfFuse(rankings: Seq[DataFrame], queryCol: String, idCol: String,
       rankCol: String, k: Int, c: Int = 60): DataFrame = {
     require(rankings.nonEmpty, "RRF needs at least one ranking")
@@ -245,18 +311,6 @@ object Retrieval {
       .join(fused, Seq("_q", "_id"))
       .select(col("_q").as(queryCol), col("rank"), col("_id").as(idCol),
         col("rrf"), col("n_lists"))
-  }
-
-  /** The batch retrievers' bottom-k pair key is a BIGINT, so a
-    * non-numeric id would silently cast to null — fail loudly
-    * instead (ADVICE r18). */
-  private def requireNumericId(df: DataFrame, idCol: String,
-      fn: String): Unit = {
-    val t = df.schema(idCol).dataType
-    require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"$fn keys its mergeable bottom-k on a BIGINT doc id; column " +
-        s"'$idCol' has type $t — cast it to a numeric id first (the " +
-        "single-query rankers preserve the native id type)")
   }
 
   // ---------------------------------------------------------------
@@ -327,6 +381,21 @@ object Retrieval {
   private def serveState(spark: SparkSession, path: String,
       asOf: Long = Long.MaxValue, sig0: String = null) =
     IndexManifest.serveState(spark, path, ManifestId, asOf, sig0)
+
+  /** An index's bucket count, read from its `stats` (frequency index)
+    * or `meta` (positional index) sidecar. */
+  private def nBucketsOf(spark: SparkSession, sidecar: String): Int =
+    spark.read.parquet(sidecar).select(max(col("n_buckets"))).head().getInt(0)
+
+  /** Compaction's postings rewrite, shared by both index layouts: the
+    * source's LIVE postings (tombstone supersede applied), restamped
+    * as one generation-0 base slice into fresh bucket partitions. */
+  private def compactPostings(spark: SparkSession, srcPath: String,
+      dstPath: String, ts: Option[IndexManifest.ServeState]): Unit =
+    IndexManifest.live(spark.read.parquet(s"$srcPath/postings"), ts)
+      .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(s"$dstPath/postings")
 
   /** Serve stats LRU keyed on (session token, asOf, path, manifest
     * fingerprint, stats fingerprint): the corrected (N, total_len)
@@ -422,8 +491,7 @@ object Retrieval {
     // three times)
     val toks = tokenized(deltaDocs, idCol, textCol).persistTracked
     if (toks.select(col("id")).take(1).isEmpty) return
-    val nBuckets = spark.read.parquet(s"$path/stats")
-      .select(max(col("n_buckets"))).head().getInt(0)
+    val nBuckets = nBucketsOf(spark, s"$path/stats")
     IndexManifest.commit(toks, path, ManifestId, batchKey) { (gen, slice) =>
       postingsRows(toks, nBuckets, gen, slice)
         .write.mode("append").partitionBy("bucket")
@@ -562,8 +630,7 @@ object Retrieval {
     val spark = deltaDocs.sparkSession
     if (IndexManifest.batchCommitted(spark, path, batchKey)) return
     if (deltaDocs.select(col(idCol)).take(1).isEmpty) return
-    val nBuckets = spark.read.parquet(s"$path/meta")
-      .select(max(col("n_buckets"))).head().getInt(0)
+    val nBuckets = nBucketsOf(spark, s"$path/meta")
     IndexManifest.commit(deltaDocs.select(col(idCol).as(ManifestId)), path,
         ManifestId, batchKey) { (gen, slice) =>
       positionalRows(deltaDocs, idCol, textCol, nBuckets, gen, slice)
@@ -582,10 +649,7 @@ object Retrieval {
       dstPath: String): Unit = {
     val ts = serveState(spark, srcPath)
     IndexManifest.reset(spark, dstPath)
-    IndexManifest.live(spark.read.parquet(s"$srcPath/postings"), ts)
-      .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dstPath/postings")
+    compactPostings(spark, srcPath, dstPath, ts)
     spark.read.parquet(s"$srcPath/meta")
       .write.mode("overwrite").parquet(s"$dstPath/meta")
     IndexLineage.write(spark, srcPath, dstPath,
@@ -607,22 +671,30 @@ object Retrieval {
     ((h % nBuckets) + nBuckets) % nBuckets
   }
 
-  /** The positional serve-side read shared by phrase and proximity:
-    * probed-bucket postings for `terms`, tombstone supersede
-    * applied. */
-  private def positionalPostings(spark: SparkSession, path: String,
-      terms: Seq[String], asOf: Long = Long.MaxValue): DataFrame = {
-    val nBuckets = spark.read.parquet(s"$path/meta")
-      .select(max(col("n_buckets"))).head().getInt(0)
-    // same hash expression the build used, evaluated driver-side on
-    // the literal terms (saves a per-serve T-row Spark job — the
-    // pivotedFromIndex discipline)
+  /** The serve-side postings read of every index ranker: the LIVE
+    * postings (tombstone supersede applied — see
+    * [[appendToInvertedIndex]]) of `terms`, read from their probed
+    * bucket directories only. Each bucket is [[termBucket]] of the
+    * term, so the buckets land as literals IN the partition column
+    * (the codes-scan prune of q201, lexical edition; PlanShapeSpec
+    * locks it). `ts` is by-name: the positional serve resolves its
+    * serve state after the postings listing. */
+  private def probedPostings(spark: SparkSession, path: String,
+      terms: Seq[String], nBuckets: Int,
+      ts: => Option[IndexManifest.ServeState]): DataFrame = {
     val buckets = terms.map(termBucket(_, nBuckets)).distinct
     val postings = spark.read.parquet(s"$path/postings")
       .filter(col("bucket").isin(buckets: _*) &&
         col("term").isin(terms: _*))
-    IndexManifest.live(postings, serveState(spark, path, asOf))
+    IndexManifest.live(postings, ts)
   }
+
+  /** The positional serve-side read shared by phrase and proximity:
+    * [[probedPostings]] against the meta sidecar's bucket count. */
+  private def positionalPostings(spark: SparkSession, path: String,
+      terms: Seq[String], asOf: Long): DataFrame =
+    probedPostings(spark, path, terms, nBucketsOf(spark, s"$path/meta"),
+      serveState(spark, path, asOf))
 
   /** PHRASE occurrence counts served from a positional index
     * ([[writePositionalIndex]]): docs containing the exact token
@@ -688,14 +760,10 @@ object Retrieval {
     */
   def compactInvertedIndex(spark: SparkSession, srcPath: String,
       dstPath: String): Unit = {
-    val nBuckets = spark.read.parquet(s"$srcPath/stats")
-      .select(max(col("n_buckets"))).head().getInt(0)
+    val nBuckets = nBucketsOf(spark, s"$srcPath/stats")
     val ts = serveState(spark, srcPath)
     IndexManifest.reset(spark, dstPath)
-    IndexManifest.live(spark.read.parquet(s"$srcPath/postings"), ts)
-      .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dstPath/postings")
+    compactPostings(spark, srcPath, dstPath, ts)
     val liveDl = IndexManifest.live(spark.read.parquet(s"$srcPath/doclens"), ts)
       .persistTracked
     liveDl.select(col("id"), col("dl"), lit(0L).as("_gen"),
@@ -804,18 +872,6 @@ object Retrieval {
       .filter(col("min_dist") <= window)
   }
 
-  /** Top-k BM25 served from a stored index ([[writeInvertedIndex]]):
-    * bit-identical to [[bm25TopK]] over the indexed corpus — the
-    * per-term (tf, df) pairs are pivoted back into the SAME
-    * fixed-`terms`-order left-associative score tree (each pivot
-    * aggregate sums exactly one long, so every input to the float
-    * arithmetic is the integer the full scan would produce), with
-    * (N, total_len) read from the summed stats sidecar as plan
-    * constants. The probed-bucket values are resolved by one
-    * T-row job against the engine's own hash (never reimplemented
-    * driver-side), then land as literals IN the partition column —
-    * the codes-scan prune of q201, lexical edition.
-    */
   /** BATCH multi-query BM25 served from a stored index — the
     * standing-queries workload ([[bm25TopKBatch]]) without the corpus
     * scan: the UNION of all query terms prunes the postings read to
@@ -835,51 +891,21 @@ object Retrieval {
       asOfGen: Long = Long.MaxValue): DataFrame = {
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty),
       "each query needs at least one term")
-    val allTerms = queries.flatMap(_._2).distinct
-    val (perDoc, nD, lenD, _) =
-      pivotedFromIndex(spark, path, allTerms, asOfGen)
-    requireNumericId(perDoc, "id", "bm25TopKBatchFromIndex")
-    val avgdl = lenD / nD
-    val dlD = col("dl").cast("double")
-    def termScore(i: Int): Column = {
-      val tf = coalesce(col(s"_tf$i"), lit(0L)).cast("double")
-      val dfD = col(s"_df$i").cast("double")
-      val idf = log(lit(1.0) + (nD - dfD + lit(0.5)) / (dfD + lit(0.5)))
-      when(tf > lit(0.0),
-        (idf * (tf * (lit(k1) + lit(1.0)))) /
-          (tf + lit(k1) * ((lit(1.0) - lit(b)) + lit(b) * (dlD / avgdl))))
-        .otherwise(lit(0.0))
-    }
-    val qStructs = queries.map { case (qid, terms) =>
-      val sc = terms.map(t => termScore(allTerms.indexOf(t))).reduce(_ + _)
-      struct(lit(qid).as("q"), round(sc, 6).as("s"))
-    }
-    perDoc
-      .select(col("id"), explode(array(qStructs: _*)).as("_e"))
-      .filter(col("_e.s") > lit(0.0))
-      .select(col("_e.q").as("query_id"),
-        (-round(col("_e.s") * 1e6)).cast("long").as("_k"),
-        col("id").cast("long").as("_id"))
-      .groupBy("query_id")
-      .agg(graft.functions.BottomK.bottomK(k)(col("_k"), col("_id")).as("_s"))
-      .select(col("query_id"), posexplode(col("_s")))
-      .select(col("query_id"), (col("pos") + 1L).cast("long").as("rank"),
-        col("col._2").as(idCol),
-        (-col("col._1").cast("double") / 1e6).as("score"))
+    rankTopKBatch(pivotedFromIndex(spark, path, queries.flatMap(_._2), asOfGen),
+      queries, idCol, k, k1, b, "bm25TopKBatchFromIndex")
   }
 
-  /** The shared serve-side read: probed-bucket LIVE postings
-    * (tombstone supersede applied — see [[appendToInvertedIndex]])
-    * pivoted to one row per doc with (_tf_i, _df_i) per term of
-    * `terms` (df for idf scoring — only ever read under a tf > 0
-    * guard, so per-doc is safe), plus the corrected-summed-stats
-    * (N, total_len) plan constants and the GLOBAL per-term
-    * collection frequencies for language-model smoothing. Factored
-    * so every index-served ranker scores IDENTICAL inputs.
+  /** The index path's [[LexicalStats]]: the probed-bucket LIVE
+    * postings of the distinct `queryTerms` pivoted to one row per doc
+    * with (_tf_i, _df_i) per term (df for idf scoring — only ever read
+    * under a tf > 0 guard, so per-doc is safe), the
+    * corrected-summed-stats (N, total_len) as plan constants, and the
+    * GLOBAL per-term collection frequencies for language-model
+    * smoothing.
     */
   private def pivotedFromIndex(spark: SparkSession, path: String,
-      terms: Seq[String],
-      asOf: Long = Long.MaxValue): (DataFrame, Column, Column, () => Map[String, Long]) = {
+      queryTerms: Seq[String], asOf: Long): LexicalStats = {
+    val terms = queryTerms.distinct
     // ONE manifest fingerprint feeds both the serve-state key and
     // the stats key: ts and the cached stats must describe the SAME
     // index state, or a commit racing this serve could file
@@ -905,17 +931,7 @@ object Retrieval {
           val (sn, sl) = staleStats(spark, path, nb, ts)
           (st.getAs[Long]("_n"), st.getAs[Long]("_len"), nb, sn, sl)
         }
-    // bucket of each query term via the SAME hash expression the
-    // build used — the literal-only tree is evaluated driver-side
-    // (Catalyst eval of the identical Murmur3 expression), which
-    // replaces the per-serve T-row Spark job the old `terms.toDF`
-    // formulation paid
-    val buckets = terms.map(termBucket(_, nBuckets)).distinct
-    val postings = IndexManifest.live(
-      spark.read.parquet(s"$path/postings")
-        .filter(col("bucket").isin(buckets: _*) &&
-          col("term").isin(terms: _*)),
-      ts)
+    val postings = probedPostings(spark, path, terms, nBuckets, ts)
     val dfs = postings.groupBy(col("term"))
       .agg(count(lit(1)).as("_df"), sum(col("tf")).as("_cf"))
     val pivots = terms.zipWithIndex.flatMap { case (t, i) => Seq(
@@ -924,19 +940,20 @@ object Retrieval {
     val perDoc = postings.join(broadcast(dfs), "term")
       .groupBy(col("id"), col("dl"))
       .agg(pivots.head, pivots.tail: _*)
-    val nD = lit(nDocs - staleN).cast("double")
-    val lenD = lit(totLen - staleLen).cast("double")
     // global per-term collection frequency as a T-row bounded
     // collect: cf is a CORPUS constant per term (unlike df, which
     // only ever appears under a tf > 0 guard, cf feeds the
     // background probability of docs that do NOT contain the term —
     // a per-doc pivot would silently zero those contributions).
-    // LAZY: only the language-model rankers read cf; the BM25 family
+    // LAZY: only the language-model ranker reads cf; the BM25 family
     // discards it, and eager evaluation charged every BM25 serve a
     // whole postings-scan job for a value it never used.
     val cfByTerm = () => dfs.select(col("term"), col("_cf"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (perDoc, nD, lenD, cfByTerm)
+    LexicalStats(perDoc, "id", "dl", terms,
+      i => coalesce(col(s"_tf$i"), lit(0L)), i => col(s"_df$i"),
+      lit(nDocs - staleN).cast("double"), lit(totLen - staleLen).cast("double"),
+      Some(cfByTerm))
   }
 
   /** Top-k DIRICHLET QUERY-LIKELIHOOD retrieval served from a stored
@@ -953,32 +970,40 @@ object Retrieval {
     * score terms are negative, so a short unmatched doc can in
     * principle outscore a long matched one — the oracle replays the
     * same convention (ADVICE r18). Scores are NEGATIVE log
-    * likelihoods rounded 6 dp; ties on ascending id.
+    * likelihoods rounded 6 dp; ties on ascending id. A repeated query
+    * term is rejected.
     */
   def qlTopKFromIndex(spark: SparkSession, path: String, idCol: String,
       terms: Seq[String], k: Int, mu: Double = 1000.0,
       asOfGen: Long = Long.MaxValue): DataFrame = {
     require(terms.nonEmpty, "QL needs at least one query term")
     require(mu > 0.0, "mu must be positive")
-    val (perDoc, _, lenD, cfThunk) =
-      pivotedFromIndex(spark, path, terms, asOfGen)
-    val cfByTerm = cfThunk()
-    val dlD = col("dl").cast("double")
-    val score: Column = terms.indices.map { i =>
-      val tf = coalesce(col(s"_tf$i"), lit(0L)).cast("double")
-      val cf = lit(cfByTerm.getOrElse(terms(i), 0L)).cast("double")
+    val s = pivotedFromIndex(spark, path, terms, asOfGen)
+    val cfByTerm = s.cf.get()
+    val dlD = col(s.dl).cast("double")
+    val score: Column = slots(s, terms, "qlTopKFromIndex", None).map { i =>
+      val tf = s.tf(i).cast("double")
+      val cf = lit(cfByTerm.getOrElse(s.terms(i), 0L)).cast("double")
       when(cf > lit(0.0),
-        log((tf + lit(mu) * cf / lenD) / (dlD + lit(mu))))
+        log((tf + lit(mu) * cf / s.len) / (dlD + lit(mu))))
         .otherwise(lit(0.0))
     }.reduce(_ + _)
-    perDoc
-      .withColumn("score", round(score, 6))
-      .select(col("id").as(idCol), col("dl"), col("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+    rankTopK(s, score, idCol, k)(identity)
   }
 
-  /** `asOfGen` = TIME-TRAVEL READ ([[indexHistory]] lists the clock):
+  /** Top-k BM25 served from a stored index ([[writeInvertedIndex]]):
+    * bit-identical to [[bm25TopK]] over the indexed corpus — the
+    * per-term (tf, df) pairs are pivoted back into the SAME
+    * fixed-`terms`-order left-associative score tree (each pivot
+    * aggregate sums exactly one long, so every input to the float
+    * arithmetic is the integer the full scan would produce), with
+    * (N, total_len) read from the summed stats sidecar as plan
+    * constants. The probed buckets are the build's hash of each term
+    * evaluated driver-side ([[termBucket]]), landing as literals IN
+    * the partition column — the codes-scan prune of q201, lexical
+    * edition. A repeated query term is rejected, as in [[bm25TopK]].
+    *
+    * `asOfGen` = TIME-TRAVEL READ ([[indexHistory]] lists the clock):
     * serve the index AS OF that commit generation — appends and
     * deletes committed later are invisible, reproducing the exact
     * corpus state a past training run retrieved from (the
@@ -990,24 +1015,7 @@ object Retrieval {
       k1: Double = 1.2, b: Double = 0.75,
       asOfGen: Long = Long.MaxValue): DataFrame = {
     require(terms.nonEmpty, "BM25 needs at least one query term")
-    val (perDoc, nD, lenD, _) =
-      pivotedFromIndex(spark, path, terms, asOfGen)
-    val avgdl = lenD / nD
-    val dlD = col("dl").cast("double")
-    val score: Column = terms.indices.map { i =>
-      val tf = coalesce(col(s"_tf$i"), lit(0L)).cast("double")
-      val dfD = col(s"_df$i").cast("double")
-      val idf = log(lit(1.0) + (nD - dfD + lit(0.5)) / (dfD + lit(0.5)))
-      when(tf > lit(0.0),
-        (idf * (tf * (lit(k1) + lit(1.0)))) /
-          (tf + lit(k1) * ((lit(1.0) - lit(b)) + lit(b) * (dlD / avgdl))))
-        .otherwise(lit(0.0))
-    }.reduce(_ + _)
-    perDoc
-      .withColumn("score", round(score, 6))
-      .filter(col("score") > lit(0.0))
-      .select(col("id").as(idCol), col("dl"), col("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+    val s = pivotedFromIndex(spark, path, terms, asOfGen)
+    rankTopK(s, bm25Score(s, terms, k1, b, "bm25TopKFromIndex"), idCol, k)(positive)
   }
 }

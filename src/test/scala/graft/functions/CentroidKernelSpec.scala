@@ -156,4 +156,43 @@ class CentroidKernelSpec extends SparkSpec {
       codesH.as("codes"), resid2Hof($"v", codesH).as("r2"))
     assert(bits(k) === bits(h))
   }
+
+  test("exact kernels throw on a (x-c)^2 outside DECIMAL(18,12) where the HOF spec gives null") {
+    // |x − c| ≥ 10³ for every centroid and codeword: (x−c)² ≥ 10⁶
+    // overflows the DECIMAL(18,12) quantization. The kernels fail
+    // loudly, naming themselves; the non-ANSI HOF cast gives null.
+    val far = Seq(Seq.fill(dim)(1500.0)).toDF("v")
+    def overflow(kernel: String)(c: Column): Unit = {
+      val e = intercept[Exception](far.select(c).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collect { case a: ArithmeticException => a.getMessage }.toSeq
+      assert(msgs.exists(m => m.startsWith(s"$kernel: (x-c)^2 = ") &&
+        m.endsWith("does not fit DECIMAL(18,12)")), s"$kernel: $e")
+    }
+    overflow("nearestExact")(CentroidExpressions.nearestExact($"v", cents))
+    overflow("distExactSel")(CentroidExpressions.distExactSel($"v", lit(0), cents))
+    overflow("pqAssign")(CentroidExpressions.pqAssign($"v", books, exact = true))
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      assert(far.select(distExactHof($"v", cents(0))).head().isNullAt(0))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+
+    // just inside the bound (|x − c| < 10³ everywhere) the kernels
+    // still match the spec
+    val near = Seq(Seq.fill(dim)(999.0), Seq.tabulate(dim)(i => -997.0 + i))
+      .toDF("v")
+    val exact = cents.indices.map { i =>
+      near.select(distExactHof($"v", cents(i)).cast(DecimalType(28, 12)))
+        .collect().map(_.getDecimal(0)).toSeq
+    }
+    for (i <- cents.indices)
+      assert(near.select(CentroidExpressions.distExactSel($"v", lit(i), cents))
+        .collect().map(_.getDecimal(0)).toSeq === exact(i), s"centroid $i")
+    val argmin = exact.transpose.map(d => d.indexOf(d.minBy(BigDecimal(_))))
+    assert(near.select(CentroidExpressions.nearestExact($"v", cents))
+      .collect().map(_.getInt(0)).toSeq === argmin)
+    assert(bits(near.select(CentroidExpressions.pqAssign($"v", books, exact = true))) ===
+      bits(near.select(assignHof($"v", exact = true))))
+  }
 }

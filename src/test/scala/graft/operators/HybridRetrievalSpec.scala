@@ -77,4 +77,20 @@ class HybridRetrievalSpec extends SparkSpec {
     assert(plan.contains("graft_term_tfs"),
       s"per-doc tf must come from the single-scan tf-vector kernel:\n${plan.take(3000)}")
   }
+
+  test("batch rankers reject a non-numeric doc id, naming the operator") {
+    val d = corpus(7, 40).select(col("doc_id").cast("string").as("doc_id"), col("text"))
+    val queries = Seq(1L -> Seq("spark", "join"))
+    def rejects(fn: String)(run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.stripPrefix("requirement failed: ")
+        .startsWith(s"$fn keys its mergeable bottom-k on a BIGINT doc id"), e.getMessage)
+    }
+    rejects("bm25TopKBatch")(
+      Retrieval.bm25TopKBatch(d, "doc_id", "text", queries, k = 3))
+    val path = java.nio.file.Files.createTempDirectory("bm25strid").toString + "/idx"
+    Retrieval.writeInvertedIndex(d, "doc_id", "text", path, nBuckets = 4)
+    rejects("bm25TopKBatchFromIndex")(
+      Retrieval.bm25TopKBatchFromIndex(spark, path, "doc_id", queries, k = 3))
+  }
 }

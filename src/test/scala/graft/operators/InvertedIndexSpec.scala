@@ -464,4 +464,28 @@ class InvertedIndexSpec extends SparkSpec {
     assert(after === before)
     assert(spark.read.parquet(s"$path/stats").count() === 1L)
   }
+
+  test("a repeated query term is rejected by every ranker, naming the operator, query and term") {
+    val docs = corpus(30, 41)
+    val path = tmp("invdup")
+    Retrieval.writeInvertedIndex(docs, "doc_id", "text", path, nBuckets = 4)
+    val dup = Seq("spark", "row", "spark")
+    def rejects(prefix: String)(run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.stripPrefix("requirement failed: ").startsWith(prefix) &&
+        e.getMessage.contains("repeats term 'spark'"), e.getMessage)
+    }
+    rejects("bm25TopK: the query ")(
+      Retrieval.bm25TopK(docs, "doc_id", "text", dup, 5).collect())
+    rejects("bm25TopKFromIndex: the query ")(
+      Retrieval.bm25TopKFromIndex(spark, path, "doc_id", dup, 5).collect())
+    rejects("qlTopKFromIndex: the query ")(
+      Retrieval.qlTopKFromIndex(spark, path, "doc_id", dup, 5).collect())
+    val queries = Seq(1L -> Seq("row", "join"), 7L -> dup)
+    rejects("bm25TopKBatch: query 7 ")(
+      Retrieval.bm25TopKBatch(docs, "doc_id", "text", queries, 5).collect())
+    rejects("bm25TopKBatchFromIndex: query 7 ")(
+      Retrieval.bm25TopKBatchFromIndex(spark, path, "doc_id", queries, 5)
+        .collect())
+  }
 }
