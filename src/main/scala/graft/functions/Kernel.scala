@@ -34,6 +34,16 @@ import org.apache.spark.sql.types._
   * arrays included, so two separately built calls with equal
   * parameters are one expression to subexpression elimination and
   * the cache manager.
+  *
+  * Generators: a column that shares a `select` with a generator
+  * (`posexplode`, `explode`, …) runs once per GENERATED row, because
+  * Spark leaves every non-generator column in a `Project` above the
+  * `Generate`. Project the kernel in its own `select` first, explode
+  * in the next one, and never filter on the kernel's alias: predicate
+  * pushdown substitutes the alias and copies the kernel into a second
+  * call below the generator. `graft.operators.Similarity.lloydRound`
+  * and `graft.streaming.StreamingNearDup` follow the rule;
+  * `graft.PlanDump --generators` lists what still runs above one.
   */
 case class Kernel(
     name: String,

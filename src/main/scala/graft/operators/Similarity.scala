@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType}
@@ -547,14 +547,16 @@ object Similarity {
 
   /** Lloyd's k-means over an embedding column, returning k×dim centroid
     * arrays — the training pass that sharpens [[ivfTopK]]/
-    * [[ivfTopKSeeded]] cells. Each iteration: assign every vector to
-    * its nearest current centroid (centroids are broadcast literals —
-    * zero shuffle), then recompute cell means with ONE partial-
-    * aggregated shuffle (posexplode to (cell, pos, x), groupBy avg).
-    * Only the k×dim centroid state (model metadata, not data) is
-    * collected to the driver per iteration. Deterministic: init = the
-    * k lowest-id vectors; assignment ties resolve to the lowest cell.
-    * Empty cells keep their previous centroid.
+    * [[ivfTopKSeeded]] cells. Each iteration is one [[lloydRound]]:
+    * assign every vector to its nearest current centroid (the
+    * centroids ride in the kernel — zero shuffle), then recompute cell
+    * means with ONE partial-aggregated shuffle (posexplode to
+    * (cell, pos, x), groupBy avg). Only the k×dim centroid state
+    * (model metadata, not data) is collected to the driver per
+    * iteration. Deterministic: init = the k lowest-id vectors;
+    * assignment ties resolve to the lowest cell. Empty cells keep
+    * their previous centroid; a vector of another dimension than the
+    * centroids is left out of every mean.
     */
   def kmeansCentroids(
       corpus: DataFrame,
@@ -574,21 +576,37 @@ object Similarity {
       var cents: Array[Array[Double]] = vecs.orderBy(col("_vid")).limit(k)
         .select(col("_v")).collect()
         .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      for (_ <- 0 until iters) {
-        val assigned = vecs.select(
-          nearestCell(col("_v"), cents).as("_cell"),
-          posexplode(col("_v")).as(Seq("_p", "_x")))
-        val means = assigned.groupBy("_cell", "_p")
-          .agg(avg(col("_x").cast("double")).as("_m"))
-          .collect()
-        val next = cents.map(_.clone())
-        means.foreach { r =>
-          next(r.getAs[Int]("_cell"))(r.getAs[Int]("_p")) = r.getAs[Double]("_m")
-        }
-        cents = next
-      }
+      for (_ <- 0 until iters)
+        cents = lloydRound(vecs, cents, nearestCell(col("_v"), cents),
+          avg(col("_x").cast("double")))(_ => ())
       cents
     } finally vecs.unpersist(false)
+  }
+
+  /** One Lloyd round over `vecs` (`_v` vectors): `cell` assigns each
+    * vector to a centroid of `cents`, `mean` (over the exploded
+    * coordinate `_x`) and `more` aggregate each (`_cell`, `_p`) group
+    * in one partial-aggregated shuffle, and the returned copy of
+    * `cents` takes each group's `mean` at its cell and position; `check`
+    * sees the collected groups first.
+    *
+    * The cell is projected BEFORE the posexplode, so the kernel runs
+    * once per vector, not once per coordinate (the generator rule in
+    * [[graft.functions.Kernel]]). A vector of another dimension gets a
+    * null cell; its groups travel under the null key and are dropped
+    * here, on the driver. A `filter(_cell.isNotNull)` in the plan would
+    * be pushed down to the scan as a second call of the kernel.
+    */
+  private def lloydRound(vecs: DataFrame, cents: Array[Array[Double]], cell: Column,
+      mean: Column, more: Column*)(check: Array[Row] => Unit): Array[Array[Double]] = {
+    val means = vecs.select(col("_v"), cell.as("_cell"))
+      .select(col("_cell"), posexplode(col("_v")).as(Seq("_p", "_x")))
+      .groupBy("_cell", "_p").agg(mean.as("_m"), more: _*)
+      .collect().filterNot(_.isNullAt(0))
+    check(means)
+    val next = cents.map(_.clone())
+    means.foreach { r => next(r.getInt(0))(r.getInt(1)) = r.getAs[Double]("_m") }
+    next
   }
 
   /** Exact-argmax cosine cell assignment against seed vectors:
@@ -909,7 +927,8 @@ object Similarity {
     *    |Σ| < n·2⁴³, fine through ~10⁶-vector training samples — the
     *    standard IVF recipe (train on a sample, assign the full corpus
     *    with the cheap double path).
-    * Per-iteration cost is k×dim decimal ops per row. Use
+    * Per-iteration cost is k×dim decimal ops per vector (one kernel
+    * call in each [[lloydRound]]). Use
     * [[kmeansCentroids]] when cross-engine bit parity of the model
     * itself is not required.
     */
@@ -941,43 +960,25 @@ object Similarity {
     var cents: Array[Array[Double]] = vecs.orderBy(col("_vid")).limit(k)
       .select(col("_v")).collect()
       .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    val scaled = col("_x").cast("double") * scale
     for (_ <- 0 until iters) {
       // Exact argmin assignment as ONE native kernel
-      // (graft.functions.CentroidExpressions.nearestExact, centroids
-      // as a REFERENCE OBJECT): k·d scale-12 quantized flops per row,
-      // ties to the lowest cell — the value the previous
-      // epsilon-banded prune-then-refine pipeline converged to
-      // (CentroidKernelSpec locks the equality), without its
-      // posexplode/band-filter/argmin EXCHANGE: each Lloyd round is
-      // now a single map-side projection into the one means shuffle.
-      // Because the centroids ride in the `references` slot, every
-      // iteration's plan codegens to byte-identical source and Janino
-      // compiles the round ONCE (the literal-centroid HOF trees paid
-      // re-analysis + a fresh whole-stage compile per round).
-      val assigned = vecs.select(
-        graft.functions.CentroidExpressions.nearestExact(col("_v"), cents)
-          .as("_cell"),
-        posexplode(col("_v")).as(Seq("_p", "_x")))
-        // a wrong-dimension vector gets a NULL cell — drop it rather
-        // than let getAs[Int] unbox null to 0 and silently overwrite
-        // centroid 0 (the banded pipeline dropped such rows; ADVICE r21)
-        .filter(col("_cell").isNotNull)
-      val scaled = col("_x").cast("double") * scale
-      val means = assigned.groupBy("_cell", "_p")
-        .agg(
-          (sum(floor(scaled).cast("long")).cast("double") / scale /
-            count(lit(1))).as("_m"),
-          max(when(scaled =!= floor(scaled), 1L).otherwise(0L)).as("_frac"))
-        .collect()
-      require(means.forall(_.getAs[Long]("_frac") == 0L),
-        "kmeansCentroidsExact: input vectors are not exact multiples of " +
-          "2^-43 — the integer-scaled exact mean would truncate. Use " +
-          "kmeansCentroids (plain double means) for this data.")
-      val next = cents.map(_.clone())
-      means.foreach { r =>
-        next(r.getAs[Int]("_cell"))(r.getAs[Int]("_p")) = r.getAs[Double]("_m")
+      // (graft.functions.CentroidExpressions.nearestExact): k·d
+      // scale-12 quantized flops per vector, ties to the lowest cell —
+      // the value the earlier epsilon-banded prune-then-refine pipeline
+      // converged to (CentroidKernelSpec locks the equality). Because
+      // the centroids ride in the `references` slot, every iteration's
+      // plan codegens to byte-identical source and Janino compiles the
+      // round ONCE.
+      cents = lloydRound(vecs, cents,
+        graft.functions.CentroidExpressions.nearestExact(col("_v"), cents),
+        sum(floor(scaled).cast("long")).cast("double") / scale / count(lit(1)),
+        max(when(scaled =!= floor(scaled), 1L).otherwise(0L)).as("_frac")) { means =>
+        require(means.forall(_.getAs[Long]("_frac") == 0L),
+          "kmeansCentroidsExact: input vectors are not exact multiples of " +
+            "2^-43 — the integer-scaled exact mean would truncate. Use " +
+            "kmeansCentroids (plain double means) for this data.")
       }
-      cents = next
     }
     cents
     } finally vecs.unpersist(false)

@@ -89,7 +89,8 @@ object StreamingNearDup {
     // re-shingling only the band-COLLIDING candidates afterwards is
     // |candidates|-sized work
     // the SIGNATURE must be a projected column before the explode
-    // (the lshBands shape): band slicing inside the generator lambda
+    // (the lshBands shape; the generator rule in graft.functions.Kernel's
+    // scaladoc): band slicing inside the generator lambda
     // references its input three times and runs once per band, so an
     // inlined shingle→minhash chain there is recomputed ~×bands·3;
     // projecting the full band ARRAY instead is no better — the

@@ -194,6 +194,26 @@ class NearDupSimilaritySpec extends SparkSpec {
     assert(cents(1).toSeq === Seq(0.0, 10.0))
   }
 
+  test("kmeans (plain and exact): a vector of another dimension is left out of every mean") {
+    val clusters = Seq(
+      (0L, Array(10f, 0f)), (2L, Array(11f, 0f)), (3L, Array(9f, 0f)),
+      (1L, Array(0f, 10f)), (4L, Array(0f, 11f)), (5L, Array(0f, 9f)))
+    def withVec(v: Array[Float]) = (clusters :+ (9L, v)).toDF("vec_id", "embedding")
+    val means = Seq(Seq(10.0, 0.0), Seq(0.0, 10.0))
+    // its null cell must not unbox to centroid 0: a short vector would
+    // overwrite centroid 0's first coordinate, a long one index past it
+    for (v <- Seq(Array(100f), Array(100f, 0f, 5f))) {
+      val cents = Similarity.kmeansCentroids(withVec(v), "vec_id", "embedding", k = 2, iters = 3)
+      assert(cents.map(_.toSeq).toSeq === means, s"kmeansCentroids with a ${v.length}-d vector")
+    }
+    // 1e-10f is not a multiple of 2^-43: the exact mean's check must
+    // skip the dropped vector's coordinates too
+    for (v <- Seq(Array(1e-10f), Array(1e-10f, 0f, 5f))) {
+      val cents = Similarity.kmeansCentroidsExact(withVec(v), "vec_id", "embedding", k = 2, iters = 3)
+      assert(cents.map(_.toSeq).toSeq === means, s"kmeansCentroidsExact with a ${v.length}-d vector")
+    }
+  }
+
   test("kmeansCentroidsExact: throws loudly on sub-2^-43 granularity input") {
     // 1e-10f is not a multiple of 2^-43 (its float ulp is ~2^-56), so
     // the integer-scaled exact mean cannot represent it

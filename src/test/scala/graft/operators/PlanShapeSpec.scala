@@ -436,6 +436,30 @@ class PlanShapeSpec extends SparkSpec {
         s"graft_minhash nodes:\n${plan.take(4000)}")
   }
 
+  test("k-means Lloyd rounds: the cell kernel runs ONCE per vector") {
+    // a kernel in the same select as posexplode runs once per exploded
+    // coordinate, and a null-cell filter on its alias is pushed down
+    // as a second call: each round's optimized plan must hold the
+    // kernel once, and never above the Generate
+    val vecs = Seq.tabulate(12)(i =>
+      (i.toLong, Array.tabulate(4)(j => ((i * 3 + j) % 7).toFloat))).toDF("vec_id", "embedding")
+    val (_, plans) = graft.PlanDump.capturePlans(spark) {
+      Similarity.kmeansCentroidsExact(vecs, "vec_id", "embedding", k = 3, iters = 2)
+      Similarity.kmeansCentroids(vecs, "vec_id", "embedding", k = 3, iters = 2)
+      Similarity.pqCodebooksExact(vecs, "vec_id", "embedding", dim = 4, m = 2, ks = 3, iters = 2)
+    }
+    val rounds = plans.filter(_.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Generate]))
+    assert(rounds.size === 8, s"2 + 2 + 2·2 Lloyd rounds expected, captured ${rounds.size}")
+    for (p <- rounds) {
+      val calls = p.flatMap(_.expressions.flatMap(_.collect {
+        case k: graft.functions.Kernel if k.name.startsWith("graft_nearest_centroid") => k
+      }))
+      assert(calls.size === 1, s"one cell kernel per round, found ${calls.size}:\n$p")
+      assert(!graft.PlanDump.aboveGenerators(p).exists(_.kernel),
+        s"the cell kernel must be projected below the posexplode:\n$p")
+    }
+  }
+
   test("KL drift: totals broadcast; top-k is TakeOrdered, never a global sort") {
     val a = Seq.tabulate(300)(i => s"tok${i % 40} tok${(i + 1) % 40}").toDF("text")
     val b = Seq.tabulate(300)(i => s"tok${i % 35} tok${(i + 2) % 35}").toDF("text")
