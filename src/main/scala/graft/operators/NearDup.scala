@@ -21,6 +21,13 @@ import graft.core.OpCache.TrackedPersist
   */
 object NearDup {
 
+  /** The MinHash banding defaults (word 3-grams, 32 hashes, 8 bands):
+    * a stored band index joins only deltas banded with the same three.
+    */
+  private[graft] val DefaultN = 3
+  private[graft] val DefaultNumHashes = 32
+  private[graft] val DefaultBands = 8
+
   /** LSH banding parameter analysis — the S-curve table behind every
     * (bands, rows) choice (Leskovec, Rajaraman & Ullman, "Mining of
     * Massive Datasets" ch. 3; the datasketch-style optimizer): for
@@ -101,20 +108,10 @@ object NearDup {
       array_min(transform(shingleCol, s => xxhash64(lit(j), s)))
     }: _*)
 
-  /** Explode a signature into `bands` band rows keyed by
-    * (band index, hash of the band's rows) — the LSH bucketing step.
-    * Input needs (`idCol`, `sigCol`).
-    *
-    * PRECONDITION: the signature length must be a multiple of `bands`
-    * (`size(sig)/bands` uses integer division, so trailing elements of
-    * an indivisible signature would be silently excluded from every
-    * band). Callers that know `numHashes` statically enforce this with
-    * `require`; [[candidatePairs]]/[[nearDupPairs]] do.
-    */
   /** The (band, band_hash) array for a signature — ONE derivation
-    * shared by [[lshBands]] (which builds stored indexes) and the
-    * streaming delta path ([[graft.streaming.StreamingNearDup]]): a
-    * stored index is only joinable if every future producer hashes
+    * shared by every band producer ([[lshBands]], [[bandIndex]], the
+    * operators' delta bands and [[graft.streaming.StreamingNearDup]]):
+    * a stored index is only joinable if every future producer hashes
     * bands bit-identically.
     */
   private[graft] def bandHashes(sig: Column, bands: Int): Column = {
@@ -122,6 +119,58 @@ object NearDup {
     transform(sequence(lit(0), lit(bands - 1)),
       b => xxhash64(lit("band"), b,
         concat_ws(",", slice(sig, b * rowsPerBand + 1, rowsPerBand))))
+  }
+
+  /** Explode a signature into `bands` band rows keyed by
+    * (band index, hash of the band's rows) — the LSH bucketing step.
+    * Input needs (`idCol`, `sigCol`).
+    *
+    * PRECONDITION: the signature length must be a multiple of `bands`
+    * (`size(sig)/bands` uses integer division, so trailing elements of
+    * an indivisible signature would be silently excluded from every
+    * band). Every entry point that knows `numHashes` checks this
+    * through [[requireInputs]].
+    */
+  def lshBands(df: DataFrame, idCol: String, sigCol: String, bands: Int): DataFrame =
+    explodeBands(df, Seq(idCol), sigCol, bands)
+
+  private def explodeBands(sigs: DataFrame, keep: Seq[String], sigCol: String,
+      bands: Int): DataFrame =
+    sigs.select(keep.map(col) :+
+      posexplode(bandHashes(col(sigCol), bands)).as(Seq("band", "band_hash")): _*)
+
+  /** (`keep`…, `_sig`): the MinHash signature of `shingleCol`. */
+  private def signatures(df: DataFrame, keep: Seq[String], shingleCol: Column,
+      numHashes: Int): DataFrame =
+    df.select(keep.map(col) :+ minhashSignature(shingleCol, numHashes).as("_sig"): _*)
+
+  /** The band derivation of every MinHash producer: a shingle column
+    * → (`keep`…, band, band_hash) rows, `keep` carried through (the
+    * id first; the stream also carries its event time and text).
+    *
+    * The signature is a projected column before the explode (the
+    * generator rule in graft.functions.Kernel's scaladoc): band
+    * slicing inside the generator lambda references its input three
+    * times and runs once per band, so a shingle→minhash chain inlined
+    * there is recomputed ~×bands·3; projecting the full band ARRAY
+    * instead is no better — InferFiltersFromGenerate clones the
+    * defining expression into a size()>0 pre-filter. Projecting
+    * `_sig` keeps the hashing at exactly once per row (measured 8×
+    * faster than either on the stream).
+    */
+  private[graft] def bandRows(df: DataFrame, keep: Seq[String], shingleCol: Column,
+      numHashes: Int, bands: Int): DataFrame =
+    explodeBands(signatures(df, keep, shingleCol, numHashes), keep, "_sig", bands)
+
+  /** The stored LSH band index (idCol, band, band_hash), ~bands × 16
+    * bytes per document, that [[incrementalNearDupPairs]] and
+    * [[graft.streaming.StreamingNearDup.againstIndex]] join their delta
+    * bands against — built by the same derivation as those bands.
+    */
+  def bandIndex(df: DataFrame, idCol: String, textCol: String, n: Int = DefaultN,
+      numHashes: Int = DefaultNumHashes, bands: Int = DefaultBands): DataFrame = {
+    requireInputs("NearDup.bandIndex", n, numHashes, bands)
+    bandRows(df, Seq(idCol), shingles(col(textCol), n), numHashes, bands)
   }
 
   /** The stored VERIFICATION-side table written beside a band index:
@@ -132,66 +181,85 @@ object NearDup {
     * trade documented on [[incrementalNearDupPairs]].
     */
   def shingleTable(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3): DataFrame =
+      n: Int = DefaultN): DataFrame =
     df.select(col(idCol), shingles(col(textCol), n).as("shingles"))
 
-  def lshBands(df: DataFrame, idCol: String, sigCol: String, bands: Int): DataFrame =
-    df.select(col(idCol), posexplode(bandHashes(col(sigCol), bands))
-      .as(Seq("band", "band_hash")))
-
-  /** Candidate near-dup pairs: documents sharing any LSH band bucket.
-    * Returns distinct (id_a < id_b) pairs. One self-equi-join on the
-    * band key — shuffle ∝ band rows, not N².
+  /** The input contract every banded near-dup entry point `op` checks
+    * first. Outside it, n = 0 shingles every document to "" (every
+    * pair verifies at 1.0), no hashes put every document in one
+    * bucket, bands that do not divide numHashes drop signature
+    * elements (see [[lshBands]]) and a NaN or > 1 threshold matches
+    * nothing. An entry point without banding or a threshold keeps that
+    * default, which passes.
     */
-  def candidatePairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, numHashes: Int = 32, bands: Int = 8): DataFrame = {
+  private[graft] def requireInputs(op: String, n: Int,
+      numHashes: Int = DefaultNumHashes, bands: Int = DefaultBands,
+      threshold: Double = 1.0): Unit = {
+    require(n >= 1, s"$op: n must be >= 1, got $n")
+    require(numHashes >= 1, s"$op: numHashes must be >= 1, got $numHashes")
+    require(bands >= 1, s"$op: bands must be >= 1, got $bands")
     require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a multiple of bands ($bands); " +
-        "otherwise trailing signature elements are excluded from every band")
-    val sigs = graft.core.Adaptive.spreadForCpu(df, 64L << 10)
+      s"$op: numHashes ($numHashes) must be a multiple of bands ($bands)")
+    require(threshold > 0 && threshold <= 1,
+      s"$op: threshold must be in (0, 1], got $threshold")
+  }
+
+  /** The shingle stage: (idCol, `_sh`), materialized once. Shingling
+    * is the expensive projection and feeds several subtrees (both
+    * sides of the band self-join via the signature, both sides of the
+    * verification join); Spark's plan reuse does not cover
+    * differently-aliased self-join inputs. Spread scale-adaptively
+    * first (graft.core.Adaptive, guide §2.5): on a single-split local
+    * scan the stage otherwise materializes in ONE task that every
+    * consumer job serializes on (measured ~0.9 s × 4 concurrent jobs
+    * on q169's sibling path).
+    */
+  private def shingleStage(df: DataFrame, idCol: String, textCol: String, n: Int,
+      bytesPerTask: Long = 64L << 10): DataFrame =
+    graft.core.Adaptive.spreadForCpu(df, bytesPerTask)
       .select(col(idCol), shingles(col(textCol), n).as("_sh"))
-      .select(col(idCol), minhashSignature(col("_sh"), numHashes).as("_sig"))
-    val b = lshBands(sigs, idCol, "_sig", bands)
-    val l = b.select(col(idCol).as("id_a"), col("band"), col("band_hash"))
-    val r = b.select(col(idCol).as("id_b"), col("band"), col("band_hash"))
-    l.join(r, Seq("band", "band_hash"))
+      .persistTracked
+
+  /** Candidate pairs of a band table: documents sharing any
+    * (band, `key`) bucket, as distinct (id_a < id_b) pairs. One
+    * self-equi-join on the band key — shuffle ∝ band rows, not N².
+    * `key` is `band_hash` for MinHash bands and the dHash block value
+    * in [[PerceptualHash.nearDupPairs]].
+    */
+  private[operators] def bandSelfJoin(rows: DataFrame, idCol: String,
+      key: String): DataFrame = {
+    def side(id: String) = rows.select(col(idCol).as(id), col("band"), col(key))
+    side("id_a").join(side("id_b"), Seq("band", key))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
   }
+
+  /** The exact verify: candidate pairs (`a`, `b`) joined back to their
+    * shingle arrays — `a` from `shA`, `b` from `shB`, both (idCol,
+    * `_sh`) frames — kept at Jaccard ≥ threshold as (a, b, jaccard).
+    */
+  private def verifyJaccard(cands: DataFrame, idCol: String, threshold: Double,
+      shA: DataFrame, shB: DataFrame, a: String = "id_a",
+      b: String = "id_b"): DataFrame =
+    cands
+      .join(shA.select(col(idCol).as(a), col("_sh").as("_sha")), a)
+      .join(shB.select(col(idCol).as(b), col("_sh").as("_shb")), b)
+      .withColumn("jaccard", jaccard(col("_sha"), col("_shb")))
+      .filter(col("jaccard") >= threshold)
+      .select(col(a), col(b), col("jaccard"))
 
   /** Near-dup pairs with exact Jaccard ≥ threshold, verified only on
     * LSH candidates (the 100 TB shape). For oracle-checked exactness on
     * small data use an all-pairs Jaccard query instead.
     */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, n: Int = 3, numHashes: Int = 32, bands: Int = 8): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a multiple of bands ($bands); " +
-        "otherwise trailing signature elements are excluded from every band")
-    // shingling is the expensive projection and feeds FOUR subtrees
-    // (both sides of the band self-join via the signature, both sides
-    // of the verification join) — materialize it once; Spark's plan
-    // reuse does not cover differently-aliased self-join inputs.
-    // Spread scale-adaptively first (graft.core.Adaptive, guide §2.5):
-    // on a single-split local scan the shingle+minhash pass otherwise
-    // materializes in ONE task that every consumer job serializes on
-    // (measured ~0.9 s × 4 concurrent jobs on q169's sibling path)
-    val sh = graft.core.Adaptive.spreadForCpu(df, 64L << 10)
-      .select(col(idCol), shingles(col(textCol), n).as("_sh"))
-      .persistTracked
-    val sigs = sh.select(col(idCol), minhashSignature(col("_sh"), numHashes).as("_sig"))
-    val b = lshBands(sigs, idCol, "_sig", bands)
-    val l = b.select(col(idCol).as("id_a"), col("band"), col("band_hash"))
-    val r = b.select(col(idCol).as("id_b"), col("band"), col("band_hash"))
-    val cands = l.join(r, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    cands
-      .join(sh.select(col(idCol).as("id_a"), col("_sh").as("_sha")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("_sh").as("_shb")), "id_b")
-      .withColumn("jaccard", jaccard(col("_sha"), col("_shb")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      threshold: Double, n: Int = DefaultN, numHashes: Int = DefaultNumHashes,
+      bands: Int = DefaultBands): DataFrame = {
+    requireInputs("NearDup.nearDupPairs", n, numHashes, bands, threshold)
+    val sh = shingleStage(df, idCol, textCol, n)
+    val cands = bandSelfJoin(
+      bandRows(sh, Seq(idCol), col("_sh"), numHashes, bands), idCol, "band_hash")
+    verifyJaccard(cands, idCol, threshold, sh, sh)
   }
 
   /** [[nearDupPairs]] with a b-BIT MINHASH PREFILTER (Li & König,
@@ -221,41 +289,28 @@ object NearDup {
     * probability; `Double.NaN` (default) means "derive from k".
     */
   def bbitPrefilteredPairs(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, estMargin: Double = Double.NaN, n: Int = 3,
+      threshold: Double, estMargin: Double = Double.NaN, n: Int = DefaultN,
       numHashes: Int = 128, bands: Int = 32): DataFrame = {
-    require(numHashes % bands == 0 && numHashes % 64 == 0,
-      s"numHashes ($numHashes) must be a multiple of bands ($bands) and 64")
+    requireInputs("NearDup.bbitPrefilteredPairs", n, numHashes, bands, threshold)
+    require(numHashes % 64 == 0,
+      s"NearDup.bbitPrefilteredPairs: numHashes ($numHashes) must be a multiple of 64")
     val margin =
       if (estMargin.isNaN) 4.0 / math.sqrt(numHashes.toDouble) else estMargin
-    import graft.core.OpCache.TrackedPersist
-    // spread the heavy shingle+minhash+pack projection (guide §2.5;
-    // measured: 4 consumer jobs serialized ~0.9 s each on the
-    // single-task persisted partition)
-    val sh = graft.core.Adaptive.spreadForCpu(df, 64L << 10)
-      .select(col(idCol), shingles(col(textCol), n).as("_sh"))
-      .persistTracked
-    val sigs = sh.select(col(idCol),
-        minhashSignature(col("_sh"), numHashes).as("_sig"))
+    // the signature frame feeds the bands and both screen join-backs
+    val sh = shingleStage(df, idCol, textCol, n)
+    val sigs = signatures(sh, Seq(idCol), col("_sh"), numHashes)
       .withColumn("_bb", graft.functions.HashExpressions.bbitPack(col("_sig")))
       .persistTracked
-    val b = lshBands(sigs.select(col(idCol), col("_sig")), idCol, "_sig", bands)
-    val l = b.select(col(idCol).as("id_a"), col("band"), col("band_hash"))
-    val r = b.select(col(idCol).as("id_b"), col("band"), col("band_hash"))
-    val cands = l.join(r, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val cands = bandSelfJoin(
+      lshBands(sigs.select(col(idCol), col("_sig")), idCol, "_sig", bands),
+      idCol, "band_hash")
     val screened = if (threshold - margin <= 0.0) cands else cands
       .join(sigs.select(col(idCol).as("id_a"), col("_bb").as("_bba")), "id_a")
       .join(sigs.select(col(idCol).as("id_b"), col("_bb").as("_bbb")), "id_b")
       .filter(graft.functions.HashExpressions.bbitEst(
         col("_bba"), col("_bbb"), numHashes) >= threshold - margin)
       .select("id_a", "id_b")
-    screened
-      .join(sh.select(col(idCol).as("id_a"), col("_sh").as("_sha")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("_sh").as("_shb")), "id_b")
-      .withColumn("jaccard", jaccard(col("_sha"), col("_shb")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifyJaccard(screened, idCol, threshold, sh, sh)
   }
 
   /** CONTAINMENT near-dup pairs (asymmetric Jaccard): C(A in B) =
@@ -288,11 +343,9 @@ object NearDup {
     * pair set only.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, n: Int = 3): DataFrame = {
-    require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
-    val sh = graft.core.Adaptive.spreadForCpu(df, 64L << 10)
-      .select(col(idCol), shingles(col(textCol), n).as("_sh"))
-      .persistTracked
+      threshold: Double, n: Int = DefaultN): DataFrame = {
+    requireInputs("NearDup.containmentPairs", n, threshold = threshold)
+    val sh = shingleStage(df, idCol, textCol, n)
     val occ = sh.select(col(idCol),
         explode(col("_sh")).as("_s"))
       .select(col(idCol), xxhash64(col("_s")).as("_h"))
@@ -330,11 +383,11 @@ object NearDup {
     * shape for NEAR duplicates: a new crawl batch must be checked for
     * near-dups against a 100 TB history WITHOUT re-shingling or
     * re-hashing that history. The stored state is the band table
-    * (band, band_hash, id) — ~bands × 16 bytes per historical doc,
-    * written once when each batch is ingested; history TEXT is touched
-    * again only for verification, and only for the (few) docs that
-    * actually collide with a delta band — a semi-join pushes the
-    * candidate id set into the history scan.
+    * ([[bandIndex]]: band, band_hash, id) — ~bands × 16 bytes per
+    * historical doc, written once when each batch is ingested;
+    * history TEXT is touched again only for verification, and only
+    * for the (few) docs that actually collide with a delta band — a
+    * semi-join pushes the candidate id set into the history scan.
     *
     * Emits all near-dup pairs INVOLVING the delta (delta×history and
     * delta×delta; history×history pairs were emitted when those
@@ -369,12 +422,10 @@ object NearDup {
       idCol: String,
       textCol: String,
       threshold: Double,
-      n: Int = 3,
-      numHashes: Int = 32,
-      bands: Int = 8): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a multiple of bands ($bands); " +
-        "otherwise trailing signature elements are excluded from every band")
+      n: Int = DefaultN,
+      numHashes: Int = DefaultNumHashes,
+      bands: Int = DefaultBands): (DataFrame, DataFrame) = {
+    requireInputs("NearDup.incrementalNearDupPairs", n, numHashes, bands, threshold)
     // coarser bytes/task than the batch shingle sites: dSh is CACHED
     // and consumed by five later stages (sig/band build ×3, both
     // verify joins), so every cached partition costs five task
@@ -382,11 +433,8 @@ object NearDup {
     // inflated q105's warm path 82 → 164 tasks for ~zero compute win
     // (+1.0 s measured); at 512 KB/task a small delta stays at a few
     // partitions while a GB-scale arrival still fans out to every core
-    val dSh = graft.core.Adaptive.spreadForCpu(delta, 512L << 10)
-      .select(col(idCol), shingles(col(textCol), n).as("_sh"))
-      .persistTracked
-    val dSigs = dSh.select(col(idCol), minhashSignature(col("_sh"), numHashes).as("_sig"))
-    val dBands = lshBands(dSigs, idCol, "_sig", bands)
+    val dSh = shingleStage(delta, idCol, textCol, n, 512L << 10)
+    val dBands = bandRows(dSh, Seq(idCol), col("_sh"), numHashes, bands)
 
     // delta × history candidates: one equi-join against the stored
     // index. Re-crawled ids' stale bands are superseded by the delta's
@@ -399,30 +447,17 @@ object NearDup {
         Seq("band", "band_hash"))
       .select("_did", "_hid").distinct()
     // delta × delta candidates: the batch-internal self-join (small side)
-    val l = dBands.select(col(idCol).as("id_a"), col("band"), col("band_hash"))
-    val r = dBands.select(col(idCol).as("id_b"), col("band"), col("band_hash"))
-    val deltaCand = l.join(r, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val deltaCand = bandSelfJoin(dBands, idCol, "band_hash")
 
     // verify: history shingles recomputed ONLY for colliding ids —
     // the semi-join prunes the history scan to the candidate set
     val hSh = historyText
       .join(histCand.select(col("_hid").as(idCol)).distinct(), Seq(idCol), "left_semi")
       .select(col(idCol), shingles(col(textCol), n).as("_sh"))
-    val histPairs = histCand
-      .join(dSh.select(col(idCol).as("_did"), col("_sh").as("_sha")), "_did")
-      .join(hSh.select(col(idCol).as("_hid"), col("_sh").as("_shb")), "_hid")
-      .withColumn("jaccard", jaccard(col("_sha"), col("_shb")))
-      .filter(col("jaccard") >= threshold)
+    val histPairs = verifyJaccard(histCand, idCol, threshold, dSh, hSh, "_did", "_hid")
       .select(least(col("_did"), col("_hid")).as("id_a"),
         greatest(col("_did"), col("_hid")).as("id_b"), col("jaccard"))
-    val deltaPairs = deltaCand
-      .join(dSh.select(col(idCol).as("id_a"), col("_sh").as("_sha")), "id_a")
-      .join(dSh.select(col(idCol).as("id_b"), col("_sh").as("_shb")), "id_b")
-      .withColumn("jaccard", jaccard(col("_sha"), col("_shb")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    val deltaPairs = verifyJaccard(deltaCand, idCol, threshold, dSh, dSh)
     (histPairs.unionByName(deltaPairs), dBands)
   }
 

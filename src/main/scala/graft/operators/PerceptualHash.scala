@@ -92,12 +92,7 @@ object PerceptualHash {
     val bandRows = hashes
       .select(col(idCol), explode(array(bandStructs: _*)).as("e"))
       .select(col(idCol), col("e.band").as("band"), col("e.bv").as("bv"))
-    val l = bandRows.select(col(idCol).as("id_a"), col("band"), col("bv"))
-    val r = bandRows.select(col(idCol).as("id_b"), col("band"), col("bv"))
-    val cand = l.join(r, Seq("band", "bv"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    cand
+    NearDup.bandSelfJoin(bandRows, idCol, "bv")
       .join(hashes.select(col(idCol).as("id_a"), col(hashCol).as("_ha")), "id_a")
       .join(hashes.select(col(idCol).as("id_b"), col(hashCol).as("_hb")), "id_b")
       .withColumn("hamming",

@@ -439,12 +439,7 @@ object Queries {
     * sets coincide (verified at both test scale factors).
     */
   val q16MinhashLsh: Q = (s, dir) => {
-    val d0 = docs(s, dir).select("doc_id", "text")
-    val mutated = d0.select(
-      (col("doc_id") + 100000).as("doc_id"),
-      concat_ws(" ", slice(Text.tokens(col("text")), 2, 100000)).as("text"))
-    val corpus = d0.unionByName(mutated)
-    NearDup.nearDupPairs(corpus, "doc_id", "text", threshold = 0.5)
+    NearDup.nearDupPairs(mutantCorpus(s, dir), "doc_id", "text", threshold = 0.5)
       .orderBy("id_a", "id_b")
   }
 
@@ -743,11 +738,7 @@ object Queries {
     * recomputes reachability with a recursive CTE.
     */
   val q32Components: Q = (s, dir) => {
-    val d0 = docs(s, dir).select("doc_id", "text")
-    val mutated = d0.select(
-      (col("doc_id") + 100000).as("doc_id"),
-      concat_ws(" ", slice(Text.tokens(col("text")), 2, 100000)).as("text"))
-    val corpus = d0.unionByName(mutated)
+    val corpus = mutantCorpus(s, dir)
     val pairs = NearDup.nearDupPairs(corpus, "doc_id", "text", threshold = 0.5)
     Dedup.componentsStar(corpus.select("doc_id"), "doc_id", pairs, "id_a", "id_b")
       .select(col("v").as("doc_id"), col("comp").as("canonical_id"))
@@ -900,16 +891,12 @@ object Queries {
     */
   val q49DedupE2e: Q = (s, dir) => {
     import graft.core.OpCache.TrackedPersist
-    val d0 = docs(s, dir).select("doc_id", "text")
-    val mutated = d0.select(
-      (col("doc_id") + 100000).as("doc_id"),
-      concat_ws(" ", slice(Text.tokens(col("text")), 2, 100000)).as("text"))
     // the corpus feeds THREE consumers (shingling, the vertex list,
     // the final token_count projection) and its mutated half pays a
     // tokenize per materialization — persist once (the same
-    // share-don't-recompute contract nearDupPairs applies to its
-    // shingle frame internally)
-    val corpus = d0.unionByName(mutated).persistTracked
+    // share-don't-recompute contract NearDup's shingle stage applies
+    // to its shingle frame)
+    val corpus = mutantCorpus(s, dir).persistTracked
     val pairs = NearDup.nearDupPairs(corpus, "doc_id", "text", threshold = 0.5)
     val labels = Dedup.componentsStar(corpus.select("doc_id"), "doc_id",
       pairs, "id_a", "id_b")
@@ -2214,10 +2201,7 @@ object Queries {
     val delta = d.filter(col("doc_id") >= 400).unionByName(mutants)
       .withColumn("ts", lit("2021-01-01 00:00:00").cast("timestamp"))
     val bandsDir = memoFixture("q91bands", dir) { p =>
-      val histSigs = history
-        .select(col("doc_id"), NearDup.shingles(col("text"), 3).as("_sh"))
-        .select(col("doc_id"), NearDup.minhashSignature(col("_sh"), 32).as("_sig"))
-      NearDup.lshBands(histSigs, "doc_id", "_sig", 8)
+      NearDup.bandIndex(history, "doc_id", "text")
         .write.mode("overwrite").parquet(p)
     }
     // the stored verification side (written at ingest, like the band
@@ -2616,11 +2600,7 @@ object Queries {
     * ∝ history.
     */
   val q105IncrementalComponents: Q = (s, dir) => {
-    val d0 = docs(s, dir).select("doc_id", "text")
-    val mutated = d0.select(
-      (col("doc_id") + 100000).as("doc_id"),
-      concat_ws(" ", slice(Text.tokens(col("text")), 2, 100000)).as("text"))
-    val corpus = d0.unionByName(mutated)
+    val corpus = mutantCorpus(s, dir)
     // history is the BULK of the corpus (everything except originals
     // < 300 and their mutants): at 100 TB the labeled history dwarfs
     // every arriving batch, and this split makes the demo measure
@@ -2644,10 +2624,7 @@ object Queries {
       graft.core.OpCache.release()
     }
     val bandsDir = memoFixture("q105bands", dir) { p =>
-      val histSigs = history
-        .select(col("doc_id"), NearDup.shingles(col("text"), 3).as("_sh"))
-        .select(col("doc_id"), NearDup.minhashSignature(col("_sh"), 32).as("_sig"))
-      NearDup.lshBands(histSigs, "doc_id", "_sig", 8)
+      NearDup.bandIndex(history, "doc_id", "text")
         .write.mode("overwrite").parquet(p)
     }
     val histLabels = s.read.parquet(labelsDir)
@@ -4026,10 +4003,7 @@ object Queries {
         concat_ws(" ", slice(Text.tokens(col("text")), 2, 100000)).as("text"))
     val delta = d.filter(col("doc_id") >= 400).unionByName(mutants)
     // ingest-time state: the history band index (bands × 16 bytes/doc)
-    val histSigs = history
-      .select(col("doc_id"), NearDup.shingles(col("text"), 3).as("_sh"))
-      .select(col("doc_id"), NearDup.minhashSignature(col("_sh"), 32).as("_sig"))
-    NearDup.lshBands(histSigs, "doc_id", "_sig", 8)
+    NearDup.bandIndex(history, "doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/bands")
     val bandState = s.read.parquet(s"$tmp/bands")
     val (pairs, _) = NearDup.incrementalNearDupPairs(
@@ -4378,12 +4352,7 @@ object Queries {
     * the oracle is q16's all-pairs SQL verbatim.
     */
   val q169BbitMinhash: Q = (s, dir) => {
-    val d0 = docs(s, dir).select("doc_id", "text")
-    val mutated = d0.select(
-      (col("doc_id") + 100000).as("doc_id"),
-      concat_ws(" ", slice(Text.tokens(col("text")), 2, 100000)).as("text"))
-    val corpus = d0.unionByName(mutated)
-    NearDup.bbitPrefilteredPairs(corpus, "doc_id", "text", threshold = 0.5)
+    NearDup.bbitPrefilteredPairs(mutantCorpus(s, dir), "doc_id", "text", threshold = 0.5)
       .orderBy("id_a", "id_b")
   }
 

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *  - shingle → minhash → band hashing is per-row projection work —
   *    stateless, map-side, no shuffle of the stream.
   *  - candidate generation is a stream-STATIC inner join on the
-  *    8-byte (band, band_hash) key against the stored index. Band
-  *    hashing is shared bit-for-bit with the index builder
-  *    ([[NearDup.bandHashes]]) — a stored index is only joinable if
+  *    8-byte (band, band_hash) key against the stored index. The
+  *    delta bands come from the index builder's own derivation
+  *    ([[NearDup.bandIndex]]) — a stored index is only joinable if
   *    every future producer hashes identically.
   *  - the only STATE is `dropDuplicatesWithinWatermark` on the
   *    candidate pair (two docs can collide in several bands; the pair
@@ -70,14 +70,12 @@ object StreamingNearDup {
       tsCol: String,
       textCol: String,
       threshold: Double,
-      n: Int = 3,
-      numHashes: Int = 32,
-      bands: Int = 8,
+      n: Int = NearDup.DefaultN,
+      numHashes: Int = NearDup.DefaultNumHashes,
+      bands: Int = NearDup.DefaultBands,
       lateness: String = "1 day",
       historyShingles: DataFrame = null): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a multiple of bands ($bands); " +
-        "otherwise trailing signature elements are excluded from every band")
+    NearDup.requireInputs("StreamingNearDup.againstIndex", n, numHashes, bands, threshold)
     require(!bandState.isStreaming && !historyText.isStreaming,
       "bandState and historyText are the STORED side and must be batch frames")
 
@@ -88,22 +86,9 @@ object StreamingNearDup {
     // micro-batch (array-of-UTF8String churn ×bands ×|delta|), while
     // re-shingling only the band-COLLIDING candidates afterwards is
     // |candidates|-sized work
-    // the SIGNATURE must be a projected column before the explode
-    // (the lshBands shape; the generator rule in graft.functions.Kernel's
-    // scaladoc): band slicing inside the generator lambda
-    // references its input three times and runs once per band, so an
-    // inlined shingle→minhash chain there is recomputed ~×bands·3;
-    // projecting the full band ARRAY instead is no better — the
-    // InferFiltersFromGenerate rule clones the defining expression
-    // into a size()>0 pre-filter. Projecting _sig keeps the hashing
-    // at exactly once per row (measured 8× faster than either).
-    def banded(df: DataFrame): DataFrame = df
-      .select(col(idCol).as("_did"), col(tsCol), col(textCol).as("_tda"),
-        NearDup.minhashSignature(
-          NearDup.shingles(col(textCol), n), numHashes).as("_sig"))
-      .select(col("_did"), col(tsCol), col("_tda"),
-        posexplode(NearDup.bandHashes(col("_sig"), bands))
-          .as(Seq("band", "band_hash")))
+    def banded(df: DataFrame): DataFrame = NearDup.bandRows(
+      df.select(col(idCol).as("_did"), col(tsCol), col(textCol).as("_tda")),
+      Seq("_did", tsCol, "_tda"), NearDup.shingles(col("_tda"), n), numHashes, bands)
 
     def verified(cand: DataFrame): DataFrame = {
       val hSh =

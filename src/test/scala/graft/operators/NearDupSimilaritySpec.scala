@@ -544,6 +544,67 @@ class NearDupSimilaritySpec extends SparkSpec {
     assert(rows.toSet === Set((1L, 1001L)))
   }
 
+  test("one band derivation: bandIndex ≡ the hand-built chain; stored + delta bands ≡ full index") {
+    val rnd = new scala.util.Random(59)
+    val vocab = (0 until 50).map(i => s"w$i")
+    val base = (0L until 30L).map(i => (i, Seq.fill(20)(vocab(rnd.nextInt(50))).mkString(" ")))
+    val muts = base.collect { case (i, t) if i % 3 == 0 =>
+      (i + 1000L, t.split(" ").drop(1).mkString(" "))
+    }
+    val (b1, b2) = (base ++ muts).partition { case (id, _) => id % 1000 < 15 }
+    val h = b1.toDF("doc_id", "text")
+    val d2 = b2.toDF("doc_id", "text")
+    def rows(df: DataFrame) =
+      df.select("doc_id", "band", "band_hash").orderBy("doc_id", "band")
+        .as[(Long, Int, Long)].collect().toSeq
+    val sigs = h.select($"doc_id", NearDup.shingles($"text", 3).as("_sh"))
+      .select($"doc_id", NearDup.minhashSignature($"_sh", 32).as("_sig"))
+    val handBuilt = rows(NearDup.lshBands(sigs, "doc_id", "_sig", 8))
+    assert(rows(NearDup.bandIndex(h, "doc_id", "text")) === handBuilt)
+    assert(handBuilt.size === 8 * h.count())
+    val (_, deltaBands) = NearDup.incrementalNearDupPairs(
+      NearDup.bandIndex(h, "doc_id", "text"), h, d2, "doc_id", "text", threshold = 0.5)
+    assert((handBuilt ++ rows(deltaBands)).toSet ===
+      rows(NearDup.bandIndex(h.unionByName(d2), "doc_id", "text")).toSet)
+    graft.core.OpCache.release()
+  }
+
+  test("banded near-dup entry points reject inputs outside the contract, naming operator and parameter") {
+    val docs = Seq((1L, docA), (2L, docB), (3L, docC)).toDF("doc_id", "text")
+    val state = NearDup.bandIndex(docs, "doc_id", "text")
+    // (operator, the parameters it takes, a call at n, numHashes, bands, threshold)
+    val entries: Seq[(String, Set[String], (Int, Int, Int, Double) => Any)] = Seq(
+      ("NearDup.nearDupPairs", Set("n", "numHashes", "bands", "threshold"),
+        (n, k, b, t) => NearDup.nearDupPairs(docs, "doc_id", "text", t, n, k, b)),
+      ("NearDup.bbitPrefilteredPairs", Set("n", "numHashes", "bands", "threshold"),
+        (n, k, b, t) => NearDup.bbitPrefilteredPairs(docs, "doc_id", "text", t,
+          n = n, numHashes = k, bands = b)),
+      ("NearDup.incrementalNearDupPairs", Set("n", "numHashes", "bands", "threshold"),
+        (n, k, b, t) => NearDup.incrementalNearDupPairs(state, docs, docs,
+          "doc_id", "text", t, n, k, b)),
+      ("NearDup.containmentPairs", Set("n", "threshold"),
+        (n, _, _, t) => NearDup.containmentPairs(docs, "doc_id", "text", t, n)),
+      ("NearDup.bandIndex", Set("n", "numHashes", "bands"),
+        (n, k, b, _) => NearDup.bandIndex(docs, "doc_id", "text", n, k, b)))
+    // (the parameter at fault, n, numHashes, bands, threshold); 128/32
+    // is a valid banding for every entry point, the b-bit one included
+    val bad = Seq(
+      ("n", 0, 128, 32, 0.5), ("n", -1, 128, 32, 0.5),
+      ("numHashes", 3, 0, 32, 0.5), ("numHashes", 3, -64, 32, 0.5),
+      ("bands", 3, 128, 0, 0.5), ("bands", 3, 128, -32, 0.5),
+      ("numHashes", 3, 128, 48, 0.5),
+      ("threshold", 3, 128, 32, 0.0), ("threshold", 3, 128, 32, -0.5),
+      ("threshold", 3, 128, 32, 1.5), ("threshold", 3, 128, 32, Double.NaN))
+    for ((op, takes, call) <- entries; (param, n, k, b, t) <- bad if takes(param)) {
+      val e = intercept[IllegalArgumentException](call(n, k, b, t))
+      assert(e.getMessage.contains(op) && e.getMessage.contains(param),
+        s"$op at n=$n numHashes=$k bands=$b threshold=$t: ${e.getMessage}")
+    }
+    // the boundary threshold 1.0 is inside the contract
+    assert(NearDup.nearDupPairs(docs, "doc_id", "text", 1.0).count() === 0)
+    graft.core.OpCache.release()
+  }
+
   test("hardNegatives: k nearest OTHER-label vectors; same-label crowding cannot under-fill k") {
     // anchor 0 (label 1) sits in a dense label-1 cluster; the nearest
     // label-2 vectors are farther — a plain top-k-then-filter would

@@ -87,6 +87,23 @@ class StreamingNearDupSpec extends SparkSpec {
     assert(out.toSet === expectedPairs)
   }
 
+  test("againstIndex rejects inputs outside the banded near-dup contract") {
+    // (the parameter at fault, n, numHashes, bands, threshold)
+    val bad = Seq(
+      ("n", 0, 32, 8, 0.5), ("numHashes", 3, 0, 8, 0.5), ("bands", 3, 32, 0, 0.5),
+      ("numHashes", 3, 32, 5, 0.5), ("threshold", 3, 32, 8, 0.0),
+      ("threshold", 3, 32, 8, 1.5), ("threshold", 3, 32, 8, Double.NaN))
+    for ((param, n, k, b, t) <- bad) {
+      val e = intercept[IllegalArgumentException] {
+        StreamingNearDup.againstIndex(
+          delta.toDF(), bandState, history.toDF("doc_id", "text"),
+          "doc_id", "ts", "text", threshold = t, n = n, numHashes = k, bands = b)
+      }
+      assert(e.getMessage.contains("StreamingNearDup.againstIndex") &&
+        e.getMessage.contains(param), s"$param: ${e.getMessage}")
+    }
+  }
+
   test("streaming stored side is rejected") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[CrawlDoc]
