@@ -64,9 +64,8 @@ object Probe {
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val dt = (System.nanoTime() - t0) / 1e9
-          // listener events are async — give the bus a beat to drain
-          // (listenerBus.waitUntilEmpty is private[spark])
-          Thread.sleep(300)
+          // listener events are async: wait for the bus to drain
+          org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
           line = f"$name%-40s run$run sec=$dt%7.3f jobs=${jobs.get}%4d " +
             f"stages=${stages.get}%4d tasks=${tasks.get}%6d"
         } catch { case e: Throwable =>

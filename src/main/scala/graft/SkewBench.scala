@@ -95,33 +95,15 @@ object SkewBench {
         s""""shuffle_write_bytes":$shuffleWriteBytes}"""
   }
 
-  /** minOf2 with listener maxima from the faster run. The listener bus
-    * is async, so straggler TaskEnd events can land after the action
-    * returns; poll (outside the timed region) until the maxima hold
-    * still for a full grace window — a fixed sleep under-reports
-    * exactly the numbers the scaling claim rests on. Bounded at 15 s
-    * so a wedged bus can't hang the bench.
-    */
-  private def awaitStableMaxima(l: TaskMaxListener): Unit = {
-    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    // totalShuffleWriteBytes is part of the watched tuple: a straggler
-    // TaskEnd below both maxima still adds bytes, and the byte total
-    // is exactly what the fuzzy-join linear-bytes claim rests on
-    def snap() = (l.maxRunMs.get, l.maxShuffleRows.get, l.totalShuffleWriteBytes.get)
-    var last = snap()
-    var stableMs = 0
-    while (stableMs < 1000 && System.nanoTime() < deadline) {
-      Thread.sleep(200)
-      val cur = snap()
-      if (cur == last) stableMs += 200 else { last = cur; stableMs = 0 }
-    }
-  }
-
+  /** minOf2 with listener maxima from the faster run; TaskEnd events
+    * land asynchronously, so each run drains the listener bus (outside
+    * the timed region) before reading the maxima. */
   private def minOf2M(l: TaskMaxListener)(body: => Long): Meas = {
     def once(): Meas = {
       l.reset()
       val (a, t) = time(body)
-      awaitStableMaxima(l)
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(
+        SparkSession.active.sparkContext)
       Meas(a, t, l.maxRunMs.get / 1e3, l.maxShuffleRows.get,
         l.totalShuffleWriteBytes.get)
     }

@@ -3,13 +3,20 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The COMMIT MANIFEST of every stored index — the one module that
-  * knows the slice-commit protocol, shared by the lexical tier
-  * (`Retrieval`: inverted and positional indexes, manifest id column
-  * `id`) and the ANN tier (`Similarity`: flat-PQ and IVF-PQ, id column
-  * `neighbor_id`). Each tier keeps only its own data layout (postings
-  * / stats / doclens, resp. codes / books / cells / meta); everything
-  * about the manifest lives here.
+/** The COMMIT MANIFEST and LIFECYCLE of every stored index — the one
+  * module that knows the slice-commit protocol, shared by the lexical
+  * tier (`Retrieval`: inverted and positional indexes, manifest id
+  * column `id`) and the ANN tier (`Similarity`: flat-PQ and IVF-PQ,
+  * id column `neighbor_id`). Each tier keeps only its own data layout
+  * (postings / stats / doclens / meta, resp. codes / books / cells /
+  * meta): its row derivations, its sidecar list and its serve path.
+  *
+  * LIFECYCLE, one function per step for all four tiers: the base
+  * write of a build or a compaction destination ([[writeBase]]), the
+  * append guard ([[skip]]) before [[commit]], [[delete]] and
+  * [[compact]]. A delete at a path without the tier's data directory
+  * throws, naming operator and path, and writes nothing; a compaction
+  * onto its own source throws before either path is written.
   *
   * ON-DISK FORMAT: `<path>/tombstones` holds (id, gen, slice,
   * batch_key) rows and doubles as the commit manifest — an append or
@@ -20,7 +27,7 @@ import org.apache.spark.sql.functions._
   * tombstoned, so a base index has no manifest at all and serves with
   * no slice filter and no supersede join. `<path>/lineage` is the
   * compaction sidecar ([[IndexLineage]]). A rebuild at a path clears
-  * both ([[reset]]).
+  * both ([[writeBase]]).
   *
   * ON-DISK FORMAT note (ADVICE r19): serving requires `_slice` on the
   * data rows and `slice`/`batch_key` on the manifest — the
@@ -62,27 +69,35 @@ private[operators] object IndexManifest {
   def idColumn(manifest: DataFrame): String =
     if (manifest.columns.contains("neighbor_id")) "neighbor_id" else "id"
 
-  /** REBUILD reset: a full build restarts the generation clock and
-    * the index's history. Stale tombstones from a previous append at
-    * this path would otherwise drop the fresh gen-0 rows at serve
-    * time, and a stale lineage row would keep naming a compaction
-    * source the rebuilt index no longer comes from. Compactors run it
-    * on their destination too, before writing their own lineage.
-    */
-  def reset(spark: SparkSession, path: String): Unit =
+  /** BASE WRITE of a build or a compaction destination: reset the
+    * generation clock and the history — stale tombstones would drop
+    * the fresh gen-0 rows at serve time, a stale lineage row would
+    * name a source the index no longer comes from — then
+    * `write(0, BaseSlice)` performs the tier's data writes. */
+  def writeBase(spark: SparkSession, path: String)(
+      write: (Long, String) => Unit): Unit = {
     Seq(tombstonesDir(path), lineageDir(path)).foreach { dir =>
       val (p, fs) = hpath(spark, dir)
-      if (fs.exists(p)) fs.delete(p, true)
+      fs.delete(p, true) // false, not an error, when `dir` is absent
     }
+    write(0L, BaseSlice)
+  }
 
-  /** True iff `batchKey` (non-null) already appears in the manifest —
-    * the idempotent-re-delivery guard for streaming ingest (the
-    * Structured Streaming replay contract: a batchId re-runs only
-    * until its foreachBatch returns). */
-  def batchCommitted(spark: SparkSession, path: String,
+  /** The save mode of a tier data write stamped with generation `gen`:
+    * a base write (generation 0) overwrites, a commit appends. */
+  def saveMode(gen: Long): String = if (gen == 0L) "overwrite" else "append"
+
+  /** The APPEND GUARD run before a [[commit]]: true iff `batchKey`
+    * (non-null) already appears in the manifest — the idempotent
+    * re-delivery skip for streaming ingest (a batchId re-runs only
+    * until its foreachBatch returns) — or `ids` has no rows (an empty
+    * delta is a no-op, not a new generation).
+    */
+  def skip(ids: DataFrame, path: String, idCol: String,
       batchKey: String): Boolean =
-    batchKey != null && read(spark, path).exists(
-      _.filter(col("batch_key") === batchKey).take(1).nonEmpty)
+    (batchKey != null && read(ids.sparkSession, path).exists(
+      _.filter(col("batch_key") === batchKey).take(1).nonEmpty)) ||
+      ids.select(col(idCol)).take(1).isEmpty
 
   /** Newest committed generation (0 for a base index) — the pin
     * ceiling a run can hold against this path. */
@@ -119,9 +134,8 @@ private[operators] object IndexManifest {
     * SINGLE-WRITER contract: step 2 is read-max-plus-one, not a CAS —
     * two writers that both read the manifest before either commits
     * compute the SAME generation; step 5 turns that silent corruption
-    * into a loud post-commit failure. Callers run their own
-    * pre-checks (re-delivery skip, emptiness probe, model reads)
-    * before calling.
+    * into a loud post-commit failure. Callers run [[skip]] and their
+    * model reads before calling.
     */
   def commit(ids: DataFrame, path: String, idCol: String,
       batchKey: String)(write: (Long, String) => Unit): Unit = {
@@ -139,6 +153,42 @@ private[operators] object IndexManifest {
       .coalesce(1)
       .write.mode("append").parquet(dir)
     verifySoleWriter(spark, path, gen, slice)
+  }
+
+  /** RIGHT-TO-BE-FORGOTTEN DELETE of `ids` by operator `op`: a
+    * [[commit]] with no data writes, behind [[skip]]; `dataDir` is the
+    * tier's data directory, whose absence means no index at `path`.
+    */
+  def delete(ids: DataFrame, path: String, idCol: String, dataDir: String,
+      op: String, batchKey: String): Unit = {
+    if (!exists(ids.sparkSession, s"$path/$dataDir"))
+      throw new IllegalArgumentException(
+        s"$op: no stored index at $path (no $path/$dataDir)")
+    if (!skip(ids, path, idCol, batchKey))
+      commit(ids, path, idCol, batchKey)((_, _) => ())
+  }
+
+  /** COMPACTION by operator `op` into a NEW path: the source's serve
+    * state, a [[writeBase]] at `dstPath` whose `rewrite(state, gen,
+    * slice)` writes the live rows, the `sidecars` copied verbatim, and
+    * the [[IndexLineage]] row with the tier's live count `nLive`. The
+    * paths are compared qualified, so a trailing slash cannot hide an
+    * in-place compaction. */
+  def compact(spark: SparkSession, srcPath: String, dstPath: String,
+      idCol: String, op: String, sidecars: Seq[String])(
+      rewrite: (Option[ServeState], Long, String) => Unit)(
+      nLive: => Long): Unit = {
+    def qualified(dir: String) = { val (p, fs) = hpath(spark, dir); fs.makeQualified(p) }
+    if (qualified(srcPath) == qualified(dstPath))
+      throw new IllegalArgumentException(s"$op: dstPath $dstPath is the " +
+        s"source index $srcPath — compaction writes a NEW path")
+    val ts = serveState(spark, srcPath, idCol)
+    writeBase(spark, dstPath)(rewrite(ts, _, _))
+    sidecars.foreach { s =>
+      spark.read.parquet(s"$srcPath/$s")
+        .write.mode("overwrite").parquet(s"$dstPath/$s")
+    }
+    IndexLineage.write(spark, srcPath, dstPath, nLive)
   }
 
   /** POST-COMMIT single-writer verification (VERDICT r19 item 1):
@@ -350,15 +400,15 @@ private[operators] object IndexManifest {
   * records where the compacted state came from: ONE row
   * (src_path, src_gen — the source's final committed generation,
   * n_live — the live doc/vector count that was folded in), written
-  * as one file by every compactor and cleared by a rebuild
-  * ([[IndexManifest.reset]]). `indexHistory` on the compacted
+  * as one file by [[IndexManifest.compact]] and cleared by a rebuild
+  * ([[IndexManifest.writeBase]]). `indexHistory` on the compacted
   * index surfaces it as a generation-0 row with batch_key
   * `compact:gen=<src_gen>` (path deliberately omitted there — kept
   * in [[read]] — so history output stays environment-independent).
   */
 object IndexLineage {
 
-  /** Written by the four compactors after their data writes. */
+  /** Written by [[IndexManifest.compact]] after the data writes. */
   private[operators] def write(spark: SparkSession, srcPath: String,
       dstPath: String, nLive: Long): Unit = {
     import spark.implicits._

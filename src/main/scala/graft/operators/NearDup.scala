@@ -181,8 +181,10 @@ object NearDup {
     * trade documented on [[incrementalNearDupPairs]].
     */
   def shingleTable(df: DataFrame, idCol: String, textCol: String,
-      n: Int = DefaultN): DataFrame =
+      n: Int = DefaultN): DataFrame = {
+    requireInputs("NearDup.shingleTable", n)
     df.select(col(idCol), shingles(col(textCol), n).as("shingles"))
+  }
 
   /** The input contract every banded near-dup entry point `op` checks
     * first. Outside it, n = 0 shingles every document to "" (every

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.{Text, TextExpressions}
 import graft.core.OpCache.TrackedPersist
-import graft.operators.IndexManifest.BaseSlice
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -387,15 +386,32 @@ object Retrieval {
   private def nBucketsOf(spark: SparkSession, sidecar: String): Int =
     spark.read.parquet(sidecar).select(max(col("n_buckets"))).head().getInt(0)
 
+  /** One slice's rows of the bucket-partitioned `table` at `path`
+    * (postings, doclens), stamped with generation `gen`. */
+  private def writeBuckets(rows: DataFrame, path: String, table: String,
+      gen: Long): Unit =
+    rows.write.mode(IndexManifest.saveMode(gen)).partitionBy("bucket")
+      .parquet(s"$path/$table")
+
+  /** One slice of a frequency index: its postings, stats and doclens
+    * rows — shared by the base write and the append. */
+  private def writeInvertedSlice(toks: DataFrame, nBuckets: Int,
+      path: String)(gen: Long, slice: String): Unit = {
+    writeBuckets(postingsRows(toks, nBuckets, gen, slice), path, "postings", gen)
+    statsRow(toks, nBuckets, slice)
+      .write.mode(IndexManifest.saveMode(gen)).parquet(s"$path/stats")
+    writeBuckets(doclensRows(toks, nBuckets, gen, slice), path, "doclens", gen)
+  }
+
   /** Compaction's postings rewrite, shared by both index layouts: the
     * source's LIVE postings (tombstone supersede applied), restamped
-    * as one generation-0 base slice into fresh bucket partitions. */
+    * as the destination's base slice into fresh bucket partitions. */
   private def compactPostings(spark: SparkSession, srcPath: String,
-      dstPath: String, ts: Option[IndexManifest.ServeState]): Unit =
-    IndexManifest.live(spark.read.parquet(s"$srcPath/postings"), ts)
-      .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dstPath/postings")
+      dstPath: String, ts: Option[IndexManifest.ServeState], gen: Long,
+      slice: String): Unit =
+    writeBuckets(IndexManifest.live(spark.read.parquet(s"$srcPath/postings"), ts)
+      .withColumn("_gen", lit(gen)).withColumn("_slice", lit(slice)),
+      dstPath, "postings", gen)
 
   /** Serve stats LRU keyed on (session token, asOf, path, manifest
     * fingerprint, stats fingerprint): the corrected (N, total_len)
@@ -419,7 +435,7 @@ object Retrieval {
     * serve time.
     *
     * A REBUILD resets the generation clock and the history
-    * ([[IndexManifest.reset]]).
+    * ([[IndexManifest.writeBase]]).
     *
     * 100 TB shape: the build is one explode + one (term, doc)-keyed
     * partial-agg exchange (never a vocabulary-sized key — (term, doc)
@@ -431,17 +447,8 @@ object Retrieval {
   def writeInvertedIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
-    val spark = docs.sparkSession
-    IndexManifest.reset(spark, path)
-    val toks = tokenized(docs, idCol, textCol).persistTracked
-    postingsRows(toks, nBuckets, 0L, BaseSlice)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings")
-    statsRow(toks, nBuckets, BaseSlice)
-      .write.mode("overwrite").parquet(s"$path/stats")
-    doclensRows(toks, nBuckets, 0L, BaseSlice)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/doclens")
+    IndexManifest.writeBase(docs.sparkSession, path)(writeInvertedSlice(
+      tokenized(docs, idCol, textCol).persistTracked, nBuckets, path))
   }
 
   /** INCREMENTAL APPEND to a stored inverted index — a 100 TB corpus
@@ -484,24 +491,13 @@ object Retrieval {
     */
   def appendToInvertedIndex(deltaDocs: DataFrame, idCol: String,
       textCol: String, path: String, batchKey: String = null): Unit = {
-    val spark = deltaDocs.sparkSession
-    if (IndexManifest.batchCommitted(spark, path, batchKey)) return
     // ONE tokenize pass feeds the emptiness probe and all four
     // sidecar writes (ADVICE r18: the delta plan was evaluated
     // three times)
     val toks = tokenized(deltaDocs, idCol, textCol).persistTracked
-    if (toks.select(col("id")).take(1).isEmpty) return
-    val nBuckets = nBucketsOf(spark, s"$path/stats")
-    IndexManifest.commit(toks, path, ManifestId, batchKey) { (gen, slice) =>
-      postingsRows(toks, nBuckets, gen, slice)
-        .write.mode("append").partitionBy("bucket")
-        .parquet(s"$path/postings")
-      statsRow(toks, nBuckets, slice)
-        .write.mode("append").parquet(s"$path/stats")
-      doclensRows(toks, nBuckets, gen, slice)
-        .write.mode("append").partitionBy("bucket")
-        .parquet(s"$path/doclens")
-    }
+    if (IndexManifest.skip(toks, path, ManifestId, batchKey)) return
+    IndexManifest.commit(toks, path, ManifestId, batchKey)(writeInvertedSlice(
+      toks, nBucketsOf(deltaDocs.sparkSession, s"$path/stats"), path))
   }
 
   /** RIGHT-TO-BE-FORGOTTEN DELETE from a stored inverted index — the
@@ -524,12 +520,9 @@ object Retrieval {
     * applies (a delete claims a generation too).
     */
   def deleteFromInvertedIndex(ids: DataFrame, idCol: String,
-      path: String, batchKey: String = null): Unit = {
-    if (IndexManifest.batchCommitted(ids.sparkSession, path, batchKey)) return
-    val keyed = ids.select(col(idCol).as(ManifestId))
-    if (keyed.take(1).isEmpty) return
-    IndexManifest.commit(keyed, path, ManifestId, batchKey)((_, _) => ())
-  }
+      path: String, batchKey: String = null): Unit =
+    IndexManifest.delete(ids.select(col(idCol).as(ManifestId)), path,
+      ManifestId, "postings", "deleteFromInvertedIndex", batchKey)
 
   /** [[deleteFromInvertedIndex]] for a positional index — identical
     * manifest layout, identical semantics (q240 gates the phrase
@@ -584,10 +577,10 @@ object Retrieval {
     require(nBuckets > 0, "nBuckets must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    IndexManifest.reset(spark, path)
-    positionalRows(docs, idCol, textCol, nBuckets, 0L, BaseSlice)
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings")
+    IndexManifest.writeBase(spark, path) { (gen, slice) =>
+      writeBuckets(positionalRows(docs, idCol, textCol, nBuckets, gen, slice),
+        path, "postings", gen)
+    }
     Seq(nBuckets).toDF("n_buckets")
       .write.mode("overwrite").parquet(s"$path/meta")
   }
@@ -627,15 +620,12 @@ object Retrieval {
     */
   def appendToPositionalIndex(deltaDocs: DataFrame, idCol: String,
       textCol: String, path: String, batchKey: String = null): Unit = {
-    val spark = deltaDocs.sparkSession
-    if (IndexManifest.batchCommitted(spark, path, batchKey)) return
-    if (deltaDocs.select(col(idCol)).take(1).isEmpty) return
-    val nBuckets = nBucketsOf(spark, s"$path/meta")
-    IndexManifest.commit(deltaDocs.select(col(idCol).as(ManifestId)), path,
-        ManifestId, batchKey) { (gen, slice) =>
-      positionalRows(deltaDocs, idCol, textCol, nBuckets, gen, slice)
-        .write.mode("append").partitionBy("bucket")
-        .parquet(s"$path/postings")
+    val ids = deltaDocs.select(col(idCol).as(ManifestId))
+    if (IndexManifest.skip(ids, path, ManifestId, batchKey)) return
+    val nBuckets = nBucketsOf(deltaDocs.sparkSession, s"$path/meta")
+    IndexManifest.commit(ids, path, ManifestId, batchKey) { (gen, slice) =>
+      writeBuckets(positionalRows(deltaDocs, idCol, textCol, nBuckets, gen,
+        slice), path, "postings", gen)
     }
   }
 
@@ -646,16 +636,12 @@ object Retrieval {
     * from the compacted index is bit-identical to the source.
     */
   def compactPositionalIndex(spark: SparkSession, srcPath: String,
-      dstPath: String): Unit = {
-    val ts = serveState(spark, srcPath)
-    IndexManifest.reset(spark, dstPath)
-    compactPostings(spark, srcPath, dstPath, ts)
-    spark.read.parquet(s"$srcPath/meta")
-      .write.mode("overwrite").parquet(s"$dstPath/meta")
-    IndexLineage.write(spark, srcPath, dstPath,
+      dstPath: String): Unit =
+    IndexManifest.compact(spark, srcPath, dstPath, ManifestId,
+      "compactPositionalIndex", Seq("meta"))(
+      compactPostings(spark, srcPath, dstPath, _, _, _))(
       spark.read.parquet(s"$dstPath/postings")
         .agg(count_distinct(col("id"))).head().getLong(0))
-  }
 
 
   /** `pmod(hash(term), nBuckets)` evaluated driver-side: the same
@@ -761,25 +747,16 @@ object Retrieval {
   def compactInvertedIndex(spark: SparkSession, srcPath: String,
       dstPath: String): Unit = {
     val nBuckets = nBucketsOf(spark, s"$srcPath/stats")
-    val ts = serveState(spark, srcPath)
-    IndexManifest.reset(spark, dstPath)
-    compactPostings(spark, srcPath, dstPath, ts)
-    val liveDl = IndexManifest.live(spark.read.parquet(s"$srcPath/doclens"), ts)
-      .persistTracked
-    liveDl.select(col("id"), col("dl"), lit(0L).as("_gen"),
-        lit(BaseSlice).as("_slice"), col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dstPath/doclens")
-    liveDl.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("total_len"))
-      .withColumn("n_buckets", lit(nBuckets))
-      .withColumn("_slice", lit(BaseSlice))
-      .write.mode("overwrite").parquet(s"$dstPath/stats")
-    // retention/lineage contract (VERDICT r19 item 3): record the
-    // source's final gen + live count; the OLD path stays servable
-    // for every pinned asOfGen until the operator drops it
-    IndexLineage.write(spark, srcPath, dstPath,
-      spark.read.parquet(s"$dstPath/stats")
+    IndexManifest.compact(spark, srcPath, dstPath, ManifestId,
+        "compactInvertedIndex", Nil) { (ts, gen, slice) =>
+      compactPostings(spark, srcPath, dstPath, ts, gen, slice)
+      val liveDl = IndexManifest.live(spark.read.parquet(s"$srcPath/doclens"), ts)
+        .persistTracked
+      writeBuckets(liveDl.select(col("id"), col("dl"), lit(gen).as("_gen"),
+        lit(slice).as("_slice"), col("bucket")), dstPath, "doclens", gen)
+      statsRow(liveDl, nBuckets, slice)
+        .write.mode(IndexManifest.saveMode(gen)).parquet(s"$dstPath/stats")
+    }(spark.read.parquet(s"$dstPath/stats")
         .agg(coalesce(sum(col("n_docs")), lit(0L))).head().getLong(0))
   }
 

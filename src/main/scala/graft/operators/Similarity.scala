@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType}
 import graft.core.OpCache.TrackedPersist
-import graft.operators.IndexManifest.BaseSlice
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`), LLM-pipeline extension (SURVEY.md §2.5).
@@ -1316,13 +1315,19 @@ object Similarity {
   def writePqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       books: Array[Array[Array[Double]]], path: String): Unit = {
     val spark = corpus.sparkSession
-    // a REBUILD resets the generation clock and the history
-    IndexManifest.reset(spark, path)
-    pqEncode(corpus, idCol, vecCol, books)
-      .select("neighbor_id", "_cn", "_codes", "_r")
-      .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
-      .write.mode("overwrite").parquet(s"$path/codes")
+    IndexManifest.writeBase(spark, path)(writeCodes(
+      pqEncode(corpus, idCol, vecCol, books)
+        .select("neighbor_id", "_cn", "_codes", "_r"), path, byCell = false))
     writePqBooks(spark, books, path)
+  }
+
+  /** `rows` stamped as slice (gen, slice) of both PQ tiers' codes
+    * table; `byCell` partitions by coarse cell (IVF-PQ). */
+  private def writeCodes(rows: DataFrame, path: String, byCell: Boolean)(
+      gen: Long, slice: String): Unit = {
+    val w = rows.withColumn("_gen", lit(gen)).withColumn("_slice", lit(slice))
+      .write.mode(IndexManifest.saveMode(gen))
+    (if (byCell) w.partitionBy("cell") else w).parquet(s"$path/codes")
   }
 
   /** Codebooks as the `books` sidecar of a stored index: one
@@ -1368,19 +1373,14 @@ object Similarity {
     */
   def appendToPqIndex(delta: DataFrame, path: String, idCol: String,
       vecCol: String, batchKey: String = null): Unit = {
-    val spark = delta.sparkSession
-    if (IndexManifest.batchCommitted(spark, path, batchKey)) return
-    if (delta.select(col(idCol)).take(1).isEmpty) return
-    val books = readPqBooks(spark, path)
+    val ids = delta.select(col(idCol).as(ManifestId))
+    if (IndexManifest.skip(ids, path, ManifestId, batchKey)) return
+    val books = readPqBooks(delta.sparkSession, path)
     requireDim(delta, vecCol, books.length * books(0)(0).length,
       "appendToPqIndex")
-    IndexManifest.commit(delta.select(col(idCol).as(ManifestId)), path,
-        ManifestId, batchKey) { (gen, slice) =>
+    IndexManifest.commit(ids, path, ManifestId, batchKey)(writeCodes(
       pqEncode(delta, idCol, vecCol, books)
-        .select("neighbor_id", "_cn", "_codes", "_r")
-        .withColumn("_gen", lit(gen)).withColumn("_slice", lit(slice))
-        .write.mode("append").parquet(s"$path/codes")
-    }
+        .select("neighbor_id", "_cn", "_codes", "_r"), path, byCell = false))
   }
 
   /** [[pqTopK]] against a STORED index: the screen scans the persisted
@@ -1622,11 +1622,9 @@ object Similarity {
     import spark.implicits._
     requireDim(corpus, vecCol, dim, "writeIvfPqIndex")
     val books = ivfPqBooks(seeds, bookSeeds, idCol, vecCol, dim, m, residual)
-    // a REBUILD resets the generation clock and the history
-    IndexManifest.reset(spark, path)
-    ivfPqCodes(corpus, seeds, idCol, vecCol, books, residual)
-      .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+    IndexManifest.writeBase(spark, path)(writeCodes(
+      ivfPqCodes(corpus, seeds, idCol, vecCol, books, residual), path,
+      byCell = true))
     writePqBooks(spark, books, path)
     seeds.select(col(idCol).as("cell"), col(vecCol).as("sv"),
         exactNorm(vecCol).as("sn"))
@@ -1661,27 +1659,28 @@ object Similarity {
     */
   def appendToIvfPqIndex(delta: DataFrame, path: String, idCol: String,
       vecCol: String, batchKey: String = null): Unit = {
-    val spark = delta.sparkSession
-    if (IndexManifest.batchCommitted(spark, path, batchKey)) return
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val m = meta.getInt(meta.fieldIndex("m"))
-    val dim = meta.getInt(meta.fieldIndex("dim"))
-    val residual = meta.getBoolean(meta.fieldIndex("residual"))
-    // an empty crawl delta is a NO-OP, not an error (and not a new
-    // generation): nothing to encode, nothing to supersede
-    if (delta.select(col(idCol)).take(1).isEmpty) return
-    requireDim(delta, vecCol, dim, "appendToIvfPqIndex")
-    val books = readPqBooks(spark, path)
-    val seeds = spark.read.parquet(s"$path/cells")
-      .select(col("cell").as(idCol), col("sv").as(vecCol))
+    val ids = delta.select(col(idCol).as(ManifestId))
+    if (IndexManifest.skip(ids, path, ManifestId, batchKey)) return
+    val (residual, books, seeds) = ivfPqModel(delta.sparkSession, path,
+      idCol, vecCol)(requireDim(delta, vecCol, _, "appendToIvfPqIndex"))
     // a mid-append crash leaves orphan codes that serving never
     // reads (IndexManifest.commit)
-    IndexManifest.commit(delta.select(col(idCol).as(ManifestId)), path,
-        ManifestId, batchKey) { (gen, slice) =>
-      ivfPqCodes(delta, seeds, idCol, vecCol, books, residual)
-        .withColumn("_gen", lit(gen)).withColumn("_slice", lit(slice))
-        .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
-    }
+    IndexManifest.commit(ids, path, ManifestId, batchKey)(writeCodes(
+      ivfPqCodes(delta, seeds, idCol, vecCol, books, residual), path,
+      byCell = true))
+  }
+
+  /** A stored IVF-PQ index's frozen model: (residual flag, codebooks,
+    * cell seeds as (idCol, vecCol)); `checkDim` sees `meta`'s dim
+    * before the codebooks are read. */
+  private def ivfPqModel(spark: org.apache.spark.sql.SparkSession,
+      path: String, idCol: String, vecCol: String)(
+      checkDim: Int => Unit): (Boolean, Array[Array[Array[Double]]], DataFrame) = {
+    val meta = spark.read.parquet(s"$path/meta").head()
+    checkDim(meta.getInt(meta.fieldIndex("dim")))
+    (meta.getBoolean(meta.fieldIndex("residual")), readPqBooks(spark, path),
+      spark.read.parquet(s"$path/cells")
+        .select(col("cell").as(idCol), col("sv").as(vecCol)))
   }
 
   /** The ANN tier's manifest id column ([[IndexManifest]]). */
@@ -1689,13 +1688,12 @@ object Similarity {
 
   /** Drop codes rows of UNCOMMITTED slices, then rows superseded by
     * a newer tombstone for their id ([[IndexManifest.live]]), shared
-    * by both stored-index serve paths and the compactors; `asOf` =
+    * by both stored-index serve paths; `asOf` =
     * time travel. Supersede is CORRECTNESS-critical here: a stale
     * codes row encodes the OLD vector (see [[appendToPqIndex]]).
     */
   private def liveCodes(spark: org.apache.spark.sql.SparkSession,
-      path: String, codes: DataFrame,
-      asOf: Long = Long.MaxValue): DataFrame =
+      path: String, codes: DataFrame, asOf: Long): DataFrame =
     IndexManifest.live(codes,
       IndexManifest.serveState(spark, path, ManifestId, asOf))
 
@@ -1718,12 +1716,9 @@ object Similarity {
     * against the filtered-corpus recall replay.
     */
   def deleteFromPqIndex(ids: DataFrame, path: String, idCol: String,
-      batchKey: String = null): Unit = {
-    if (IndexManifest.batchCommitted(ids.sparkSession, path, batchKey)) return
-    val keyed = ids.select(col(idCol).as(ManifestId))
-    if (keyed.take(1).isEmpty) return
-    IndexManifest.commit(keyed, path, ManifestId, batchKey)((_, _) => ())
-  }
+      batchKey: String = null): Unit =
+    IndexManifest.delete(ids.select(col(idCol).as(ManifestId)), path,
+      ManifestId, "codes", "deleteFromPqIndex", batchKey)
 
   /** COMPACTION for a stored IVF-PQ index ([[writeIvfPqIndex]] after
     * [[appendToIvfPqIndex]] cycles): rewrite the LIVE codes
@@ -1739,21 +1734,9 @@ object Similarity {
     * (q236 gates it against q201's oracle verbatim).
     */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    IndexManifest.reset(spark, dstPath)
-    liveCodes(spark, srcPath, spark.read.parquet(s"$srcPath/codes"))
-      .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dstPath/codes")
-    Seq("books", "cells", "meta").foreach { s =>
-      spark.read.parquet(s"$srcPath/$s")
-        .write.mode("overwrite").parquet(s"$dstPath/$s")
-    }
-    // retention/lineage contract (VERDICT r19 item 3) — see
-    // IndexLineage: the OLD path stays servable for pinned asOfGen
-    // reads until the operator drops it
-    IndexLineage.write(spark, srcPath, dstPath,
-      spark.read.parquet(s"$dstPath/codes").count())
-  }
+      srcPath: String, dstPath: String): Unit =
+    compactCodes(spark, srcPath, dstPath, "compactIvfPqIndex",
+      byCell = true, Seq("books", "cells", "meta"))
 
   /** [[compactIvfPqIndex]] for the FLAT certified-PQ index
     * ([[writePqIndex]] after [[appendToPqIndex]] cycles): live codes
@@ -1761,16 +1744,20 @@ object Similarity {
     * serve-invisibility.
     */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    IndexManifest.reset(spark, dstPath)
-    liveCodes(spark, srcPath, spark.read.parquet(s"$srcPath/codes"))
-      .withColumn("_gen", lit(0L)).withColumn("_slice", lit(BaseSlice))
-      .write.mode("overwrite").parquet(s"$dstPath/codes")
-    spark.read.parquet(s"$srcPath/books")
-      .write.mode("overwrite").parquet(s"$dstPath/books")
-    IndexLineage.write(spark, srcPath, dstPath,
-      spark.read.parquet(s"$dstPath/codes").count())
-  }
+      srcPath: String, dstPath: String): Unit =
+    compactCodes(spark, srcPath, dstPath, "compactPqIndex",
+      byCell = false, Seq("books"))
+
+  /** Both PQ compactors ([[IndexManifest.compact]]); the live count
+    * is the codes row count. */
+  private def compactCodes(spark: org.apache.spark.sql.SparkSession,
+      srcPath: String, dstPath: String, op: String, byCell: Boolean,
+      sidecars: Seq[String]): Unit =
+    IndexManifest.compact(spark, srcPath, dstPath, ManifestId, op,
+        sidecars) { (ts, gen, slice) =>
+      writeCodes(IndexManifest.live(spark.read.parquet(s"$srcPath/codes"), ts),
+        dstPath, byCell)(gen, slice)
+    }(spark.read.parquet(s"$dstPath/codes").count())
 
   /** Serve IVF-PQ from a STORED index ([[writeIvfPqIndex]]): probe
     * selection against the `cells` sidecar, then the ADC rank reads
@@ -1787,11 +1774,8 @@ object Similarity {
       vecCol: String, k: Int, nProbe: Int,
       asOfGen: Long = Long.MaxValue): DataFrame = {
     val spark = queries.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val residual = meta.getBoolean(meta.fieldIndex("residual"))
-    val books = readPqBooks(spark, path)
-    val seeds = spark.read.parquet(s"$path/cells")
-      .select(col("cell").as(idCol), col("sv").as(vecCol))
+    val (residual, books, seeds) =
+      ivfPqModel(spark, path, idCol, vecCol)(_ => ())
     val probes = topSeedCellsFull(queries, seeds, idCol, vecCol, nProbe)
       .persistTracked
     // the probed-cell union is bounded by the CELL count (model-sized

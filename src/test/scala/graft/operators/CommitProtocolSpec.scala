@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-20 hardening of the slice-commit protocol: the manifest
@@ -152,5 +153,87 @@ class CommitProtocolSpec extends SparkSpec {
         Seq("spark", "data"), k = 10).collect().map(_.toSeq).toSeq
       assert(served === full)
     } // a loud failure with no shared gen is a valid outcome too
+  }
+
+  /** One stored-index tier as the lifecycle contract drives it: its
+    * delta (ids in `idCol`) and its lifecycle calls. */
+  private case class Tier(name: String, delta: DataFrame,
+      idCol: String, build: String => Unit,
+      append: (DataFrame, String, String) => Unit,
+      delete: (DataFrame, String) => Unit,
+      compact: (String, String) => Unit, serve: String => Seq[String])
+
+  test("lifecycle contract on all four tiers: skipped appends, deletes on a missing path, in-place compaction") {
+    val docs = corpus(1, 30, 17)
+    val rnd = new scala.util.Random(5)
+    val emb = (0L until 24L).map(i =>
+        (i, Seq.fill(8)(rnd.nextInt(16).toFloat / 4f))).toDF("vec_id", "embedding")
+    val books = Similarity.pqCodebooksSeeded(
+      emb.filter($"vec_id" < 8), "vec_id", "embedding", dim = 8, m = 2)
+    val q = emb.filter($"vec_id" < 4)
+    def rows(df: DataFrame) =
+      df.collect().map(_.toSeq.mkString(",")).toSeq.sorted
+    val tiers = Seq(
+      Tier("flat PQ", emb.filter($"vec_id" >= 16), "vec_id",
+        p => Similarity.writePqIndex(emb.filter($"vec_id" < 16), "vec_id",
+          "embedding", books, p),
+        (d, p, k) => Similarity.appendToPqIndex(d, p, "vec_id", "embedding", k),
+        (ids, p) => Similarity.deleteFromPqIndex(ids, p, "vec_id"),
+        Similarity.compactPqIndex(spark, _, _),
+        p => rows(Similarity.pqTopKFromIndex(q, emb, "vec_id", "embedding",
+          k = 3, p))),
+      Tier("IVF-PQ", emb.filter($"vec_id" >= 16), "vec_id",
+        p => Similarity.writeIvfPqIndex(emb.filter($"vec_id" < 16),
+          emb.filter($"vec_id" < 3), "vec_id", "embedding", m = 2, dim = 8, p),
+        (d, p, k) => Similarity.appendToIvfPqIndex(d, p, "vec_id", "embedding", k),
+        (ids, p) => Similarity.deleteFromPqIndex(ids, p, "vec_id"),
+        Similarity.compactIvfPqIndex(spark, _, _),
+        p => rows(Similarity.pqIvfTopKFromIndex(q, p, "vec_id", "embedding",
+          k = 3, nProbe = 3))),
+      Tier("inverted", docs.filter($"doc_id" > 20L), "doc_id",
+        p => Retrieval.writeInvertedIndex(docs.filter($"doc_id" <= 20L),
+          "doc_id", "text", p, nBuckets = 4),
+        (d, p, k) => Retrieval.appendToInvertedIndex(d, "doc_id", "text", p, k),
+        (ids, p) => Retrieval.deleteFromInvertedIndex(ids, "doc_id", p),
+        Retrieval.compactInvertedIndex(spark, _, _),
+        p => rows(Retrieval.vocabularyFromIndex(spark, p, 20))),
+      Tier("positional", docs.filter($"doc_id" > 20L), "doc_id",
+        p => Retrieval.writePositionalIndex(docs.filter($"doc_id" <= 20L),
+          "doc_id", "text", p, nBuckets = 4),
+        (d, p, k) => Retrieval.appendToPositionalIndex(d, "doc_id", "text", p, k),
+        (ids, p) => Retrieval.deleteFromPositionalIndex(ids, "doc_id", p),
+        Retrieval.compactPositionalIndex(spark, _, _),
+        p => rows(Retrieval.phraseOccurrencesFromIndex(spark, p, "doc_id",
+          Seq("spark", "join")))))
+    for (t <- tiers) {
+      import t.{delta, idCol}
+      val path = tmp("cp_lifecycle")
+      t.build(path)
+      t.append(delta, path, "b1")
+      // the source holds tombstones, so an in-place rewrite would lose them
+      t.delete(delta.filter(col(idCol) % 3 === 0L).select(col(idCol)), path)
+      val gen = IndexManifest.maxGen(spark, path)
+      assert(gen === 2L, t.name)
+      t.append(delta.limit(0), path, "b2")
+      assert(IndexManifest.maxGen(spark, path) === gen, s"${t.name}: empty delta")
+      t.append(delta, path, "b1")
+      assert(IndexManifest.maxGen(spark, path) === gen, s"${t.name}: re-delivery")
+
+      val missing = tmp("cp_missing")
+      val e = intercept[IllegalArgumentException] {
+        t.delete(delta.select(col(idCol)), missing)
+      }
+      assert(e.getMessage.contains(missing), s"${t.name}: ${e.getMessage}")
+      assert(!IndexManifest.exists(spark, s"$missing/tombstones"), t.name)
+
+      val before = t.serve(path)
+      assert(before.nonEmpty, t.name)
+      for (dst <- Seq(path, path + "/")) {
+        val c = intercept[IllegalArgumentException](t.compact(path, dst))
+        assert(c.getMessage.contains(path), s"${t.name}: ${c.getMessage}")
+        assert(t.serve(path) === before, s"${t.name}: compact onto $dst")
+      }
+      graft.core.OpCache.release()
+    }
   }
 }

@@ -585,7 +585,9 @@ class NearDupSimilaritySpec extends SparkSpec {
       ("NearDup.containmentPairs", Set("n", "threshold"),
         (n, _, _, t) => NearDup.containmentPairs(docs, "doc_id", "text", t, n)),
       ("NearDup.bandIndex", Set("n", "numHashes", "bands"),
-        (n, k, b, _) => NearDup.bandIndex(docs, "doc_id", "text", n, k, b)))
+        (n, k, b, _) => NearDup.bandIndex(docs, "doc_id", "text", n, k, b)),
+      ("NearDup.shingleTable", Set("n"),
+        (n, _, _, _) => NearDup.shingleTable(docs, "doc_id", "text", n)))
     // (the parameter at fault, n, numHashes, bands, threshold); 128/32
     // is a valid banding for every entry point, the b-bit one included
     val bad = Seq(
